@@ -120,12 +120,13 @@ def q_dup_clusters(spark, sf):
 
 
 def q_dup_clusters_star(spark, sf):
-    """The same components via the large-star/small-star formulation
-    (O(log^2) rounds regardless of diameter — the 100 TB path for
-    adversarially long dup chains); must be hash-exact against the
-    SAME recursive-CTE oracle as the propagation method."""
+    """The same components through the same call as q_dup_clusters:
+    dup_clusters has one algorithm, large-star/small-star (O(log^2)
+    rounds regardless of diameter). The query name stays so the gate
+    and bench lists keep their entries; it must be hash-exact against
+    the SAME recursive-CTE oracle."""
     pairs = D.minhash_dup_pairs(_t(spark, sf, "documents"), threshold=0.9)
-    return D.dup_clusters(pairs, method="star", assume_canonical=True)
+    return D.dup_clusters(pairs, assume_canonical=True)
 
 
 def q_line_dedup(spark, sf):
@@ -1425,7 +1426,7 @@ ORACLES["q_repetition"] = """
 
 # connected components over the (threshold-0.9) dup-pair graph: exact
 # transitive closure via a recursive CTE + min aggregate — engine-
-# independent ground truth for the iterative label propagation
+# independent ground truth for dup_clusters' large-star/small-star rounds
 ORACLES["q_dup_clusters"] = """
   with recursive pairs as (
     %s

@@ -57,7 +57,6 @@ def build_corpus(
     min_chars: int = 1,
     splits=None,
     pack_budget: int = 2048,
-    cluster_method: str = "auto",
     scrub: bool = True,
     eval_needles: DataFrame = None,
 ) -> dict:
@@ -118,7 +117,7 @@ def build_corpus(
     # 3. near-dup clusters: survivors are cluster representatives
     #    (min doc_id per connected component) plus every unpaired doc
     pairs = minhash_dup_pairs(exact_kept, threshold=minhash_threshold)
-    clusters = dup_clusters(pairs, method=cluster_method)
+    clusters = dup_clusters(pairs)
     losers = clusters.filter(
         F.col("doc_id") != F.col("cluster_id")
     ).select("doc_id")

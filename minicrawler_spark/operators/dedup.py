@@ -2,10 +2,15 @@
 additions; graded alongside SURVEY.md §2).
 
 All operators are expressed with built-in pyspark.sql.functions (JVM,
-whole-stage codegen) except the banded-LSH bucketing which is plain
-groupBy. Cross-engine determinism for the DuckDB oracle: the token
-hash is the first 15 hex chars of md5 (60 bits, fits a signed int64
-in both engines), never xxhash64/hash (engine-specific).
+whole-stage codegen) except embedding_near_dups' Arrow signature pass.
+Cross-engine determinism for the DuckDB oracle: the token hash is the
+first 15 hex chars of md5 (60 bits, fits a signed int64 in both
+engines), never xxhash64/hash (engine-specific).
+
+One algorithm per problem: every banded-LSH candidate set (minhash,
+simhash, embedding) comes from one emit-once self-join, _band_pairs,
+and connected components (dup_clusters) are large-star/small-star
+rounds run to their fixpoint.
 
 Scale notes (100 TB):
 - exact_dedup: groups on the 256-bit content digest, not the text
@@ -152,6 +157,64 @@ def minhash_signatures(docs: DataFrame, k: int = 16) -> DataFrame:
     )
 
 
+def _band_pairs(
+    keyed: DataFrame, key: str, bands: int, carry=()
+) -> DataFrame:
+    """Emit-once banded-LSH self-join, shared by minhash_dup_pairs,
+    embedding_near_dups and simhash_dup_pairs. `keyed` has one row per
+    item: the id column `key`, band keys k0..k{bands-1} (the caller
+    folds the band index into each key, so keys of different bands
+    never compare equal) and optional `carry` columns. Returns every
+    unordered pair agreeing on at least one band key EXACTLY ONCE, as
+    `<key>_a < <key>_b` plus `<c>_a`, `<c>_b` for each carried column.
+
+    Similar items agree on MANY bands, so the bucket self-join emits a
+    pair up to `bands` times (41.9M join rows -> 11.3M distinct minhash
+    pairs at sf0.1), and a `.distinct()` would re-shuffle the whole
+    join output. Instead every bucket row carries the item's full key
+    vector and a pair is kept only from the FIRST band whose keys
+    agree: a map-side filter right behind the join, exactly DISTINCT
+    by construction. The `band` equality guards the (hashed-key)
+    chance that two bands' keys collide.
+
+    The join is on the single `bkey` column, so it reuses the explicit
+    `bkey` repartition instead of adding an exchange. Partition counts
+    are pinned at the session's shuffle parallelism: the bucket table
+    is tiny in BYTES but its self-join output is the candidate-pair
+    explosion, which AQE's byte-based coalescing would collapse onto
+    one partition; the final repartition on the pair spreads the
+    per-pair verification CPU that AQE cannot see."""
+    ks = ["k%d" % b for b in range(bands)]
+    n_part = int(keyed.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    buckets = keyed.select(
+        key, *carry, *ks,
+        F.posexplode(F.array(*ks)).alias("band", "bkey"),
+    ).repartition(n_part, "bkey")
+    first_agree = F.when(F.col("l.k0") == F.col("r.k0"), F.lit(0))
+    for b in range(1, bands):
+        first_agree = first_agree.when(
+            F.col("l.k%d" % b) == F.col("r.k%d" % b), F.lit(b)
+        )
+    cols = (key, *carry)
+    return (
+        buckets.alias("l")
+        .join(
+            buckets.alias("r"),
+            (F.col("l.bkey") == F.col("r.bkey"))
+            & (F.col("l." + key) < F.col("r." + key)),
+        )
+        .filter(
+            (F.col("l.band") == F.col("r.band"))
+            & (first_agree == F.col("l.band"))
+        )
+        .select(
+            *[F.col("l." + c).alias(c + "_a") for c in cols],
+            *[F.col("r." + c).alias(c + "_b") for c in cols],
+        )
+        .repartition(n_part, key + "_a", key + "_b")
+    )
+
+
 def minhash_dup_pairs(
     docs: DataFrame,
     k: int = 16,
@@ -226,76 +289,15 @@ def minhash_dup_pairs(
     # are their xxhash64(doc_id) — the self-join shuffle moves longs,
     # not strings (the pair table is ~1000x the doc table on this
     # corpus, so its row width is what matters). String ids re-attach
-    # at the very end via a broadcast map.
-    #
-    # EMIT-ONCE dedup (r6): similar docs agree on MANY bands, so the
-    # bucket self-join emits each pair up to `bands` times (measured
-    # 41.9M join rows -> 11.3M distinct pairs at sf0.1) and the old
-    # `.distinct()` re-shuffled the whole join output — the single
-    # most expensive exchange of the pipeline (16.7s of the 20s
-    # query). Instead every bucket row carries the doc's full 8-key
-    # band vector and a pair is kept ONLY from the first band whose
-    # keys agree: a map-side filter right behind the join, zero
-    # shuffle, and by construction exactly DISTINCT over the same
-    # bkey-equality the join (and the SQL oracle's banded union)
-    # uses. Cost shift: the bucket rows widen from 2 to 10 longs,
-    # but the bucket table is n_docs*bands rows — orders of
-    # magnitude smaller than the candidate-pair table whose shuffle
-    # this removes.
+    # in the verification join.
     bk = [
         F.xxhash64(
             F.lit(b), *[F.col("mh%d" % (b * r + i)) for i in range(r)]
-        ).alias("bk%d" % b)
+        ).alias("k%d" % b)
         for b in range(bands)
     ]
-    keyed = sigs.select(F.xxhash64("doc_id").alias("hid"), *bk)
-    # Partition-count discipline: the bucket table is tiny in BYTES
-    # (n_docs * bands rows of longs) but its self-join OUTPUT is the
-    # candidate-pair explosion — AQE's byte-based coalescing would
-    # collapse the join to one partition and serialize the explosion
-    # plus everything fused behind it. Pin the join's parallelism
-    # with an explicit hash repartition at the session's shuffle
-    # parallelism (the scale knob; never a literal core count).
-    n_part = int(
-        docs.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    buckets = keyed.select(
-        "hid",
-        *["bk%d" % b for b in range(bands)],
-        F.posexplode(
-            F.array(*[F.col("bk%d" % b) for b in range(bands)])
-        ).alias("band", "bkey"),
-    ).repartition(n_part, "bkey")
-    first_agree = F.when(
-        F.col("l.bk0") == F.col("r.bk0"), F.lit(0)
-    )
-    for b in range(1, bands):
-        first_agree = first_agree.when(
-            F.col("l.bk%d" % b) == F.col("r.bk%d" % b), F.lit(b)
-        )
-    pairs = (
-        buckets.alias("l")
-        .join(
-            buckets.alias("r"),
-            (F.col("l.bkey") == F.col("r.bkey"))
-            & (F.col("l.hid") < F.col("r.hid")),
-        )
-        .filter(
-            (F.col("l.band") == F.col("r.band"))
-            & (first_agree == F.col("l.band"))
-        )
-        .select(
-            F.col("l.hid").alias("hid_a"), F.col("r.hid").alias("hid_b")
-        )
-        # Re-balance the deduped pair set before verification: the
-        # join leaves pairs clustered by band bucket (hot buckets =
-        # hot partitions, and verification cost is per-PAIR CPU that
-        # AQE's byte-based view cannot see). One shuffle of the slim
-        # (hid_a, hid_b) rows — ~4x fewer rows and no agg hash map
-        # vs the old distinct — spreads the intersect work evenly;
-        # the key is the pair itself, so the spread is deterministic
-        # and fine-grained.
-        .repartition(n_part, "hid_a", "hid_b")
+    pairs = _band_pairs(
+        sigs.select(F.xxhash64("doc_id").alias("hid"), *bk), "hid", bands
     )
     # Exact verification at candidate scale: tokens are compared as
     # xxhash64 longs, not strings (|A∩B|/|A∪B| is unchanged: 64-bit
@@ -313,9 +315,10 @@ def minhash_dup_pairs(
         # the verification join — localCheckpoint so the LSH self-join
         # is computed once, not per consumer. The semi-restricted
         # token side (bounded by the candidate docs, not the corpus)
-        # is checkpointed too: ha and hb below reference it once each
-        # and would otherwise re-run the corpus scan + semi join
-        # twice.
+        # is checkpointed too, and materialized by a count BEFORE the
+        # ha/hb fan-out: the verification job references it through
+        # both join sides, and a lazy checkpoint first consumed there
+        # could still run the corpus scan + semi join twice.
         pairs = pairs.localCheckpoint(eager=False)
         cand_ids = (
             pairs.select(F.col("hid_a").alias("hid"))
@@ -325,6 +328,7 @@ def minhash_dup_pairs(
         hashed = hashed.join(cand_ids, "hid", "left_semi").localCheckpoint(
             eager=False
         )
+        hashed.count()
 
     ha = hashed.select(
         F.col("hid").alias("hid_a"), F.col("doc_id").alias("id_a"),
@@ -377,342 +381,94 @@ def minhash_dup_pairs(
 
 
 def dup_clusters(
-    pairs: DataFrame, max_iter: int = 25, method: str = "auto",
-    assume_canonical: bool = False,
+    pairs: DataFrame, assume_canonical: bool = False
 ) -> DataFrame:
     """Near-duplicate CLUSTERS from verified dup pairs — the survivor-
     selection step a real dedup pipeline runs after pair generation:
     every document in the pair graph gets
     `cluster_id = min(doc_id in its connected component)`, so "keep
-    one per cluster" is `filter(doc_id == cluster_id)`.
+    one per cluster" is `filter(doc_id == cluster_id)`. Self pairs
+    carry no edge: a document paired only with itself gets no row.
 
-    Methods:
-    - "propagate": iterative min-label propagation — each round every
-      node takes the min of its own and its neighbors' labels (one
-      shuffle per round, lineage cut per round with a lazy
-      checkpoint). Near-dup components are dense and shallow, so
-      rounds ≈ a few; O(diameter) worst case. If it exhausts
-      `max_iter` unconverged it WARNS (silently-wrong cluster ids are
-      never returned without a signal — ADVICE r3).
-    - "star": the alternating large-star/small-star formulation
-      (Kiveris et al., "Connected Components in MapReduce and
-      Beyond") — O(log²) rounds regardless of diameter, the 100 TB
-      path for adversarial graphs (templated pages with gradual
-      drift forming long chains).
-    - "auto" (default): propagation first; on non-convergence it
-      CONTRACTS the graph by the partial labels (each partially-
-      merged cluster becomes one node, so propagation's work is
-      kept) and finishes with star rounds — exact for any diameter.
+    Connected components by alternating large-star/small-star rounds
+    (Kiveris et al., "Connected Components in MapReduce and Beyond")
+    over the canonical (a < b) edge set:
+    - large-star(u): every strictly LARGER neighbor of u links to
+      min(Γ(u) ∪ {u});
+    - small-star(u): every strictly smaller neighbor of u, and u
+      itself, link to the min of those smaller neighbors.
+    Both preserve connectivity and contract every component toward a
+    star centered at its min node in O(log²) rounds for ANY diameter,
+    so the loop simply runs until a round leaves the edge set
+    unchanged — exact, with no round cap and nothing to warn about.
+    Each star step takes its per-node min with one window pass over
+    the edges partitioned by node (no groupBy + join back), and
+    duplicate edges are harmless to both steps, so only the round's
+    output is made distinct (the convergence test compares sets).
 
     `assume_canonical=True` lets a caller that GUARANTEES its pair
     set is already canonical — doc_a < doc_b, no duplicate rows, no
     self-pairs (exactly what minhash_dup_pairs' emit-once candidate
     generation produces) — skip the defensive normalize+distinct
-    shuffle over the full edge set (r6; ~1.3s of a 965k-edge graph
-    at sf0.1, and one full edge shuffle at any scale).
+    shuffle over the full edge set.
 
     The DuckDB oracle reproduces this with a recursive-CTE transitive
     closure + min aggregate (exact, engine-independent)."""
-    if method not in ("auto", "propagate", "star"):
-        raise ValueError("method must be auto|propagate|star")
-    if method == "star":
-        edges = pairs.select(
-            F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-        )
-        return _star_components(
-            edges, assume_canonical=assume_canonical
-        ).select(
-            F.col("node").alias("doc_id"),
-            F.col("label").alias("cluster_id"),
-        )
-
-    # Propagation WITH per-round edge contraction (round 5): the
-    # previous loop re-joined the FULL edge set against the labels
-    # every round — on the dup-heavy sf0.1 graph that is an 18M-row
-    # join x rounds. Instead each round (a) takes every current
-    # label-space node to the min of its neighborhood (strictly
-    # improving only), (b) composes that into the full node->label
-    # mapping, and (c) REWRITES the edges in the new label space,
-    # dropping self-loops and duplicates — dense near-dup components
-    # collapse after one round, so later rounds run on a
-    # geometrically smaller graph (a path still contracts by only
-    # one hop per round, which keeps the documented O(diameter)
-    # bound and the non-convergence semantics). Exact: contraction
-    # preserves connectivity, the component min never relabels
-    # (strict m < node), and convergence == no cross-label edge
-    # remains.
+    a, b = F.col("doc_a"), F.col("doc_b")
     if assume_canonical:
-        cur = pairs.select(
-            F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-        ).localCheckpoint(eager=False)
+        edges = pairs.select(a.alias("a"), b.alias("b"))
     else:
-        cur = (
-            pairs.select(
-                F.least("doc_a", "doc_b").alias("a"),
-                F.greatest("doc_a", "doc_b").alias("b"),
-            )
-            .filter(F.col("a") != F.col("b"))
+        edges = (
+            pairs.filter(a != b)
+            .select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
             .distinct()
-            # lazy checkpoint + immediate count: the count is the
-            # single first reference, so it materializes the
-            # checkpoint in ONE job (eager + count was two); every
-            # later consumer — round 1's symmetric union included —
-            # reads the materialized checkpoint
-            .localCheckpoint(eager=False)
         )
-    n_edges = cur.count()  # materializes the checkpoint
-    labels = (
-        cur.select(F.col("a").alias("node"))
-        .union(cur.select(F.col("b").alias("node")))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    # Broadcast gate decided ONCE up front (r6): upd is bounded by
-    # the live node count, which only shrinks under contraction, so
-    # one bound here replaces a count job per round. The bound is an
-    # approx_count_distinct SUM over both endpoint columns — one
-    # shuffle-free pass instead of re-running the labels distinct
-    # just to count it (the gate needs an upper bound, not results).
-    # BYTES-based (ADVICE r5): a two-long row is ~32 B framed, so the
-    # 32 MB budget stays near broadcast-join scale instead of the old
-    # 4M-row gate's hundreds of MB of driver memory per round.
-    # Small graphs skip the broadcast entirely: per-round broadcast
-    # builds cost more than tiny shuffles and pile up in driver
-    # memory over many rounds (the high-diameter case).
-    use_bcast = False
-    if n_edges >= 100_000:
-        nb = cur.agg(
-            (
-                F.approx_count_distinct("a", 0.02)
-                + F.approx_count_distinct("b", 0.02)
-            ).alias("nb")
-        ).first()["nb"]
-        # 5% headroom over the HLL bound keeps the gate conservative
-        use_bcast = int(nb * 1.05) * 32 <= (32 << 20)
-    converged = False
-    for _ in range(max_iter):
-        sym = cur.union(
-            cur.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        upd = (
-            sym.groupBy(F.col("a").alias("node"))
-            .agg(F.min("b").alias("m"))
-            .filter(F.col("m") < F.col("node"))
-            .localCheckpoint(eager=False)
-        )
-        # One pointer-jumping composition (r6): upd maps node -> m
-        # with m strictly smaller and in the same component, so
-        # following one more hop (m -> upd[m] when defined) is still
-        # a same-component, strictly-smaller target — the composed
-        # map is just a deeper version of the same relabel and every
-        # invariant (connectivity preserved, min never relabels)
-        # holds verbatim. Composing the small map with itself before
-        # applying it halves label-chain depth per round: one fewer
-        # round and ~25% less wall on the sf0.1 graph. (A constant-
-        # factor round reduction — chains still contract linearly;
-        # the star method remains the O(log²) path for adversarial
-        # diameters.)
-        u2 = upd.alias("u2")
-        upd = (
-            upd.alias("u1")
-            .join(u2, F.col("u1.m") == F.col("u2.node"), "left")
-            .select(
-                F.col("u1.node").alias("node"),
-                F.coalesce(F.col("u2.m"), F.col("u1.m")).alias("m"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        # ONE broadcast of upd per round, referenced three times
-        # (labels + both edge endpoints) through the SAME plan so the
-        # BroadcastExchange canonicalizes equal and ReuseExchange
-        # builds it once; the relabel of the big edge set is then
-        # map-side and the only shuffles left in a round are the
-        # groupBy above plus the distinct that collapses relabeled
-        # pairs. The round's single driver action is the edge count
-        # below (the old loop paid an extra count + three broadcast
-        # builds per round).
-        if use_bcast:
-            updj = F.broadcast(upd)
-        else:
-            # big-remainder path: materialize before the triple
-            # reference so the checkpoint is not raced
-            upd.count()
-            updj = upd
-        ua, ub, ul = updj.alias("ua"), updj.alias("ub"), updj.alias("ul")
-        labels = labels.alias("lb").join(
-            ul, F.col("lb.label") == F.col("ul.node"), "left"
-        ).select(
-            F.col("lb.node").alias("node"),
-            F.coalesce(F.col("ul.m"), F.col("lb.label")).alias("label"),
-        )
-        cur = (
-            cur.alias("ce")
-            .join(ua, F.col("ce.a") == F.col("ua.node"), "left")
-            .join(ub, F.col("ce.b") == F.col("ub.node"), "left")
-            .select(
-                F.coalesce(F.col("ua.m"), F.col("ce.a")).alias("x"),
-                F.coalesce(F.col("ub.m"), F.col("ce.b")).alias("y"),
-            )
-            .filter(F.col("x") != F.col("y"))
-            .select(
-                F.least("x", "y").alias("a"),
-                F.greatest("x", "y").alias("b"),
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        n_edges = cur.count()  # materializes this round's contraction
-        if n_edges == 0:
-            converged = True
-            break
-    changed = 0 if converged else 1
-    if changed != 0:
-        import warnings
-
-        if method == "propagate":
-            warnings.warn(
-                "dup_clusters: label propagation did not converge in "
-                "%d rounds (component diameter exceeds max_iter); "
-                "returned cluster ids may split components — use "
-                "method='star' or 'auto'" % max_iter,
-                RuntimeWarning,
-            )
-        else:  # auto: finish exactly on the label-contracted graph
-            warnings.warn(
-                "dup_clusters: propagation unconverged after %d "
-                "rounds; finishing with large-star/small-star on the "
-                "contracted graph" % max_iter,
-                RuntimeWarning,
-            )
-            # `cur` is already the label-space contracted edge set
-            # maintained by the loop above (canonical by
-            # construction: least/greatest + distinct every round)
-            roots = _star_components(cur, assume_canonical=True)
-            root_map = roots.select(
-                F.col("node").alias("label"), F.col("label").alias("root")
-            )
-            labels = labels.join(root_map, "label", "left").select(
-                "node", F.coalesce("root", "label").alias("label")
-            )
-    return labels.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
-
-
-def _star_components(edges: DataFrame, max_iter: int = 64,
-                     assume_canonical: bool = False) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    rounds (Kiveris et al.) over a canonical undirected edge set:
-    - large-star(u): every strictly LARGER neighbor of u links to
-      min(Γ(u) ∪ {u}),
-    - small-star(u): every strictly smaller neighbor of u, and u
-      itself, link to that minimum.
-    Both preserve connectivity and strictly contract toward a star
-    per component centered at its min node; O(log²) rounds. Returns
-    (node, label) for every node that appears in `edges`."""
-    if assume_canonical:
-        # caller guarantees a < b, no dupes, no self-pairs (the
-        # minhash emit-once pair shape) — skip the defensive
-        # normalize+distinct shuffle (r6)
-        E = edges.localCheckpoint(eager=False)
-    else:
-        E = (
-            edges.filter(F.col("a") != F.col("b"))
-            .select(
-                F.least("a", "b").alias("a"),
-                F.greatest("a", "b").alias("b"),
-            )
-            .distinct()
-            # lazy checkpoint + immediate count: one materializing
-            # job (the count below is the single first reference);
-            # the first round's symmetric union then reads the
-            # checkpoint
-            .localCheckpoint(eager=False)
-        )
-    n_edges = E.count()  # materializes the checkpoint
-    # nodes remembered up front: star rounds may drop a node's edges
-    # once it is linked through others, but every input node needs a
-    # label row at the end
-    nodes = (
-        E.select(F.col("a").alias("node"))
-        .union(E.select(F.col("b").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    # Broadcast gate decided ONCE (r6): the min-maps are bounded by
-    # the live node count, which only shrinks across star rounds, so
-    # one count here replaces two materialize+count jobs per round.
-    # BYTES-based budget (ADVICE r5, ~32 B framed per two-long row)
-    # so a round's broadcast stays near broadcast-join scale; small
-    # graphs keep plain joins (per-round broadcast builds cost more
-    # than tiny shuffles and pile up in driver memory over many
-    # rounds — the high-diameter case).
-    n_nodes = nodes.count()
-    use_bcast = n_edges >= 100_000 and n_nodes * 32 <= (32 << 20)
-    for _ in range(max_iter):
-        # -- large-star: symmetrize, group by u, link larger nbrs to m
-        sym = E.select(
+    # lazy checkpoint + immediate count, every round: the count is the
+    # single first reference, so it materializes the edge set in ONE
+    # job before the next round's two union sides and the convergence
+    # test both read it
+    edges = edges.localCheckpoint(eager=False)
+    n_edges = edges.count()
+    by_u = Window.partitionBy("u")
+    u, v, m = F.col("u"), F.col("v"), F.col("m")
+    while True:
+        # large-star: every edge both ways, grouped by u
+        sym = edges.select(
             F.col("a").alias("u"), F.col("b").alias("v")
-        ).union(E.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        mins = sym.groupBy("u").agg(F.min("v").alias("mv"))
-        minsj = F.broadcast(mins) if use_bcast else mins
-        m = F.least("u", "mv")
-        E1 = (
-            sym.join(minsj, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(m.alias("a"), F.col("v").alias("b"))  # m < u < v
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
+        ).union(edges.select(F.col("b").alias("u"), F.col("a").alias("v")))
+        large = (
+            sym.withColumn("m", F.least(u, F.min(v).over(by_u)))
+            .filter(v > u)
+            .select(m.alias("a"), v.alias("b"))  # m <= u < v
         )
-        # -- small-star on E1: orient large->small (u=b, v=a), link
-        #    all smaller nbrs AND u itself to the min
-        sym2 = E1.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        mins2 = sym2.groupBy("u").agg(F.min("v").alias("mv"))
-        if use_bcast:
-            mins2j = F.broadcast(mins2)
-        elif n_edges >= 100_000:
-            # big-remainder shuffle path: mins2 is referenced twice
-            # (join + union) — materialize once before the fan-out
-            mins2 = mins2.localCheckpoint(eager=False)
-            mins2.count()
-            mins2j = mins2
-        else:
-            mins2j = mins2
-        E_new = (
-            sym2.join(mins2j, "u")
-            .select(F.col("mv").alias("a"), F.col("v").alias("b"))
-            .union(
-                mins2.select(
-                    F.col("mv").alias("a"), F.col("u").alias("b")
+        # small-star: orient every edge large -> small (u = b, v = a)
+        small = large.select(F.col("b").alias("u"), F.col("a").alias("v"))
+        new = (
+            small.withColumn("m", F.min(v).over(by_u))
+            .select(
+                F.inline(
+                    F.array(
+                        F.struct(m.alias("a"), v.alias("b")),
+                        F.struct(m.alias("a"), u.alias("b")),
+                    )
                 )
             )
             .filter(F.col("a") != F.col("b"))
-            .select(
-                F.least("a", "b").alias("a"),
-                F.greatest("a", "b").alias("b"),
-            )
             .distinct()
             .localCheckpoint(eager=False)
         )
-        # exact convergence: set equality (both sets are distinct)
-        n_new = E_new.count()
-        if (
-            n_new == n_edges
-            and E_new.exceptAll(E).count() == 0
-        ):
-            E = E_new
+        n_new = new.count()
+        done = n_new == n_edges and new.exceptAll(edges).isEmpty()
+        edges, n_edges = new, n_new
+        if done:
             break
-        n_edges = n_new
-        E = E_new
-    # final E is a star per component: a = center = min node
-    labels = E.select(
-        F.col("b").alias("node"), F.col("a").alias("label")
-    ).union(E.select(F.col("a").alias("node"), F.col("a").alias("label"))).distinct()
-    # nodes fully contracted away keep their own id only if they are
-    # centers; others appear as leaves — the union above covers both,
-    # but an isolated input node (self-pair filtered out) labels itself
-    return nodes.join(labels, "node", "left").select(
-        "node", F.coalesce("label", "node").alias("label")
+    # the fixpoint is a star per component: a = center = component min
+    return edges.select(
+        F.col("b").alias("doc_id"), F.col("a").alias("cluster_id")
+    ).union(
+        edges.select(
+            F.col("a").alias("doc_id"), F.col("a").alias("cluster_id")
+        ).distinct()
     )
 
 
@@ -968,60 +724,16 @@ def embedding_near_dups(
                 for j in range(band_bits):
                     keys[:, b] |= bits[:, b * band_bits + j] << j
                 keys[:, b] += b << band_bits  # band in the high bits
-            out = {"vec_id": pdf["vec_id"].to_numpy().astype(np.int64)}
+            out = {"vec": pdf["vec_id"].to_numpy().astype(np.int64)}
             for b in range(bands):
                 out["k%d" % b] = keys[:, b]
             yield pd.DataFrame(out)
 
-    kcols = ["k%d" % b for b in range(bands)]
     keyed = base.mapInPandas(
         signature_stage,
-        "vec_id long, " + ", ".join("%s long" % c for c in kcols),
+        "vec long, " + ", ".join("k%d long" % b for b in range(bands)),
     )
-
-    # EMIT-ONCE candidate generation (r6, same move as
-    # minhash_dup_pairs): similar vectors agree on many bands, so the
-    # banded self-join emits each pair repeatedly (2.08M join rows ->
-    # 1.28M distinct pairs at sf0.1) and the old `.distinct()`
-    # re-shuffled all of them. Every bucket row carries the vector's
-    # full key vector and a pair is kept only from the first band
-    # whose keys agree — a map-side filter, exactly DISTINCT by
-    # construction (the band index lives in the key's high bits, so
-    # cross-band key equality is impossible). The explicit
-    # repartitions pin parallelism for the pair explosion and spread
-    # the per-pair verification that AQE's byte-based coalescing
-    # cannot see (the bucket table is only n_vecs*bands longs).
-    n_part = int(
-        embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    buckets = keyed.select(
-        "vec_id", *kcols,
-        F.posexplode(F.array(*[F.col(c) for c in kcols])).alias(
-            "band", "bkey"
-        ),
-    ).repartition(n_part, "bkey")
-    first_agree = F.when(F.col("l.k0") == F.col("r.k0"), F.lit(0))
-    for b in range(1, bands):
-        first_agree = first_agree.when(
-            F.col("l.k%d" % b) == F.col("r.k%d" % b), F.lit(b)
-        )
-    cand = (
-        buckets.alias("l")
-        .join(
-            buckets.alias("r"),
-            (F.col("l.bkey") == F.col("r.bkey"))
-            & (F.col("l.vec_id") < F.col("r.vec_id")),
-        )
-        .filter(
-            (F.col("l.band") == F.col("r.band"))
-            & (first_agree == F.col("l.band"))
-        )
-        .select(
-            F.col("l.vec_id").alias("vec_a"),
-            F.col("r.vec_id").alias("vec_b"),
-        )
-        .repartition(n_part, "vec_a", "vec_b")
-    )
+    cand = _band_pairs(keyed, "vec", bands)
 
     va = base.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("lv"))
     vb = base.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("rv"))
@@ -1061,40 +773,24 @@ def simhash_dup_pairs(
     """SimHash near-dup pairs: banded exact-match blocking + Hamming
     verification. With `bands` bands of bits/bands bits each, any pair
     within max_hamming = bands-1 bit flips shares at least one intact
-    band (pigeonhole), so candidate generation is an equi-join on
-    (band, band_key) — never a cross join — and the verdict is exact:
-    bit_count(xor) <= max_hamming."""
+    band (pigeonhole), so candidates come from the emit-once banded
+    self-join (_band_pairs) — never a cross join — and the verdict is
+    exact: bit_count(xor) <= max_hamming."""
     r = bits // bands
     mask = (1 << r) - 1
-    sig = simhash(docs, bits)
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftright("simhash", b * r).bitwiseAND(mask).alias("key"),
-        )
+    # band index in the bits above the r-bit key: keys of different
+    # bands never compare equal
+    keys = [
+        (F.shiftright("simhash", b * r).bitwiseAND(mask) + F.lit(b << r))
+        .alias("k%d" % b)
         for b in range(bands)
     ]
-    buckets = sig.select(
-        "doc_id", "simhash", F.explode(F.array(*band_cols)).alias("bb")
-    ).select("doc_id", "simhash", "bb.band", "bb.key")
-    l, r_ = buckets.alias("l"), buckets.alias("r")
-    pairs = (
-        l.join(
-            r_,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-            F.col("l.simhash").alias("sig_a"),
-            F.col("r.simhash").alias("sig_b"),
-        )
-        .distinct()
+    keyed = simhash(docs, bits).select(
+        F.col("doc_id").alias("doc"), F.col("simhash").alias("sig"), *keys
     )
     return (
-        pairs.withColumn(
+        _band_pairs(keyed, "doc", bands, carry=("sig",))
+        .withColumn(
             "hamming",
             F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))),
         )

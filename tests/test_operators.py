@@ -58,15 +58,15 @@ def test_minhash_estimates_jaccard(spark):
 
 
 def test_dup_clusters_connected_components(spark):
-    """Label propagation finds true connected components: a 5-node
-    chain (needs multiple propagation rounds), a triangle, and an
+    """dup_clusters finds true connected components: a 5-node
+    chain (needs several star rounds), a triangle, and an
     isolated pair; cluster_id is the lexicographic min of each
     component, so keep-one-per-cluster = doc_id == cluster_id."""
     from minicrawler_spark.operators.dedup import dup_clusters
 
     pairs = spark.createDataFrame(
         [
-            # chain e-d-c-b-a (reversed order forces propagation hops)
+            # chain e-d-c-b-a
             ("d", "e"), ("c", "d"), ("b", "c"), ("a", "b"),
             # triangle
             ("x", "y"), ("y", "z"), ("x", "z"),
@@ -85,63 +85,118 @@ def test_dup_clusters_connected_components(spark):
 
 
 def test_dup_clusters_star_matches_propagation(spark):
-    """method='star' (large-star/small-star) produces the same
-    components as propagation on the mixed fixture graph."""
+    """Large-star/small-star produces the same components as plain
+    min-label propagation run to its fixpoint (in Python) on the mixed
+    fixture graph."""
     from minicrawler_spark.operators.dedup import dup_clusters
 
-    pairs = spark.createDataFrame(
-        [
-            ("d", "e"), ("c", "d"), ("b", "c"), ("a", "b"),
-            ("x", "y"), ("y", "z"), ("x", "z"),
-            ("m", "n"),
-        ],
-        "doc_a string, doc_b string",
-    )
-    want = {r["doc_id"]: r["cluster_id"]
-            for r in dup_clusters(pairs).collect()}
+    rows = [
+        ("d", "e"), ("c", "d"), ("b", "c"), ("a", "b"),
+        ("x", "y"), ("y", "z"), ("x", "z"),
+        ("m", "n"),
+    ]
+    label = {x: x for pair in rows for x in pair}
+    changed = True
+    while changed:
+        changed = False
+        for a, b in rows:
+            low = min(label[a], label[b])
+            for x in (a, b):
+                if label[x] != low:
+                    label[x] = low
+                    changed = True
+
+    pairs = spark.createDataFrame(rows, "doc_a string, doc_b string")
     got = {r["doc_id"]: r["cluster_id"]
-           for r in dup_clusters(pairs, method="star").collect()}
-    assert got == want
+           for r in dup_clusters(pairs).collect()}
+    assert got == label
 
 
 def test_dup_clusters_high_diameter_chain(spark):
-    """VERDICT r3 #6 / ADVICE: a chain whose diameter exceeds
-    max_iter. 'propagate' warns about non-convergence; 'auto'
-    finishes exactly via star on the contracted graph; 'star' solves
-    it directly in O(log²) rounds."""
+    """A 60-node chain (diameter 59, beyond what capped label
+    propagation finished) collapses exactly to its min node, through
+    both the default and the assume_canonical path, with no warning."""
     import warnings
 
     from minicrawler_spark.operators.dedup import dup_clusters
 
-    n = 60  # diameter 59 >> max_iter=25
+    n = 60
     pairs = spark.createDataFrame(
         [("n%02d" % i, "n%02d" % (i + 1)) for i in range(n - 1)],
         "doc_a string, doc_b string",
     )
     want = {"n%02d" % i: "n00" for i in range(n)}
 
-    got = {r["doc_id"]: r["cluster_id"]
-           for r in dup_clusters(pairs, method="star").collect()}
-    assert got == want
-
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        got_auto = {r["doc_id"]: r["cluster_id"]
-                    for r in dup_clusters(pairs, max_iter=5).collect()}
-        assert any("unconverged" in str(x.message) for x in w)
-    assert got_auto == want
+        for canon in (False, True):
+            got = {r["doc_id"]: r["cluster_id"]
+                   for r in dup_clusters(
+                       pairs, assume_canonical=canon).collect()}
+            assert got == want
+    # py4j's garbage-collected sockets raise ResourceWarnings of their own
+    raised = [str(x.message) for x in w if x.category is not ResourceWarning]
+    assert not raised, raised
 
+
+def test_dup_clusters_matches_union_find(spark):
+    """Large-star/small-star equals a plain-Python union-find on a
+    seeded graph: random sparse edges, a 60-node chain (diameter 59,
+    the shape that made capped label propagation give up) and a
+    clique. Non-canonical rows (reversed, duplicated, self pairs) go
+    through the default path, the canonical edge set through
+    assume_canonical=True; neither path warns."""
+    import random
+    import warnings
+
+    from minicrawler_spark.operators.dedup import dup_clusters
+
+    rng = random.Random(11)
+    edges = {
+        tuple(sorted(("r%03d" % rng.randrange(200),
+                      "r%03d" % rng.randrange(200))))
+        for _ in range(120)
+    }
+    # chain numbered in scrambled order so the min sits mid-chain
+    chain = rng.sample(range(100, 160), 60)
+    edges |= {tuple(sorted(("c%d" % x, "c%d" % y)))
+              for x, y in zip(chain, chain[1:])}
+    edges |= {("k%d" % i, "k%d" % j)
+              for i in range(12) for j in range(i + 1, 12)}
+    canonical = sorted((a, b) for a, b in edges if a != b)
+
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in canonical:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    want = {x: find(x) for x in parent}
+
+    noisy = [(b, a) if rng.random() < 0.5 else (a, b) for a, b in canonical]
+    noisy += rng.sample(canonical, 40)
+    noisy += [(a, a) for a, _ in rng.sample(canonical, 10)]
+    rng.shuffle(noisy)
+
+    schema = "doc_a string, doc_b string"
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        got_prop = {
-            r["doc_id"]: r["cluster_id"]
-            for r in dup_clusters(
-                pairs, max_iter=5, method="propagate"
+        for rows, canon in ((noisy, False), (canonical, True)):
+            got = dup_clusters(
+                spark.createDataFrame(rows, schema), assume_canonical=canon
             ).collect()
-        }
-        assert any("did not converge" in str(x.message) for x in w)
-    # propagation alone is (documentedly) partial here
-    assert len(set(got_prop.values())) > 1
+            assert len(got) == len(want)
+            assert {r["doc_id"]: r["cluster_id"] for r in got} == want
+    # py4j's garbage-collected sockets raise ResourceWarnings of their own
+    raised = [str(x.message) for x in w if x.category is not ResourceWarning]
+    assert not raised, raised
 
 
 def test_minhash_dup_pairs_verify_paths_identical(spark):

@@ -30,8 +30,16 @@ def _load_cases():
 CASES = _load_cases()
 
 
-@pytest.mark.skipif(not CASES, reason="reference corpus not available")
-@pytest.mark.parametrize("case", CASES, ids=lambda c: c["input"][:48])
+@pytest.mark.skipif(
+    not CASES,
+    reason="reference corpus not available: the 311-case WHATWG "
+    "conformance run is off",
+)
+# with no cases pytest passes a NOTSET placeholder to `ids`
+@pytest.mark.parametrize(
+    "case", CASES,
+    ids=lambda c: c["input"][:48] if isinstance(c, dict) else None,
+)
 def test_whatwg_corpus(case):
     base = None
     if case.get("base"):
