@@ -12,12 +12,13 @@ Scale invariants (the round-1 judge's top finding — no driver-side
 hash collection anywhere):
 
 - `add()` builds bloom DELTAS distributed: one mapInPandas pass over
-  the new batch repartitioned by shard; each task emits a single row
-  holding either a packed bitset or (for small batches) the sparse
-  bit indices — FIXED-SIZE payloads, never the hashes. The driver
-  ORs those into the per-shard sidecar files (atomic rename) and
-  updates the manifest. Driver memory per add() is
-  O(n_shards · m_bits/8), independent of key count.
+  the new batch repartitioned by shard, coalesced to one task per
+  core; each task emits one row per shard it holds, carrying either a
+  packed bitset or (for small batches) the sparse bit indices —
+  FIXED-SIZE payloads, never the hashes. The driver ORs those into
+  the per-shard sidecar files (atomic rename) and updates the
+  manifest. Driver memory per add() is O(n_shards · m_bits/8),
+  independent of key count.
 - When a shard outgrows its capacity (n_keys · bits_per_key >
   m_bits), its bloom is REBUILT distributed from that shard's
   parquet alone (partition pruning on the shard column): mapInPandas
@@ -202,11 +203,14 @@ class SeenFilter:
 
             acc: Dict[int, Tuple[np.ndarray, int]] = {}
             counts: Dict[int, int] = {}
+            part_of: Dict[int, int] = {}
             for pdf in batches:
                 hs = pdf["url_hash"].to_numpy(dtype=np.int64).view(np.uint64)
                 shards = pdf["shard"].to_numpy(dtype=np.int64)
+                parts = pdf["part"].to_numpy(dtype=np.int64)
                 for s in np.unique(shards):
                     s = int(s)
+                    part_of[s] = int(parts[shards == s][0])
                     m_bits = m_by_shard.get(s, default_m)
                     entry = acc.get(s)
                     if entry is None:
@@ -228,16 +232,30 @@ class SeenFilter:
                 else:
                     payload = bits.tobytes()
                     kind = "dense"
-                rows.append((s, m_bits, counts[s], kind, payload))
+                rows.append((part_of[s], s, m_bits, counts[s], kind, payload))
             yield pd.DataFrame(
-                rows, columns=["shard", "m_bits", "n", "kind", "payload"]
+                rows,
+                columns=["part", "shard", "m_bits", "n", "kind", "payload"],
             )
 
-        delta_rows = novel.mapInPandas(
-            build_delta,
-            "shard int, m_bits long, n long, kind string, payload binary",
-        ).collect()  # ≤ n_shards fixed-size rows — never the hashes
+        # A Python task costs ~0.2 s before it reads a row, so the
+        # n_shards partitions run as one task per core. Coalescing data
+        # hash-partitioned by shard keeps every shard inside one task:
+        # still exactly one delta row per shard. `part` records each
+        # row's shard partition so the driver applies the deltas (and
+        # numbers the sidecar generations) in partition order.
+        delta_rows = (
+            novel.withColumn("part", F.spark_partition_id())
+            .coalesce(self.spark.sparkContext.defaultParallelism)
+            .mapInPandas(
+                build_delta,
+                "part int, shard int, m_bits long, n long, kind string, "
+                "payload binary",
+            )
+            .collect()
+        )  # ≤ n_shards fixed-size rows — never the hashes
         novel.unpersist()
+        delta_rows.sort(key=lambda r: (r["part"], r["shard"]))
         if not delta_rows:
             return
 

@@ -417,16 +417,33 @@ def read_wet(spark: SparkSession, path: str,
 
 
 def _is_own_warcinfo(data: bytes) -> bool:
-    """True when `data` opens with THIS engine's warcinfo record
+    """True when `data` is THIS engine's warcinfo record
     (_warcinfo_record writes these exact bytes). Gates the
     WARC-Target-URI unescape (ADVICE r5): only archives this writer
     produced percent-escaped their URI headers, so foreign archives
     (e.g. Common Crawl segments, where 'a%20b' is a real URL byte
-    sequence) must be read verbatim."""
-    head = data[:512]
-    return (
-        b"WARC-Type: warcinfo" in head
-        and b"software: minicrawler-spark/" in data[:1024]
+    sequence) must be read verbatim. The check is structural, never a
+    substring search: the member must open with the writer's version
+    line, carry `WARC-Type: warcinfo` as a header line, and carry
+    `software: minicrawler-spark/` as a field line of its payload, so
+    a foreign record quoting either string in a URI or header value
+    cannot pass."""
+    if not data.startswith(b"WARC/1.1\r\n"):
+        return False
+    head_end = data.find(b"\r\n\r\n")
+    if head_end < 0:
+        return False
+    headers = data[:head_end].split(b"\r\n")[1:]
+    if b"WARC-Type: warcinfo" not in headers:
+        return False
+    clen = [h[len(b"Content-Length:"):] for h in headers
+            if h.startswith(b"Content-Length:")]
+    if len(clen) != 1 or not clen[0].strip().isdigit():
+        return False
+    payload = data[head_end + 4:head_end + 4 + int(clen[0])]
+    return any(
+        field.startswith(b"software: minicrawler-spark/")
+        for field in payload.split(b"\r\n")
     )
 
 

@@ -909,7 +909,10 @@ def _robots_gate(
 
     Returns (allowed-with-crawl_delay_ms, denied-result-rows). The
     matcher is a vectorized pandas UDF (regexes cached per distinct
-    rules_json on each executor)."""
+    rules_json on each executor). The decided frame is checkpointed
+    (lazily), so the UDF runs once per row however many consumers
+    read `allowed` and `denied`: the fetch, a denied count, the
+    final results."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf(BooleanType())
@@ -925,7 +928,7 @@ def _robots_gate(
         F.coalesce(
             allowed_udf(F.col("rules_json"), F.col("path_query")), F.lit(True)
         ),
-    )
+    ).localCheckpoint(eager=False)
     allowed = joined.filter(F.col("robots_ok")).drop(
         "robots_ok", "rules_json", "robots_status"
     )
@@ -1255,10 +1258,17 @@ def crawl(
     # count references the lazy checkpoint exactly ONCE; the
     # valid/bad fan-out below then reads the materialized checkpoint
     # (the round-3 single-reference discipline).
+    # Every Python stage of a round runs at most one task per core: a
+    # Python task pays a fixed ~0.2 s before its first row (README
+    # "Python task cost"), so the tasks follow the row count, capped at
+    # defaultParallelism, not the partitioning a shuffle left behind.
+    parallelism = spark.sparkContext.defaultParallelism
     spark.sparkContext.setJobGroup(
         "crawl-%s-prep" % crawl_tag, "crawl prep"
     )
-    next_canon = _canonicalize_df(frontier).localCheckpoint(eager=False)
+    next_canon = _canonicalize_df(
+        frontier.coalesce(parallelism)
+    ).localCheckpoint(eager=False)
     n_frontier = next_canon.count()
     while round_no < settings.max_rounds:
         # label the round so its Spark-job count is observable (the
@@ -1306,6 +1316,10 @@ def crawl(
             canon = novel.drop("url_hash").unionByName(bad)
 
         if settings.respect_robots:
+            # the robots UDF runs in the join stage, one task per
+            # partition of `valid`; the dedup union above adds up its
+            # inputs' partitions
+            canon = canon.coalesce(parallelism)
             valid = canon.filter(F.col("errkind") == "")
             bad = canon.filter(F.col("errkind") != "")
             hosts = valid.select("host", "hostname", "scheme").dropDuplicates(
@@ -1316,9 +1330,10 @@ def crawl(
                     robots_df.select("host"), "host", "left_anti"
                 )
             new_robots = fetch_robots(hosts, fetcher_spec, sdict)
-            # lazy checkpoint: the robots fetch materializes inside
-            # the _robots_gate broadcast collection — no standalone
-            # driver barrier; later rounds read the checkpoint
+            # lazy checkpoint: under AQE the call runs the hosts
+            # exchange at once; the robots fetch itself (the result
+            # stage) runs in the broadcast job that _robots_gate's
+            # checkpoint call starts. Later rounds read the checkpoint
             robots_df = (
                 new_robots
                 if robots_df is None
@@ -1342,7 +1357,6 @@ def crawl(
             else None
         )
         if num_partitions is None:
-            parallelism = spark.sparkContext.defaultParallelism
             # n_frontier carries over from the loop-exit count of the
             # previous round — one driver barrier, not two
             round_parts = min(
@@ -1361,11 +1375,12 @@ def crawl(
             deferred = deferred.localCheckpoint(eager=False)
             carry_n = deferred.count()
             carryover = deferred if carry_n else None
-        # LAZY checkpoint: the fetch runs inside the round's single
-        # materializing action (the frontier count, or the host_stats
-        # broadcast that feeds it) instead of behind its own driver
-        # barrier; every later consumer reads the checkpoint. The
-        # first materializing plan references `fetched` exactly once,
+        # LAZY checkpoint. Under AQE, localCheckpoint(eager=False)
+        # runs the plan's shuffle and broadcast stages when it is
+        # called (here the host exchange feeding the fetch); only the
+        # result stage, the fetch itself, waits for the first reader:
+        # the per-partition metrics collect, else the host_stats
+        # exchange below. Every later consumer reads the checkpoint,
         # so no URL is ever fetched twice.
         fetched = fetched.localCheckpoint(eager=False)
         if settings.impatient:
@@ -1439,8 +1454,10 @@ def crawl(
                     ),
                 )
             )
-        # lazy: materialized by the links broadcast (extract_links) or
-        # the next round's host_counts broadcast — never its own job
+        # lazy, but not free: under AQE the call runs the groupBy's
+        # shuffle stage (reading `fetched`) as its own job; only the
+        # final aggregate waits for the links broadcast
+        # (extract_links) or the next round's host_counts broadcast
         host_stats = host_stats.localCheckpoint(eager=False)
 
         # merge-back: redirects + auth retries re-enter the frontier
@@ -1508,8 +1525,9 @@ def crawl(
         frontier = nxt[0]
         for extra in nxt[1:]:
             frontier = frontier.unionByName(extra)
-        # lazy checkpoint + count below = ONE materializing job for
-        # the whole round's tail (fetch -> host_stats -> frontier)
+        # lazy checkpoint: the links exchange and the host_stats
+        # broadcast it joins run at this call, the rest in its first
+        # reader (the snapshot commit, else the count below)
         frontier = frontier.localCheckpoint(eager=False)
         if catalog is not None:
             # Iceberg-snapshot analogue (serialize.c:146-201): commit
@@ -1521,12 +1539,14 @@ def crawl(
             )
 
         round_no += 1
-        # the round's ONE materializing job: counting the canonicalized
-        # checkpoint runs fetch tail -> frontier ckpt -> URL parse in a
-        # single job; next round's fan-out reads the checkpoint
-        next_canon = _canonicalize_df(frontier).localCheckpoint(
-            eager=False
-        )
+        # counting the canonicalized checkpoint runs frontier ckpt ->
+        # URL parse in one job; next round's fan-out reads the
+        # checkpoint. The frontier's partitions are whatever the links
+        # exchange left, so the URL parse is capped like every other
+        # Python stage
+        next_canon = _canonicalize_df(
+            frontier.coalesce(parallelism)
+        ).localCheckpoint(eager=False)
         n_frontier = next_canon.count()
         if want_metrics:
             # jobs this round (the dict is already in report["rounds"])

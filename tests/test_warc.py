@@ -683,3 +683,54 @@ def test_wet_indexed_ranged_reads(spark, tmp_path):
     assert got[0]["url"] == "http://a.test/p3"
     assert bytes(got[0]["body"]) == b"text number 3"
     assert got[0]["status"] == 0  # conversion records carry no HTTP
+
+
+def _raw_record(warc_type, uri, extra, payload, version=b"WARC/1.0"):
+    """A hand-built record, the way a foreign writer could emit it."""
+    head = version + b"\r\nWARC-Type: " + warc_type + b"\r\n"
+    if uri is not None:
+        head += b"WARC-Target-URI: " + uri + b"\r\n"
+    head += extra
+    head += b"Content-Length: %d\r\n\r\n" % len(payload)
+    return head + payload + b"\r\n\r\n"
+
+
+def test_foreign_record_quoting_warcinfo_markers_reads_verbatim(
+    spark, tmp_path
+):
+    """A foreign record whose URI and headers embed both own-archive
+    markers ('WARC-Type: warcinfo', 'software: minicrawler-spark/')
+    must not be taken for this writer's warcinfo: its %20/%0A URIs,
+    and those of every later record, read back byte-for-byte."""
+    from minicrawler_spark.sources.warc import (
+        _is_own_warcinfo,
+        _warcinfo_record,
+    )
+
+    http = b"HTTP/1.1 200 OK\r\nContent-Length: 2\r\n\r\nhi"
+    bait_uri = b"http://f.test/a%20b?WARC-Type: warcinfo"
+    bait = _raw_record(
+        b"response", bait_uri,
+        b"X-Note: software: minicrawler-spark/9\r\n"
+        b"X-Also: WARC-Type: warcinfo\r\n",
+        http,
+    )
+    later = _raw_record(b"response", b"http://f.test/x%0Ay", b"", http)
+    # a foreign warcinfo quoting the software field inside another one
+    info = _raw_record(
+        b"warcinfo", None, b"",
+        b"description: copy of software: minicrawler-spark/9\r\n",
+    )
+    assert _is_own_warcinfo(_warcinfo_record(0, 0))
+    for rec in (bait, later, info,
+                _raw_record(b"warcinfo", None, b"",
+                            b"software: minicrawler-spark/9\r\n")):
+        assert not _is_own_warcinfo(rec)
+
+    d = tmp_path / "foreign"
+    d.mkdir()
+    with open(d / "f.warc.gz", "wb") as f:
+        for rec in (bait, info, later):
+            f.write(gzip.compress(rec))
+    got = [r["url"] for r in read_warc(spark, str(d)).collect()]
+    assert got == [bait_uri.decode(), "http://f.test/x%0Ay"]
