@@ -1,8 +1,13 @@
 """Deduplication operators for training-data pipelines (north-rule
 additions; graded alongside SURVEY.md §2).
 
-All operators are expressed with built-in pyspark.sql.functions (JVM,
-whole-stage codegen) except embedding_near_dups' Arrow signature pass.
+All operators are expressed with built-in pyspark.sql.functions (JVM)
+except embedding_near_dups' Arrow signature pass. Their stages run
+whole-stage codegen; the higher-order functions (transform, aggregate,
+zip_with) are evaluated interpreted from inside the generated code.
+tests/test_operators.py runs the banded-LSH operators with codegen
+fallback disabled, so a plan that outgrows the JVM's 64 KB method limit
+fails there instead of silently running interpreted.
 Cross-engine determinism for the DuckDB oracle: the token hash is the
 first 15 hex chars of md5 (60 bits, fits a signed int64 in both
 engines), never xxhash64/hash (engine-specific).
@@ -183,13 +188,23 @@ def _band_pairs(
     is tiny in BYTES but its self-join output is the candidate-pair
     explosion, which AQE's byte-based coalescing would collapse onto
     one partition; the final repartition on the pair spreads the
-    per-pair verification CPU that AQE cannot see."""
+    per-pair verification CPU that AQE cannot see.
+
+    `buckets` is checkpointed because both sides of the self-join
+    would otherwise evaluate `keyed` (signature pass included) once
+    each: AQE does not reuse the exchange of a self-joined derived
+    frame. The checkpoint keeps the `bkey` partitioning, so the join
+    adds no shuffle."""
     ks = ["k%d" % b for b in range(bands)]
     n_part = int(keyed.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    buckets = keyed.select(
-        key, *carry, *ks,
-        F.posexplode(F.array(*ks)).alias("band", "bkey"),
-    ).repartition(n_part, "bkey")
+    buckets = (
+        keyed.select(
+            key, *carry, *ks,
+            F.posexplode(F.array(*ks)).alias("band", "bkey"),
+        )
+        .repartition(n_part, "bkey")
+        .localCheckpoint(eager=False)
+    )
     first_agree = F.when(F.col("l.k0") == F.col("r.k0"), F.lit(0))
     for b in range(1, bands):
         first_agree = first_agree.when(
@@ -686,11 +701,12 @@ def embedding_near_dups(
     and >= 99.9% for cosine >= 0.9 pairs in general.
 
     The hyperplanes are the deterministic plane_component literals
-    (similarity.py:17-21), so the DuckDB oracle reproduces the exact
-    candidate set; dots unroll into left-to-right per-dimension
-    chains (codegen, no HOF, no Python) to keep float parity with the
-    oracle's left-to-right list_dot_product."""
-    from .similarity import hyperplanes
+    (similarity.py), so the DuckDB oracle reproduces the exact
+    candidate set. The signature pass sums its plane dots in index
+    order (numpy, over Arrow batches) and the verification cosine uses
+    similarity.dot, which sums left to right from 0.0: both keep float
+    parity with the oracle's left-to-right list_dot_product."""
+    from .similarity import dot, hyperplanes
 
     base = embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -729,36 +745,32 @@ def embedding_near_dups(
                 out["k%d" % b] = keys[:, b]
             yield pd.DataFrame(out)
 
-    keyed = base.mapInPandas(
+    # One Python task per core, not one per input partition (README
+    # "Python task cost").
+    keyed = base.coalesce(
+        embeddings.sparkSession.sparkContext.defaultParallelism
+    ).mapInPandas(
         signature_stage,
         "vec long, " + ", ".join("k%d long" % b for b in range(bands)),
     )
     cand = _band_pairs(keyed, "vec", bands)
 
-    va = base.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("lv"))
-    vb = base.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("rv"))
-
-    # Exact-cosine verification as a JVM codegen expression (r6): the
-    # dot and both norms unroll into left-to-right 64-term chains —
-    # the SAME per-dimension accumulation order as the oracle's
-    # list_dot_product (and the numpy loop this replaces), so the
-    # doubles are bit-identical — while the candidate pairs plus both
-    # vectors no longer cross the Arrow boundary at all (was ~1 KB
-    # per pair through a mapInPandas; measured 3-7.5s -> ~2s at
-    # sf0.1, output row-for-row equal). Spark's round is HALF_UP,
-    # matching DuckDB's half-away-from-zero on the positive side
-    # where every surviving cosine lives.
-    def _dot(a, b):
-        e = None
-        for d in range(dim):
-            term = F.element_at(a, d + 1) * F.element_at(b, d + 1)
-            e = term if e is None else e + term
-        return e
-
-    lv, rv = F.col("lv"), F.col("rv")
-    cos = F.round(
-        _dot(lv, rv) / (F.sqrt(_dot(lv, lv)) * F.sqrt(_dot(rv, rv))), 4
-    )
+    # Exact-cosine verification in the JVM: the candidate pairs and
+    # both vectors never cross the Arrow boundary. Each vector's norm
+    # is computed once, and a pair costs one dot. similarity.dot is a
+    # small higher-order expression, so the stage keeps whole-stage
+    # codegen (an unrolled 64-term dot compiles too, but ran slower
+    # warm). The doubles are bit-identical to the oracle's
+    # round(dot / (sqrt(dot(l, l)) * sqrt(dot(r, r))), 4). Spark's
+    # round is HALF_UP, matching DuckDB's half-away-from-zero on the
+    # positive side where every surviving cosine lives.
+    v = F.col("v")
+    vecs = base.select("vec_id", v, F.sqrt(dot(v, v)).alias("n"))
+    va = vecs.select(F.col("vec_id").alias("vec_a"), v.alias("lv"),
+                     F.col("n").alias("ln"))
+    vb = vecs.select(F.col("vec_id").alias("vec_b"), v.alias("rv"),
+                     F.col("n").alias("rn"))
+    cos = F.round(dot(F.col("lv"), F.col("rv")) / (F.col("ln") * F.col("rn")), 4)
     return (
         cand.join(va, "vec_a")
         .join(vb, "vec_b")

@@ -11,7 +11,7 @@ import hashlib
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["plane_component", "hyperplanes", "brute_force_topk", "lsh_signature", "lsh_bucket_ann"]
+__all__ = ["plane_component", "hyperplanes", "dot", "brute_force_topk", "lsh_signature", "lsh_bucket_ann"]
 
 
 def plane_component(i: int, d: int) -> float:
@@ -25,12 +25,19 @@ def hyperplanes(n_planes: int, dim: int):
     return [[plane_component(i, d) for d in range(dim)] for i in range(n_planes)]
 
 
-def _cosine(l, r):
-    dot = F.aggregate(F.zip_with(l, r, lambda a, b: a * b), F.lit(0.0), lambda s, x: s + x)
-    norm = lambda c: F.sqrt(
-        F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0), lambda s, x: s + x)
+def dot(l, r):
+    """Dot product of two array<double> columns, summed left to right
+    in index order from 0.0: the same float order as the DuckDB
+    oracle's list_dot_product, so results agree to the last bit. One
+    small higher-order expression, whatever the dimension, so the
+    plan stays inside the JVM's method-size limit for codegen."""
+    return F.aggregate(
+        F.zip_with(l, r, lambda a, b: a * b), F.lit(0.0), lambda s, x: s + x
     )
-    return dot / (norm(l) * norm(r))
+
+
+def _cosine(l, r):
+    return dot(l, r) / (F.sqrt(dot(l, l)) * F.sqrt(dot(r, r)))
 
 
 def brute_force_topk(
@@ -65,10 +72,7 @@ def lsh_signature(embeddings: DataFrame, n_planes: int = 8, dim: int = 32) -> Da
     sig = None
     for i in range(n_planes):
         plane = F.array(*[F.lit(plane_component(i, d)) for d in range(dim)])
-        dot = F.aggregate(
-            F.zip_with(v, plane, lambda a, b: a * b), F.lit(0.0), lambda s, x: s + x
-        )
-        term = F.when(dot >= 0, F.lit(1 << i)).otherwise(F.lit(0))
+        term = F.when(dot(v, plane) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
         sig = term if sig is None else sig + term
     return embeddings.select("vec_id", sig.cast("long").alias("bucket"))
 

@@ -565,6 +565,8 @@ def test_embedding_near_dups_lsh_blocked(spark):
     column involved) and verified by exact cosine: every reported
     pair really clears the threshold, pairs are canonical (a < b),
     and recall on this table is total vs brute force."""
+    import math
+
     import numpy as np
 
     from minicrawler_spark.operators.dedup import embedding_near_dups
@@ -585,15 +587,71 @@ def test_embedding_near_dups_lsh_blocked(spark):
         for i, j in zip(iu[cos[iu, ju] >= 0.4495], ju[cos[iu, ju] >= 0.4495])
     }
     found = {(r["vec_a"], r["vec_b"]) for r in got}
-    assert found <= brute | {
-        p for p in found  # rounding boundary tolerance
-    }
+    # every reported cosine is exact: the float64 dot summed in index
+    # order, over the product of the two norms, rounded HALF_UP to 4
+    # places (Spark rounds the double's shortest decimal form)
+    from decimal import ROUND_HALF_UP, Decimal
+
+    vec = {r[0]: r[1] for r in rows}
+
+    def idot(a, b):
+        s = 0.0
+        for x, y in zip(a, b):
+            s += x * y
+        return s
+
+    for r in got:
+        a, b = vec[r["vec_a"]], vec[r["vec_b"]]
+        c = idot(a, b) / (math.sqrt(idot(a, a)) * math.sqrt(idot(b, b)))
+        want = float(
+            Decimal(repr(c)).quantize(Decimal("0.0001"), ROUND_HALF_UP)
+        )
+        assert r["cosine"] == want, (r, want)
+        assert r["cosine"] >= 0.45
     # banding recall on this table is total (measured in design):
     strict = {
         (int(ids[i]), int(ids[j]))
         for i, j in zip(iu[cos[iu, ju] >= 0.4505], ju[cos[iu, ju] >= 0.4505])
     }
     assert strict <= found
+
+
+def test_banded_lsh_operators_keep_codegen(spark):
+    """With codegen fallback disabled, a plan whose generated code
+    outgrows the JVM's 64 KB method limit raises instead of silently
+    running interpreted. The banded-LSH operators must not."""
+    from minicrawler_spark.operators.dedup import (
+        embedding_near_dups, minhash_dup_pairs, simhash_dup_pairs,
+    )
+
+    key = "spark.sql.codegen.fallback"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        assert embedding_near_dups(emb(spark).drop("label")).count() > 0
+        assert minhash_dup_pairs(docs(spark), threshold=0.5).count() > 0
+        assert simhash_dup_pairs(docs(spark)).count() > 0
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_embedding_near_dups_single_evaluation_task_budget(spark):
+    """The banded self-join reads one evaluation of its bucket table.
+    Without the checkpoint in _band_pairs both join sides re-run the
+    Arrow signature pass over all 8 input partitions. 70 is the summed
+    task count of the call's stages with the checkpoint (87-88 without
+    it, on the conftest session's local[8] with 8 shuffle
+    partitions)."""
+    from minicrawler_spark.operators.dedup import embedding_near_dups
+    from tests.test_robots import _mark_job, _stage_tasks
+
+    vecs = emb(spark).drop("label").repartition(8)
+    before = _mark_job(spark, "embed-before")
+    got = embedding_near_dups(vecs).collect()
+    after = _mark_job(spark, "embed-after")
+    assert len(got) > 0
+    tasks = _stage_tasks(spark, before, after)
+    assert tasks <= 70, tasks
 
 
 def _encode_png(width, height, pixels, filters=None, color_type=2,

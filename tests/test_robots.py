@@ -323,6 +323,22 @@ def _mark_job(spark, group):
     raise AssertionError("status tracker never saw job group " + group)
 
 
+def _stage_tasks(spark, before, after):
+    """Summed numTasks over the distinct stages of the jobs run
+    strictly between two _mark_job marker jobs."""
+    tracker = spark.sparkContext.statusTracker()
+    stages = set()
+    for job in range(before + 1, after):
+        info = tracker.getJobInfo(job)
+        if info is not None:
+            stages.update(info.stageIds)
+    return sum(
+        info.numTasks
+        for info in map(tracker.getStageInfo, stages)
+        if info is not None
+    )
+
+
 def test_fixture_crawl_pinned_and_task_budget(spark, tmp_path):
     """The dedup + robots + links crawl over the fixture web keeps its
     per-round report and its result rows exactly (pinned values), and
@@ -387,15 +403,5 @@ def test_fixture_crawl_pinned_and_task_budget(spark, tmp_path):
     ).hexdigest()[:16]
     assert digest == "af7d798fce6e91ff", digest
 
-    tracker = spark.sparkContext.statusTracker()
-    stages = set()
-    for job in range(before + 1, after):
-        info = tracker.getJobInfo(job)
-        if info is not None:
-            stages.update(info.stageIds)
-    tasks = sum(
-        info.numTasks
-        for info in map(tracker.getStageInfo, stages)
-        if info is not None
-    )
+    tasks = _stage_tasks(spark, before, after)
     assert tasks <= 560, tasks
