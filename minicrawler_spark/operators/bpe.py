@@ -31,6 +31,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..plans.local import local_frame
 from .dedup import tokenize
 
 __all__ = ["word_counts", "train_bpe", "encode_bpe"]
@@ -151,7 +152,7 @@ def train_bpe(docs: DataFrame, n_merges: int = 1000,
     merges = _train_on_counts(counts, n_merges)
     spark = docs.sparkSession
     rows = [(i, a, b, a + b) for i, (a, b) in enumerate(merges)]
-    return spark.createDataFrame(rows, MERGES_SCHEMA)
+    return local_frame(spark, rows, MERGES_SCHEMA)
 
 
 def encode_bpe(docs: DataFrame, merges: DataFrame,

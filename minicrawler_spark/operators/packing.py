@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.local import local_frame
 from .dedup import tokenize
 
 __all__ = ["pack_token_sequences", "pack_assignments"]
@@ -68,7 +69,7 @@ def _binned(docs: DataFrame, budget: int, num_partitions: int):
         offsets.append((pid, running))
         running += s
     off_df = F.broadcast(
-        spark.createDataFrame(offsets, "pid int, p_offset long")
+        local_frame(spark, offsets, "pid int, p_offset long")
     )
     # phase 3: per-partition running sum + the partition's offset
     w = (

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.local import local_frame
+
 __all__ = ["hash_uniform", "hash_split", "stratified_sample"]
 
 _TWO_60 = float(1 << 60)
@@ -79,7 +81,8 @@ def stratified_sample(
                              % (name, frac))
     spark = docs.sparkSession
     dim = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(k, float(v)) for k, v in fractions.items()],
             "%s string, _frac double" % on,
         )

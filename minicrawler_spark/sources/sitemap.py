@@ -29,6 +29,8 @@ from typing import Iterator, List, Optional, Tuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.local import local_frame
+
 __all__ = [
     "parse_sitemap",
     "discover_sitemaps",
@@ -175,8 +177,8 @@ def _fetch_level(spark: SparkSession, sm_urls: List[str],
                          "priority", "status"],
             )
 
-    df = spark.createDataFrame(
-        [(u,) for u in sm_urls], "sitemap_url string"
+    df = local_frame(
+        spark, [(u,) for u in sm_urls], "sitemap_url string"
     ).repartition(max(1, min(len(sm_urls), 32)))
     return df.mapInPandas(
         stage,
@@ -225,7 +227,8 @@ def discover_sitemaps(
     if not outs:
         # empty seed list (a robots.txt with no Sitemap: lines) or
         # max_depth=0: an empty result, not an IndexError (ADVICE r3)
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "sitemap_url string, kind string, loc string, "
             "lastmod string, priority double, status int",
@@ -281,7 +284,7 @@ def sitemap_frontier(discovered: DataFrame, settings=None) -> DataFrame:
         offsets.append((pid, running))
         running += cnt
     off_df = F.broadcast(
-        spark.createDataFrame(offsets or [(0, 0)], "pid int, p_offset long")
+        local_frame(spark, offsets or [(0, 0)], "pid int, p_offset long")
     )
     w = Window.partitionBy("pid").orderBy("loc")
     pages = (

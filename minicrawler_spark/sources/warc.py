@@ -33,6 +33,7 @@ from typing import Iterator, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.local import local_frame
 from ..plans.sidecar_fs import fs_for
 
 __all__ = [
@@ -566,9 +567,7 @@ def read_warc(spark: SparkSession, path: str,
         raise FileNotFoundError(
             "read_warc: no %s archives at %r" % (suffix, path)
         )
-    files_df = spark.createDataFrame(
-        [(p,) for p in files], "path string"
-    )
+    files_df = local_frame(spark, [(p,) for p in files], "path string")
     if files:
         files_df = files_df.repartition(
             min(len(files),

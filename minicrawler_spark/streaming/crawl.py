@@ -51,6 +51,7 @@ from pyspark.sql.types import (
 )
 
 from ..config import CrawlSettings
+from ..plans.local import local_frame
 
 # ---------------------------------------------------------------------------
 # schemas
@@ -208,13 +209,34 @@ def resolve_async_fetcher(spec: str) -> Optional[Callable]:
 # ---------------------------------------------------------------------------
 
 
+# the frontier columns a seed dict may set; only "url" is required
+_SEED_FIELD_TYPES = (
+    ("url", (str,)),
+    ("method", (str,)),
+    ("post", (bytes, bytearray)),
+    ("customheader", (str,)),
+)
+
+
 def seeds_to_frontier(spark: SparkSession, seeds, settings: CrawlSettings) -> DataFrame:
     """CLI seed-list source (initurls, cli.c:50-153): one frontier row
-    per URL in argv order; `index` ties output back to input."""
+    per URL in argv order; `index` ties output back to input. A seed
+    that is not a URL string or a dict, or a seed field of the wrong
+    type, raises TypeError naming the seed's position before any Spark
+    work (Arrow would silently encode a str `post` or a bytes `url`)."""
     rows = []
     for i, s in enumerate(seeds):
         if isinstance(s, str):
             s = {"url": s}
+        if not isinstance(s, dict):
+            raise TypeError("seed %d: expected a URL string or a dict, "
+                            "got %s" % (i, type(s).__name__))
+        for key, types in _SEED_FIELD_TYPES:
+            v = s.get(key)
+            if not isinstance(v, types) and (v is not None or key == "url"):
+                raise TypeError("seed %d: %r must be %s, got %s" % (
+                    i, key, " or ".join(t.__name__ for t in types),
+                    type(v).__name__))
         rows.append(
             (
                 i,
@@ -234,7 +256,7 @@ def seeds_to_frontier(spark: SparkSession, seeds, settings: CrawlSettings) -> Da
                 0,
             )
         )
-    return spark.createDataFrame(rows, FRONTIER_SCHEMA)
+    return local_frame(spark, rows, FRONTIER_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1416,7 +1438,8 @@ def crawl(
             if report is not None:
                 report["rounds"].append(round_metrics)
             if checkpoint_dir is not None:
-                spark.createDataFrame(
+                local_frame(
+                    spark,
                     [
                         (round_no, r["partition_id"], r["outcome"], r["n"],
                          r["elapsed_ms_sum"])

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from minicrawler_spark.config import CrawlSettings
 from minicrawler_spark.sources.fixtures import synthetic_seeds
-from minicrawler_spark.streaming.crawl import crawl
+from minicrawler_spark.streaming.crawl import crawl, seeds_to_frontier
 
 
 @pytest.fixture(scope="module")
@@ -259,3 +259,21 @@ def test_per_host_budget_defers_not_drops(spark):
     # cross-round host_seq stays gapless 0..6
     seqs = sorted(r["host_seq"] for r in done.collect())
     assert seqs == list(range(7))
+
+
+@pytest.mark.parametrize(
+    "seed, message",
+    [
+        ({"url": b"http://host0.test/"}, r"seed 1: 'url' must be str, got bytes"),
+        ({"url": "http://host3.test/post", "post": "a=1"},
+         r"seed 1: 'post' must be bytes or bytearray, got str"),
+        ({"url": "http://host3.test/get", "method": 1},
+         r"seed 1: 'method' must be str, got int"),
+        (42, r"seed 1: expected a URL string or a dict, got int"),
+    ],
+    ids=["url-bytes", "post-str", "method-int", "not-a-seed"],
+)
+def test_seed_type_errors_name_the_seed(seed, message):
+    # no session: the check runs before any Spark work
+    with pytest.raises(TypeError, match=message):
+        seeds_to_frontier(None, ["http://host0.test/", seed], CrawlSettings())
