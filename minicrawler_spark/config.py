@@ -46,10 +46,6 @@ class CrawlSettings:
                                      # cert.c:258
     writehead: bool = False          # -h: keep the raw reply head
     ipv6_only: bool = False          # -6: resolve AAAA only
-    use_sharded_seen: bool = False   # URL-seen via plans/seen.SeenFilter
-                                     # (bloom-pruned parquet shards) instead
-                                     # of the in-memory distinct-union;
-                                     # requires checkpoint_dir
     politeness_by_ip: bool = False   # reference-faithful per-IP politeness:
                                      # 64 hash slots over the 16-byte IP
                                      # (time.c:43-96), INCLUDING collision

@@ -37,7 +37,6 @@ def parse_args(argv):
     p.add_argument("--extract-links", action="store_true")
     p.add_argument("--dedup", action="store_true")
     p.add_argument("--respect-robots", action="store_true")
-    p.add_argument("--sharded-seen", action="store_true")
     p.add_argument("--convert-to-utf8", action="store_true")
     p.add_argument("--convert-to-text", action="store_true")
     p.add_argument("--username", default="")
@@ -90,7 +89,6 @@ def main(argv=None):
         extract_links=args.extract_links,
         dedup=args.dedup,
         respect_robots=args.respect_robots,
-        use_sharded_seen=args.sharded_seen,
         convert_to_utf8=args.convert_to_utf8,
         convert_to_text=args.convert_to_text,
         username=args.username,

@@ -16,11 +16,18 @@ Topology:
   which frontier files are already consumed — restart-safe offsets,
 - URL-seen state persists across batches (and restarts) in the
   bloom-sharded SeenFilter (plans/seen.py) under the checkpoint dir,
-- per-host crawl-order state (host counts for cross-batch host_seq)
-  persists through the SnapshotCatalog table "host_stats",
-- each micro-batch runs the SAME crawl_round as batch mode: window
-  politeness, host-salted repartition, mapInPandas fetch — so all
-  protocol semantics are shared, not reimplemented.
+- per-host state (host_count for cross-batch host_seq, host_err)
+  persists through the SnapshotCatalog table "host_stats", and robots
+  rules through the table "robots",
+- each micro-batch runs the batch crawl's round gates, the same
+  private helpers of crawl.py: seen gate, robots step (the UDF at one
+  task per core), crawl_round (window politeness, host-salted
+  repartition, mapInPandas fetch), result rows, host-stats merge and
+  discovered links. Redirects and auth retries finish inside the
+  fetch stage, so nothing but links and budget-deferred rows returns
+  to the frontier. What is the stream's own: the per-host budget cut
+  before the seen gate, the catalog reads and commits, the denied
+  sink, the WARC archive and the TSV feedback.
 
 `applyInPandasWithState` is the alternative for per-host state; the
 foreachBatch formulation is chosen because the frontier feedback loop
@@ -30,7 +37,7 @@ state lives in storage (restartable) rather than executor memory.
 
 from __future__ import annotations
 
-import json
+import dataclasses
 import os
 import uuid
 from typing import Optional
@@ -39,13 +46,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import CrawlSettings
+from ..plans.snapshots import SnapshotCatalog
 from .crawl import (
-    FRONTIER_SCHEMA,
+    ROBOTS_SCHEMA,
     _canonicalize_df,
+    _discovered_links,
+    _frontier_rows,
+    _merge_host_stats,
+    _robots_step,
+    _round_partitions,
+    _round_results,
+    _seen_gate,
+    _split_valid,
     crawl_round,
     finalize_results,
 )
-from ..plans.snapshots import SnapshotCatalog
+
+HOST_STATS_SCHEMA = "host string, host_count long, host_err long"
 
 
 def write_seeds(frontier_dir: str, urls, depth: int = 0) -> str:
@@ -60,28 +77,6 @@ def write_seeds(frontier_dir: str, urls, depth: int = 0) -> str:
             f.write("%d\t%s\n" % (depth, u))
     os.replace(tmp, name)  # atomic: the file source never sees partials
     return name
-
-
-def _to_frontier(batch: DataFrame, settings: CrawlSettings) -> DataFrame:
-    from pyspark.sql.types import BinaryType, LongType, StringType
-
-    return batch.select(
-        F.lit(0).alias("index"),
-        F.col("rawurl"),
-        F.lit(None).cast(StringType()).alias("base"),
-        F.col("depth").cast("int").alias("depth"),
-        F.xxhash64("rawurl").alias("seq"),
-        F.col("depth").cast("double").alias("priority"),
-        F.lit(settings.max_redirects).alias("redirect_limit"),
-        F.lit("GET").alias("method"),
-        F.lit(None).cast(BinaryType()).alias("post"),
-        F.lit(None).cast(StringType()).alias("authorization"),
-        F.lit(False).alias("auth_attempt"),
-        F.lit("[]").alias("cookies_json"),
-        F.lit("[]").alias("redirect_json"),
-        F.lit(None).cast(StringType()).alias("customheader"),
-        F.lit(0).cast(LongType()).alias("elapsed_ms"),
-    )
 
 
 def crawl_stream(
@@ -123,20 +118,24 @@ def crawl_stream(
         .option("sep", "\t")
         .csv(frontier_dir)
     )
+    # the budget cut happens before the seen gate (below), not in
+    # crawl_round
+    run_settings = dataclasses.replace(settings, per_host_budget=0)
+    parallelism = spark.sparkContext.defaultParallelism
 
-    import dataclasses
-
-    run_settings = (
-        dataclasses.replace(settings, per_host_budget=0)
-        if settings.per_host_budget > 0
-        else settings
-    )
+    def _read_or_none(table: str, schema) -> Optional[DataFrame]:
+        try:
+            return catalog.read(spark, table, schema=schema)
+        except FileNotFoundError:
+            return None
 
     def process_batch(batch: DataFrame, epoch_id: int):
         if batch.isEmpty():
             return
-        frontier = _to_frontier(batch, settings)
-        canon = _canonicalize_df(frontier).localCheckpoint(eager=True)
+        round_no = int(epoch_id)
+        canon = _canonicalize_df(
+            _frontier_rows(batch.withColumn("index", F.lit(0)), settings)
+        ).localCheckpoint(eager=True)
 
         if settings.per_host_budget > 0:
             # budget cut BEFORE the seen-add: deferred rows go back
@@ -144,8 +143,7 @@ def crawl_stream(
             # not be marked seen yet
             from pyspark.sql import Window
 
-            valid = canon.filter(F.col("errkind") == "")
-            bad = canon.filter(F.col("errkind") != "")
+            valid, bad = _split_valid(canon)
             w = Window.partitionBy("host").orderBy("priority", "seq")
             slotted = valid.withColumn(
                 "bslot", F.row_number().over(w) - 1
@@ -163,126 +161,54 @@ def crawl_stream(
             ).localCheckpoint(eager=True)
 
         if seen_filter is not None:
-            valid = canon.filter(F.col("errkind") == "")
-            bad = canon.filter(F.col("errkind") != "")
-            hashed = valid.withColumn("url_hash", F.xxhash64("href"))
-            novel = seen_filter.novel(hashed).localCheckpoint(eager=True)
-            seen_filter.add(novel.select("url_hash"), assume_novel=True)
-            canon = novel.drop("url_hash").unionByName(bad)
+            canon, _ = _seen_gate(canon, seen_filter, None)
 
         if settings.respect_robots:
             # robots rules persist across micro-batches (and restarts)
-            # through the catalog table; new hosts fetched per batch
-            from .crawl import ROBOTS_SCHEMA, _robots_gate, fetch_robots
-
-            sdict = settings.as_dict()
-            sdict["fetcher"] = fetcher_spec
-            valid = canon.filter(F.col("errkind") == "")
-            bad = canon.filter(F.col("errkind") != "")
-            try:
-                robots_df = catalog.read(
-                    spark, "robots", schema=ROBOTS_SCHEMA
-                )
-            except FileNotFoundError:
-                robots_df = None
-            hosts = valid.select("host", "hostname", "scheme").dropDuplicates(
-                ["host"]
+            # through the catalog table; new hosts are fetched per batch
+            canon, denied, robots = _robots_step(
+                canon, _read_or_none("robots", ROBOTS_SCHEMA), settings,
+                fetcher_spec, round_no,
             )
-            if robots_df is not None:
-                hosts = hosts.join(robots_df.select("host"), "host", "left_anti")
-            new_robots = fetch_robots(hosts, fetcher_spec, sdict)
-            robots_df = (
-                new_robots if robots_df is None
-                else robots_df.unionByName(new_robots)
-            ).localCheckpoint(eager=True)
-            catalog.commit(
-                "robots", robots_df, snapshot_id=int(epoch_id) + 1,
-                summary={"epoch": int(epoch_id)},
-            )
-            valid, denied = _robots_gate(valid, robots_df, int(epoch_id))
+            # the denied write reads the rules' checkpoint first, so
+            # the commit never reads the snapshot it overwrites (an
+            # epoch replay commits the same id again)
             denied.write.mode("append").parquet(output_dir + "_robots_denied")
-            canon = valid.unionByName(bad, allowMissingColumns=True)
+            catalog.commit("robots", robots, snapshot_id=round_no + 1,
+                           summary={"epoch": round_no})
 
-        try:
-            host_counts = catalog.read(
-                spark, "host_stats", schema="host string, host_count long"
-            )
-        except FileNotFoundError:
-            host_counts = None
-
-        parallelism = spark.sparkContext.defaultParallelism
-        n_parts = min(parallelism, max(1, canon.count() // 100 + 1))
-        fetched, errors, _deferred = crawl_round(
-            canon, run_settings, fetcher_spec, int(epoch_id), host_counts,
-            n_parts, pre_canonicalized=True,
+        host_stats = _read_or_none("host_stats", HOST_STATS_SCHEMA)
+        fetched, errors, _ = crawl_round(
+            canon, run_settings, fetcher_spec, round_no, host_stats,
+            _round_partitions(canon.count(), parallelism),
         )
         fetched = fetched.localCheckpoint(eager=True)
-
-        done = fetched.filter(
-            ~F.col("outcome").isin("redirect", "auth_retry")
-        )
-        err_rows = errors.select(
-            *[f.name for f in FRONTIER_SCHEMA.fields],
-            "href", "host", "hostname", "scheme", "path_query",
-            "outcome", "status", "error_msg", "round",
-        )
         if archive_dir is not None:
             from ..sources.warc import write_warc
 
             write_warc(
-                done.repartition(
+                fetched.repartition(
                     archive_partitions, F.xxhash64("url")
                 ).sortWithinPartitions("url"),
                 archive_dir,
             ).collect()
-        out = finalize_results(
-            done.unionByName(err_rows, allowMissingColumns=True)
-        ).drop("body", "head", "post")
-        out.write.mode("append").parquet(output_dir)
+        out = finalize_results(_round_results(fetched, errors))
+        out.drop("body", "head", "post").write.mode("append").parquet(output_dir)
 
         # cross-batch host_seq continuity
-        new_counts = fetched.groupBy("host").agg(
-            F.count("*").alias("host_count_new")
-        )
-        if host_counts is not None:
-            merged = (
-                host_counts.join(new_counts, "host", "outer")
-                .fillna(0)
-                .select(
-                    "host",
-                    (F.col("host_count") + F.col("host_count_new")).alias(
-                        "host_count"
-                    ),
-                )
-            )
-        else:
-            merged = new_counts.select(
-                "host", F.col("host_count_new").alias("host_count")
-            )
         catalog.commit(
-            "host_stats", merged, snapshot_id=int(epoch_id) + 1,
-            summary={"epoch": int(epoch_id)},
+            "host_stats", _merge_host_stats(host_stats, fetched),
+            snapshot_id=round_no + 1, summary={"epoch": round_no},
         )
 
         # feedback loop: discovered links become new frontier files,
         # written distributed (the file source picks up new part
-        # files; no driver-side collect)
+        # files; no driver-side collect). The files carry depth and
+        # URL only, so no link priority is computed here.
         if settings.extract_links:
-            links_df = (
-                fetched.filter(
-                    (F.col("outcome") == "done")
-                    & (F.col("depth") < settings.max_depth)
-                )
-                .select(
-                    (F.col("depth") + 1).alias("depth"),
-                    F.explode(
-                        F.from_json("links_json", "array<string>")
-                    ).alias("rawurl"),
-                )
-                .dropDuplicates(["rawurl"])
-            )
-            if not links_df.isEmpty():
-                (links_df.coalesce(1).write.mode("append")
+            links = _discovered_links(fetched, settings).select("depth", "rawurl")
+            if not links.isEmpty():
+                (links.coalesce(1).write.mode("append")
                  .option("sep", "\t").csv(frontier_dir))
 
     query = (

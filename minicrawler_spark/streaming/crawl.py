@@ -2,11 +2,14 @@
 batch-iterative Spark rounds (SURVEY.md §2.9, §2.10).
 
 The reference's per-URL state machine (crawler.c:1865-1980) collapses
-into one `mapInPandas` fetch-and-process stage per round; the logical
-states that survive as DataFrame state are exactly: pending, fetched
-(done), redirected (re-enqueue), auth-retry (re-enqueue), error,
-timeout. The driver loop (mcrawler_go, crawler.c:2047-2094) becomes
-`crawl()`: rounds until the frontier drains or budgets expire.
+into one `mapInPandas` fetch-and-process stage per round. Redirects and
+auth retries are followed inside that stage, as the reference follows
+them inside its job, so a fetched row leaves the round finished: done,
+error or timeout. The driver loop (mcrawler_go, crawler.c:2047-2094)
+becomes `crawl()`: rounds until the frontier drains or budgets expire.
+A round's gates (seen -> robots -> fetch -> host stats -> discovered
+links) are private helpers shared with the streaming crawl
+(continuous.py), so both modes run one gate sequence.
 
 Determinism: a virtual clock. Each job carries `elapsed_ms`; the
 per-host politeness window (test_free_channel, time.c:103-114 →
@@ -1031,11 +1034,15 @@ _ERR_BY_KIND = {
 }
 
 
+def _split_valid(canon: DataFrame) -> Tuple[DataFrame, DataFrame]:
+    """(rows that parsed, parse-failure rows) of a canonicalized frame."""
+    return canon.filter(F.col("errkind") == ""), canon.filter(F.col("errkind") != "")
+
+
 def _gate_errors(df: DataFrame, round_no: int) -> Tuple[DataFrame, DataFrame]:
     """Split parse-failure rows into error results (status -10:
     JUSTBORN - ERROR; README.md:121-131)."""
-    bad = df.filter(F.col("errkind") != "")
-    ok = df.filter(F.col("errkind") == "")
+    ok, bad = _split_valid(df)
     msg = F.when(
         F.col("errkind").startswith("proto:"),
         F.concat(
@@ -1089,25 +1096,24 @@ def _with_ip_slot(ok: DataFrame, settings: CrawlSettings) -> DataFrame:
 
 
 def crawl_round(
-    pending: DataFrame,
+    canon: DataFrame,
     settings: CrawlSettings,
     fetcher_spec: str,
     round_no: int,
-    host_counts: Optional[DataFrame],
+    host_stats: Optional[DataFrame],
     num_partitions: int,
-    pre_canonicalized: bool = False,
 ):
-    """One crawl round: canonicalize -> gates -> politeness window ->
-    host-salted repartition -> fetch stage. Returns
-    (fetched, errors, deferred): `deferred` holds the rows beyond the
-    per-host round budget — still canonicalized, NOT fetched — which
-    the driver loop carries into the next round (they are already in
-    the seen set, so they must not re-enter through dedup).
-
-    With `pre_canonicalized` the caller already ran _canonicalize_df
-    (the dedup/robots path does — avoids a second WHATWG parse pass).
-    """
-    canon = pending if pre_canonicalized else _canonicalize_df(pending)
+    """One crawl round over canonicalized rows (_canonicalize_df,
+    already through the seen and robots gates): parse-error gate ->
+    politeness window -> host-salted repartition -> fetch stage.
+    `host_stats` holds the per-host `host_count` of earlier rounds
+    (None on the first). Returns (fetched, errors, deferred):
+    `fetched` rows are finished (done, error or timeout; redirects and
+    auth retries run inside the fetch stage), and `deferred` holds the
+    rows beyond the per-host round budget — still canonicalized, NOT
+    fetched — which the driver loop carries into the next round (they
+    are already in the seen set, so they must not re-enter through
+    dedup)."""
     ok, errors = _gate_errors(canon, round_no)
 
     # ONE exchange for schedule + fetch: repartition by host FIRST so
@@ -1126,10 +1132,10 @@ def crawl_round(
     # per-host delay is max(settings.delay, robots Crawl-delay)
     w = Window.partitionBy("host").orderBy("priority", "seq")
     ok = ok.withColumn("slot", F.row_number().over(w) - F.lit(1))
-    if host_counts is not None:
-        ok = ok.join(F.broadcast(host_counts), "host", "left").fillna(
-            0, subset=["host_count"]
-        )
+    if host_stats is not None:
+        ok = ok.join(
+            F.broadcast(host_stats.select("host", "host_count")), "host", "left"
+        ).fillna(0, subset=["host_count"])
     else:
         ok = ok.withColumn("host_count", F.lit(0))
     if "crawl_delay_ms" in ok.columns:
@@ -1205,6 +1211,190 @@ def crawl_round(
     return fetched, errors, deferred
 
 
+# ---------------------------------------------------------------------------
+# round gates, shared by crawl() and the streaming crawl (continuous.py)
+# ---------------------------------------------------------------------------
+
+
+def _round_partitions(n_rows: int, parallelism: int) -> int:
+    """Fetch tasks for a round of `n_rows`: fetch tasks are per-row
+    Python compute, so the count follows rows, not bytes (AQE's
+    coalescing signal), at ~100 rows a task and at most one per core."""
+    return min(parallelism, max(1, n_rows // 100 + 1))
+
+
+def _seen_gate(
+    canon: DataFrame,
+    seen_filter,
+    seen: Optional[DataFrame],
+    metrics: Optional[dict] = None,
+) -> Tuple[DataFrame, Optional[DataFrame]]:
+    """URL-seen gate: keep the valid rows whose canonical href is not
+    yet seen and add them to the seen set. Parse-failure rows (href
+    null) pass through to the error gate untouched. With a SeenFilter
+    (plans/seen.py) the set lives in storage under the checkpoint dir;
+    without one, `seen` is the in-memory url_hash frame and comes back
+    extended. Returns (gated rows, seen); fills `metrics`' candidates,
+    scheduled and dedup_dropped when given."""
+    valid, bad = _split_valid(canon)
+    hashed = valid.withColumn("url_hash", F.xxhash64("href"))
+    if metrics is not None:
+        metrics["candidates"] = hashed.count()
+    if seen_filter is not None:
+        novel = seen_filter.novel(hashed).localCheckpoint(eager=True)
+        seen_filter.add(novel.select("url_hash"), assume_novel=True)
+    else:
+        if seen is not None:
+            hashed = hashed.join(seen, "url_hash", "left_anti")
+        novel = hashed
+        # append-only seen: the batch was already anti-joined against
+        # all prior increments, so no distinct over the accumulated
+        # history is ever needed — each round only materializes ITS
+        # increment (O(batch), not O(total)); lazy: it materializes
+        # inside the next round's anti-join, not as its own job
+        new_seen = novel.select("url_hash").distinct().localCheckpoint(eager=False)
+        seen = new_seen if seen is None else seen.union(new_seen)
+    if metrics is not None:
+        n_novel = novel.count()
+        metrics["scheduled"] = n_novel
+        metrics["dedup_dropped"] = metrics["candidates"] - n_novel
+    return novel.drop("url_hash").unionByName(bad), seen
+
+
+def _robots_step(
+    canon: DataFrame,
+    robots: Optional[DataFrame],
+    settings: CrawlSettings,
+    fetcher_spec: str,
+    round_no: int,
+) -> Tuple[DataFrame, DataFrame, DataFrame]:
+    """Robots gate: fetch robots.txt for the hosts `robots` (the rules
+    known so far, or None) lacks, then split the valid rows on the
+    rules. Returns (allowed + parse-failure rows, denied result rows,
+    all rules known now)."""
+    # the robots UDF runs in the join stage, one task per partition of
+    # `valid`; the seen gate's union adds up its inputs' partitions
+    canon = canon.coalesce(canon.sparkSession.sparkContext.defaultParallelism)
+    valid, bad = _split_valid(canon)
+    hosts = valid.select("host", "hostname", "scheme").dropDuplicates(["host"])
+    if robots is not None:
+        hosts = hosts.join(robots.select("host"), "host", "left_anti")
+    sdict = settings.as_dict()
+    sdict["fetcher"] = fetcher_spec
+    new_robots = fetch_robots(hosts, fetcher_spec, sdict)
+    # lazy checkpoint: under AQE the call runs the hosts exchange at
+    # once; the robots fetch itself (the result stage) runs in the
+    # broadcast job that _robots_gate's checkpoint call starts. Later
+    # readers (the next round, the stream's catalog commit) read the
+    # checkpoint
+    robots = (
+        new_robots if robots is None else robots.unionByName(new_robots)
+    ).localCheckpoint(eager=False)
+    valid, denied = _robots_gate(valid, robots, round_no)
+    return valid.unionByName(bad, allowMissingColumns=True), denied, robots
+
+
+def _round_results(fetched: DataFrame, errors: DataFrame) -> DataFrame:
+    """A round's result rows: the fetched rows plus the parse-error
+    gate's rows."""
+    return fetched.unionByName(
+        errors.select(*[f.name for f in FRONTIER_FIELDS],
+                      "href", "host", "hostname", "scheme", "path_query",
+                      "outcome", "status", "error_msg", "round"),
+        allowMissingColumns=True,
+    )
+
+
+def _merge_host_stats(
+    host_stats: Optional[DataFrame], fetched: DataFrame
+) -> DataFrame:
+    """Cumulative per-host counters (host, host_count, host_err) after
+    this round's fetched rows: host_count continues host_seq across
+    rounds, host_err feeds the link priority."""
+    new = fetched.groupBy("host").agg(
+        F.count("*").alias("host_count_new"),
+        F.count_if(F.col("outcome") == "error").alias("host_err_new"),
+    )
+    if host_stats is None:
+        return new.select(
+            "host",
+            F.col("host_count_new").alias("host_count"),
+            F.col("host_err_new").alias("host_err"),
+        )
+    return (
+        host_stats.join(new, "host", "outer")
+        .fillna(0)
+        .select(
+            "host",
+            (F.col("host_count") + F.col("host_count_new")).alias("host_count"),
+            (F.col("host_err") + F.col("host_err_new")).alias("host_err"),
+        )
+    )
+
+
+def _frontier_rows(
+    urls: DataFrame, settings: CrawlSettings, priority=None
+) -> DataFrame:
+    """Frontier rows for URLs (`index`, `rawurl`, `depth`) that join a
+    crawl after its seeds: plain GETs with no base, cookies or
+    credentials, FIFO `seq` = xxhash64(rawurl) and `priority` = depth
+    unless given."""
+    if priority is None:
+        priority = F.col("depth").cast("double")
+    return urls.select(
+        F.col("index").cast("int").alias("index"),
+        F.col("rawurl"),
+        F.lit(None).cast(StringType()).alias("base"),
+        F.col("depth").cast("int").alias("depth"),
+        F.xxhash64("rawurl").alias("seq"),
+        priority.alias("priority"),
+        F.lit(settings.max_redirects).alias("redirect_limit"),
+        F.lit("GET").alias("method"),
+        F.lit(None).cast(BinaryType()).alias("post"),
+        F.lit(None).cast(StringType()).alias("authorization"),
+        F.lit(False).alias("auth_attempt"),
+        F.lit("[]").alias("cookies_json"),
+        F.lit("[]").alias("redirect_json"),
+        F.lit(None).cast(StringType()).alias("customheader"),
+        F.lit(0).cast(LongType()).alias("elapsed_ms"),
+    )
+
+
+def _discovered_links(
+    fetched: DataFrame,
+    settings: CrawlSettings,
+    host_stats: Optional[DataFrame] = None,
+) -> DataFrame:
+    """Next-depth frontier rows for the links of this round's done
+    pages below max_depth, one row per distinct URL. With `host_stats`
+    the priority is recomputed (north rule): BFS depth plus a
+    deterministic penalty < 1 for hosts with observed errors, so
+    error-prone hosts sink in the per-host FIFO (priority, seq)
+    without starving."""
+    links = fetched.filter(
+        (F.col("outcome") == "done") & (F.col("depth") < settings.max_depth)
+    ).select(
+        "index",
+        (F.col("depth") + 1).alias("depth"),
+        F.explode(F.from_json("links_json", ArrayType(StringType()))).alias("rawurl"),
+    )
+    priority = None
+    if host_stats is not None:
+        links = links.withColumn(
+            "link_host", F.regexp_extract("rawurl", r"^[a-z+.-]+://([^/]+)", 1)
+        ).join(
+            F.broadcast(host_stats.withColumnRenamed("host", "link_host")),
+            "link_host",
+            "left",
+        )
+        priority = F.col("depth").cast("double") + F.round(
+            F.coalesce(F.col("host_err"), F.lit(0))
+            / F.greatest(F.coalesce(F.col("host_count"), F.lit(0)), F.lit(1)),
+            6,
+        )
+    return _frontier_rows(links, settings, priority).dropDuplicates(["rawurl"])
+
+
 def crawl(
     spark: SparkSession,
     seeds,
@@ -1220,6 +1410,11 @@ def crawl(
     results DataFrame (one row per finished job, plus per-hop rows are
     folded into redirect chains exactly like the reference).
 
+    Each round runs the shared gates: seen -> robots -> crawl_round
+    (fetch) -> host stats -> discovered links, which are the next
+    round's frontier. Nothing else re-enters the frontier except the
+    rows the per-host budget defers.
+
     Pass `report={}` to receive per-round / per-partition lineage
     metrics (north rule): report["rounds"] = list of round dicts with
     scheduled / dedup_dropped / robots_denied counts and per-
@@ -1228,17 +1423,11 @@ def crawl(
     """
     settings = settings or CrawlSettings()
     # num_partitions=None -> sized per round from the (checkpointed,
-    # so cheap-to-count) frontier: fetch tasks are per-row Python
-    # compute, so the right partition count follows row count, not
-    # byte size (AQE's coalescing signal) — capped at the core count,
-    # floored so a task gets >= ~32 rows and overhead stays amortized
+    # so cheap-to-count) frontier (_round_partitions)
     if isinstance(seeds, DataFrame):
         frontier = seeds
     else:
         frontier = seeds_to_frontier(spark, seeds, settings)
-
-    sdict = settings.as_dict()
-    sdict["fetcher"] = fetcher_spec
 
     results: list = []
     host_stats: Optional[DataFrame] = None  # (host, host_count, host_err)
@@ -1259,11 +1448,10 @@ def crawl(
 
         catalog = SnapshotCatalog(checkpoint_dir)
 
-    if settings.use_sharded_seen and checkpoint_dir is None:
-        raise ValueError("use_sharded_seen requires checkpoint_dir")
-    # the sharded bloom-sidecar filter is the DEFAULT scale path when a
-    # checkpoint_dir exists (it also makes the seen set crash-resumable);
-    # the in-memory anti-join remains for checkpoint-less runs
+    # the sharded bloom-sidecar filter needs storage executors can
+    # read, so it is the seen set whenever a checkpoint_dir exists (it
+    # also makes the seen set crash-resumable); a checkpoint-less crawl
+    # has no such storage and keeps the in-memory anti-join
     if settings.dedup and checkpoint_dir is not None:
         from ..plans.seen import SeenFilter
 
@@ -1303,69 +1491,15 @@ def crawl(
         round_metrics = {"round": round_no} if want_metrics else None
 
         if settings.dedup:
-            # only valid rows enter the seen set; parse-failure rows
-            # (href null) pass through to the error gate untouched
-            valid = canon.filter(F.col("errkind") == "")
-            bad = canon.filter(F.col("errkind") != "")
-            hashed = valid.withColumn("url_hash", F.xxhash64("href"))
-            if want_metrics:
-                round_metrics["candidates"] = hashed.count()
-            if seen_filter is not None:
-                novel = seen_filter.novel(hashed).localCheckpoint(eager=True)
-                seen_filter.add(novel.select("url_hash"), assume_novel=True)
-            else:
-                if seen is not None:
-                    hashed = hashed.join(seen, "url_hash", "left_anti")
-                novel = hashed
-                # append-only seen: the batch was already anti-joined
-                # against all prior increments, so no distinct over the
-                # accumulated history is ever needed — each round only
-                # materializes ITS increment (O(batch), not O(total))
-                # lazy: materializes inside the next round's anti-join
-                # (from this round's cached canon), not as its own job
-                new_seen = (
-                    novel.select("url_hash")
-                    .distinct()
-                    .localCheckpoint(eager=False)
-                )
-                seen = new_seen if seen is None else seen.union(new_seen)
-            if want_metrics:
-                n_novel = novel.count()
-                round_metrics["scheduled"] = n_novel
-                round_metrics["dedup_dropped"] = (
-                    round_metrics["candidates"] - n_novel
-                )
-            canon = novel.drop("url_hash").unionByName(bad)
+            canon, seen = _seen_gate(canon, seen_filter, seen, round_metrics)
 
         if settings.respect_robots:
-            # the robots UDF runs in the join stage, one task per
-            # partition of `valid`; the dedup union above adds up its
-            # inputs' partitions
-            canon = canon.coalesce(parallelism)
-            valid = canon.filter(F.col("errkind") == "")
-            bad = canon.filter(F.col("errkind") != "")
-            hosts = valid.select("host", "hostname", "scheme").dropDuplicates(
-                ["host"]
+            canon, denied, robots_df = _robots_step(
+                canon, robots_df, settings, fetcher_spec, round_no
             )
-            if robots_df is not None:
-                hosts = hosts.join(
-                    robots_df.select("host"), "host", "left_anti"
-                )
-            new_robots = fetch_robots(hosts, fetcher_spec, sdict)
-            # lazy checkpoint: under AQE the call runs the hosts
-            # exchange at once; the robots fetch itself (the result
-            # stage) runs in the broadcast job that _robots_gate's
-            # checkpoint call starts. Later rounds read the checkpoint
-            robots_df = (
-                new_robots
-                if robots_df is None
-                else robots_df.unionByName(new_robots)
-            ).localCheckpoint(eager=False)
-            valid, denied = _robots_gate(valid, robots_df, round_no)
             results.append(denied)
             if want_metrics:
                 round_metrics["robots_denied"] = denied.count()
-            canon = valid.unionByName(bad, allowMissingColumns=True)
 
         if carryover is not None:
             # rows deferred by the per-host budget: already
@@ -1373,24 +1507,15 @@ def crawl(
             canon = canon.unionByName(carryover, allowMissingColumns=True)
             carryover = None
 
-        host_counts = (
-            host_stats.select("host", "host_count")
-            if host_stats is not None
-            else None
+        # n_frontier carries over from the loop-exit count of the
+        # previous round — one driver barrier, not two
+        round_parts = (
+            _round_partitions(n_frontier + carry_n, parallelism)
+            if num_partitions is None else num_partitions
         )
-        if num_partitions is None:
-            # n_frontier carries over from the loop-exit count of the
-            # previous round — one driver barrier, not two
-            round_parts = min(
-                parallelism,
-                max(1, (n_frontier + carry_n) // 100 + 1),
-            )
-        else:
-            round_parts = num_partitions
         carry_n = 0
         fetched, errors, deferred = crawl_round(
-            canon, settings, fetcher_spec, round_no, host_counts,
-            round_parts, pre_canonicalized=True,
+            canon, settings, fetcher_spec, round_no, host_stats, round_parts,
         )
         if deferred is not None:
             # count doubles as the materializing action (one job)
@@ -1411,14 +1536,7 @@ def crawl(
             fetched = _impatient_cutoff(fetched, settings).localCheckpoint(
                 eager=True
             )
-
-        done = fetched.filter(~F.col("outcome").isin("redirect", "auth_retry"))
-        results.append(done)
-        results.append(
-            errors.select(*[f.name for f in FRONTIER_FIELDS],
-                          "href", "host", "hostname", "scheme", "path_query",
-                          "outcome", "status", "error_msg", "round")
-        )
+        results.append(_round_results(fetched, errors))
 
         if want_metrics:
             # per-partition lineage: which partition produced how many
@@ -1451,103 +1569,18 @@ def crawl(
                     "%s/metrics/round=%d" % (checkpoint_dir, round_no)
                 )
 
-        # cumulative per-host counters: cross-round crawl order + error
-        # rates feeding the merge-back priority recomputation
-        round_counts = fetched.groupBy("host").agg(
-            F.count("*").alias("host_count_new"),
-            F.count_if(F.col("outcome") == "error").alias("host_err_new"),
-        )
-        if host_stats is None:
-            host_stats = round_counts.select(
-                "host",
-                F.col("host_count_new").alias("host_count"),
-                F.col("host_err_new").alias("host_err"),
-            )
-        else:
-            host_stats = (
-                host_stats.join(round_counts, "host", "outer")
-                .fillna(0)
-                .select(
-                    "host",
-                    (F.col("host_count") + F.col("host_count_new")).alias(
-                        "host_count"
-                    ),
-                    (F.col("host_err") + F.col("host_err_new")).alias(
-                        "host_err"
-                    ),
-                )
-            )
         # lazy, but not free: under AQE the call runs the groupBy's
         # shuffle stage (reading `fetched`) as its own job; only the
         # final aggregate waits for the links broadcast
         # (extract_links) or the next round's host_counts broadcast
-        host_stats = host_stats.localCheckpoint(eager=False)
+        host_stats = _merge_host_stats(host_stats, fetched).localCheckpoint(
+            eager=False
+        )
 
-        # merge-back: redirects + auth retries re-enter the frontier
-        reenq = fetched.filter(
-            F.col("outcome").isin("redirect", "auth_retry")
-        ).select(*[f.name for f in FRONTIER_FIELDS])
-
-        nxt = [reenq]
         if settings.extract_links:
-            # priority recomputation (north rule): base = BFS depth,
-            # plus a deterministic penalty for hosts with observed
-            # errors — error-prone hosts sink in the per-host FIFO
-            # (priority, seq) without starving (penalty < 1)
-            err_penalty = F.round(
-                F.coalesce(F.col("host_err"), F.lit(0))
-                / F.greatest(F.coalesce(F.col("host_count"), F.lit(0)), F.lit(1)),
-                6,
-            )
-            links = (
-                fetched.filter(
-                    (F.col("outcome") == "done")
-                    & (F.col("depth") < settings.max_depth)
-                )
-                .select(
-                    "index",
-                    "depth",
-                    F.explode(
-                        F.from_json("links_json", ArrayType(StringType()))
-                    ).alias("rawurl"),
-                )
-                .withColumn(
-                    "link_host",
-                    F.regexp_extract("rawurl", r"^[a-z+.-]+://([^/]+)", 1),
-                )
-                .join(
-                    F.broadcast(
-                        host_stats.withColumnRenamed("host", "link_host")
-                    ),
-                    "link_host",
-                    "left",
-                )
-                .select(
-                    F.col("index"),
-                    F.col("rawurl"),
-                    F.lit(None).cast(StringType()).alias("base"),
-                    (F.col("depth") + 1).alias("depth"),
-                    F.xxhash64("rawurl").alias("seq"),
-                    ((F.col("depth") + 1).cast("double") + err_penalty).alias(
-                        "priority"
-                    ),
-                    F.lit(settings.max_redirects).alias("redirect_limit"),
-                    F.lit("GET").alias("method"),
-                    F.lit(None).cast(BinaryType()).alias("post"),
-                    F.lit(None).cast(StringType()).alias("authorization"),
-                    F.lit(False).alias("auth_attempt"),
-                    F.lit("[]").alias("cookies_json"),
-                    F.lit("[]").alias("redirect_json"),
-                    F.lit(None).cast(StringType()).alias("customheader"),
-                    F.lit(0).cast(LongType()).alias("elapsed_ms"),
-                )
-                .dropDuplicates(["rawurl"])
-            )
-            nxt.append(links)
-
-        frontier = nxt[0]
-        for extra in nxt[1:]:
-            frontier = frontier.unionByName(extra)
+            frontier = _discovered_links(fetched, settings, host_stats)
+        else:
+            frontier = local_frame(spark, [], FRONTIER_SCHEMA)
         # lazy checkpoint: the links exchange and the host_stats
         # broadcast it joins run at this call, the rest in its first
         # reader (the snapshot commit, else the count below)

@@ -55,6 +55,9 @@ def test_redirect_chains(protocol_results):
     assert r[0]["redirect_info"][0]["url"] == "/get"
     assert r[0]["redirect_info"][-1]["url"] == "/redirect/8"
     assert all(h["status"] == 302 for h in r[0]["redirect_info"])
+    # redirects and auth retries finish inside the fetch stage: no row
+    # ever leaves a round to be merged back into the frontier
+    assert {x["outcome"] for x in r.values()} <= {"done", "error", "timeout"}
     assert len(r[1]["redirect_info"]) == 9
     assert r[1]["redirect_info"][0]["url"] == "http://host0.test/get"
     # relative Location values resolve per WHATWG

@@ -7,8 +7,6 @@ Fixture rules are deterministic per host (sources/fixtures.py:300):
   host2.test -> Disallow: /private3/
 """
 
-import pytest
-
 from minicrawler_spark.config import CrawlSettings
 from minicrawler_spark.functions.robots import (
     parse_robots,
@@ -241,22 +239,21 @@ def test_checkpoint_resume_and_metrics_files(spark, tmp_path):
 
 
 def test_sharded_seen_matches_inmemory(spark, tmp_path):
+    """The two seen paths agree: without a checkpoint_dir the crawl
+    dedups with the in-memory anti-join, with one through the sharded
+    SeenFilter."""
     from minicrawler_spark.sources.fixtures import synthetic_seeds
 
-    base = CrawlSettings(
+    settings = CrawlSettings(
         timeout=600, extract_links=True, dedup=True, max_depth=2,
         max_rounds=4,
     )
-    mem = crawl(spark, synthetic_seeds(3, 2), base)
+    mem = crawl(spark, synthetic_seeds(3, 2), settings)
     urls_mem = sorted(
         r["url"] for r in mem.filter("url is not null").collect()
     )
-    sh = CrawlSettings(
-        timeout=600, extract_links=True, dedup=True, max_depth=2,
-        max_rounds=4, use_sharded_seen=True,
-    )
     shd = crawl(
-        spark, synthetic_seeds(3, 2), sh,
+        spark, synthetic_seeds(3, 2), settings,
         checkpoint_dir=str(tmp_path / "ck2"),
     )
     urls_sh = sorted(
@@ -264,14 +261,6 @@ def test_sharded_seen_matches_inmemory(spark, tmp_path):
     )
     assert urls_mem == urls_sh
     assert len(set(urls_sh)) == len(urls_sh)  # no URL fetched twice
-
-
-def test_sharded_seen_requires_checkpoint(spark):
-    with pytest.raises(ValueError):
-        crawl(
-            spark, ["http://host0.test/page/1"],
-            CrawlSettings(dedup=True, use_sharded_seen=True),
-        )
 
 
 def test_seen_set_survives_resume(spark, tmp_path):
@@ -346,8 +335,10 @@ def test_fixture_crawl_pinned_and_task_budget(spark, tmp_path):
     round runs at most defaultParallelism tasks, and the robots UDF
     runs once per row, and driver-side rows (the seed frontier, the
     per-round metrics write) enter through local_frame, a JVM
-    LocalTableScan, not a Python RDD. 538 is the count with both in
-    place, 560 with the sizing alone and 604 before it (all on the
+    LocalTableScan, not a Python RDD. 461 is the count since the
+    round's next frontier is the discovered links alone (538 while an
+    always-empty merge-back filter over the fetched rows was unioned
+    in), 560 with the sizing alone and 604 before it (all on the
     conftest session's local[8]); a Python stage that fans out to a
     shuffle's partition count again, or a list-built frame, fails
     here."""
@@ -407,4 +398,4 @@ def test_fixture_crawl_pinned_and_task_budget(spark, tmp_path):
     assert digest == "af7d798fce6e91ff", digest
 
     tasks = _stage_tasks(spark, before, after)
-    assert tasks <= 538, tasks
+    assert tasks <= 461, tasks

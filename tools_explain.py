@@ -131,7 +131,7 @@ def main():
         .withColumn("cookies_json", F.lit("[]"))
         .withColumn("redirect_json", F.lit("[]")),
         CrawlSettings(), "minicrawler_spark.sources."
-        "fixtures:fixture_fetcher", 0, None, 8, pre_canonicalized=True,
+        "fixtures:fixture_fetcher", 0, None, 8,
     )
     p = plan_of(fetch_df)
     plans["crawl_fetch_stage"] = p
