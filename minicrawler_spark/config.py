@@ -57,9 +57,11 @@ class CrawlSettings:
                                      # real_time mode (the select()
                                      # multiplexer analogue, crawler.c:
                                      # 1809-1860: many parallel requests on
-                                     # one thread); 1 = serial. Virtual-
-                                     # clock fixture mode has no wall waits
-                                     # to overlap, so it stays serial.
+                                     # one thread); every real-time fetch
+                                     # runs on that one event loop, and 1
+                                     # = serial on it. Virtual-clock
+                                     # fixture mode has no wall waits to
+                                     # overlap, so it stays serial.
 
     def as_dict(self) -> dict:
         return self.__dict__.copy()

@@ -14,6 +14,8 @@ Reimplements the reference's response handling and request generation
 - chunked decode with the trailing-garbage-after-0-chunk truncation
   (http1.c:89-140),
 - tolerant gunzip: keep partial output on truncation (inflate.c),
+- decode_response: the above chained over one raw response, for the
+  side fetches (robots.txt, sitemaps) that need only status and body,
 - Basic + Digest auth (auth.c:16-24, 30-86; digcalc.c) with the
   reference's fixed cnonce and nc for reproducibility, challenge
   parsing with quoted-pair unescaping, digest preferred over basic,
@@ -41,6 +43,7 @@ __all__ = [
     "dispatch_headers",
     "decode_chunked",
     "gunzip_tolerant",
+    "decode_response",
     "basic_auth",
     "digest_auth",
     "parse_auth_challenge",
@@ -260,6 +263,32 @@ def gunzip_tolerant(data: bytes) -> Optional[bytes]:
         return out
     except zlib.error:
         return None
+
+
+def decode_response(raw: bytes):
+    """(status, body) of one raw HTTP/1.x response, or None when it
+    has no head or an unsupported one. The body is de-chunked, cut at
+    Content-Length and gunzipped (b"" when the gzip is corrupt); the
+    status policy stays with the caller."""
+    raw = bytes(raw)
+    head_end = find_head_end(raw)
+    if head_end is None:
+        return None
+    parsed = parse_head(raw[:head_end])
+    if parsed is None:
+        return None
+    status, header_list = parsed
+    state = ResponseState("GET", "")
+    dispatch_headers(state, status, header_list)
+    body = raw[head_end:]
+    if state.chunked:
+        body, _ = decode_chunked(body)
+    elif state.has_contentlen and state.contentlen >= 0:
+        body = body[: state.contentlen]
+    if state.gzipped:
+        unz = gunzip_tolerant(body)
+        body = unz if unz is not None else b""
+    return status, body
 
 
 # ---------------------------------------------------------------------------

@@ -1,21 +1,22 @@
-"""Pure-Python HPACK (RFC 7541) — the fallback codec behind the
-ctypes libnghttp2 binding in sources/http2.py.
+"""Pure-Python HPACK (RFC 7541) — the one HPACK codec of the h2 client
+(sources/http2.py).
 
 The reference only speaks h2 when built against libnghttp2
-(configure.ac HAVE_LIBNGHTTP2; crawler.c:203-224 swaps handlers), and
-round 2 mirrored that: no shared library, no h2, silently. A crawler
-deployment shouldn't lose h2 because one .so is missing, so this
-module implements the decode side in full — static + dynamic table,
-all four literal forms, table-size updates, Huffman strings — and a
-maximally-interoperable encode side (literal-without-indexing, raw
-strings; every server must accept it, RFC 7541 §6.2.2).
+(configure.ac HAVE_LIBNGHTTP2; crawler.c:203-224 swaps handlers). A
+crawler deployment shouldn't lose h2 because one .so is missing, so
+this module implements the decode side in full — static + dynamic
+table, all four literal forms, table-size updates, Huffman strings —
+and a maximally-interoperable encode side (literal-without-indexing,
+raw strings; every server must accept it, RFC 7541 §6.2.2).
 
 Data tables are the RFC's own: the static table is Appendix A
 verbatim; HUFFMAN holds Appendix B's (code, bit-length) per symbol
 0..256 (256 = EOS). Correctness is pinned two ways in
 tests/test_http2.py: the RFC Appendix C vectors byte-for-byte, and a
-differential decode of blocks produced by libnghttp2's deflater
-(dynamic-table + Huffman forms included).
+differential round trip against libnghttp2, the codec the reference
+links (its binding is tests/nghttp2_hpack.py): its deflater's
+dynamic-table + Huffman blocks decode here, and this encoder's blocks
+decode there. The h2 loopback server speaks libnghttp2's HPACK too.
 """
 
 from __future__ import annotations

@@ -1,11 +1,12 @@
 """Minimal HTTP/2 client — the reference's nghttp2 path
 (/root/reference/src/crawler.c:892-1290) rebuilt for the fetcher:
-pure-Python RFC 9113 framing + flow control, with HPACK delegated to
-the same libnghttp2 C library the reference links (ctypes binding of
-the public nghttp2_hd_* codec API) when the shared library is
-loadable, and to the pure-Python RFC 7541 codec (hpack_py.py)
-otherwise — so unlike the reference's `#ifdef HAVE_LIBNGHTTP2`
-build gate, h2 stays available on every deployment.
+pure-Python RFC 9113 framing + flow control over asyncio streams, with
+HPACK from the pure-Python RFC 7541 codec (hpack_py.py). There is one
+codec and one socket driver: h2 is offered on every deployment, with
+no shared-library gate like the reference's `#ifdef HAVE_LIBNGHTTP2`.
+libnghttp2, the codec the reference links, is the test suite's
+differential oracle for hpack_py and the h2 loopback server's encoder
+(tests/nghttp2_hpack.py).
 
 Scope mirrors the reference exactly: one request stream at a time per
 connection (crawler.c keeps a single stream_id per job), stream ids
@@ -30,233 +31,18 @@ multiplexer).
 
 from __future__ import annotations
 
-import ctypes
-import ctypes.util
+import asyncio
 import struct
 import time
 from typing import List, Optional, Tuple
 
-from .hpack_py import (
-    HpackError as _HpackError,
-    PyHpackDecoder as _PyHpackDecoder,
-    PyHpackEncoder as _PyHpackEncoder,
-)
+from .hpack_py import HpackError, PyHpackDecoder, PyHpackEncoder
 
-__all__ = [
-    "hpack_available",
-    "HpackDecoder",
-    "HpackEncoder",
-    "H2Connection",
-    "AsyncH2Connection",
-    "H2Error",
-]
+__all__ = ["H2Connection", "H2Error"]
 
 
 class H2Error(Exception):
     pass
-
-
-# ---------------------------------------------------------------------------
-# HPACK via libnghttp2 (ctypes) — decode needs the full static table +
-# Huffman codes, which the C library owns authoritatively
-# ---------------------------------------------------------------------------
-
-
-class _NV(ctypes.Structure):
-    _fields_ = [
-        ("name", ctypes.POINTER(ctypes.c_uint8)),
-        ("value", ctypes.POINTER(ctypes.c_uint8)),
-        ("namelen", ctypes.c_size_t),
-        ("valuelen", ctypes.c_size_t),
-        ("flags", ctypes.c_uint8),
-    ]
-
-
-_NGHTTP2 = None
-_HD_INFLATE_FINAL = 0x01  # nghttp2.h: NGHTTP2_HD_INFLATE_FINAL
-_HD_INFLATE_EMIT = 0x02   # nghttp2.h: NGHTTP2_HD_INFLATE_EMIT
-
-
-def _load_nghttp2():
-    global _NGHTTP2
-    if _NGHTTP2 is not None:
-        return _NGHTTP2
-    name = ctypes.util.find_library("nghttp2")
-    candidates = [name] if name else []
-    candidates += ["libnghttp2.so.14", "libnghttp2.so"]
-    for cand in candidates:
-        if not cand:
-            continue
-        try:
-            lib = ctypes.CDLL(cand)
-        except OSError:
-            continue
-        try:
-            lib.nghttp2_hd_inflate_new.argtypes = [
-                ctypes.POINTER(ctypes.c_void_p)
-            ]
-            lib.nghttp2_hd_inflate_new.restype = ctypes.c_int
-            lib.nghttp2_hd_inflate_hd2.argtypes = [
-                ctypes.c_void_p, ctypes.POINTER(_NV),
-                ctypes.POINTER(ctypes.c_int),
-                ctypes.POINTER(ctypes.c_uint8), ctypes.c_size_t,
-                ctypes.c_int,
-            ]
-            lib.nghttp2_hd_inflate_hd2.restype = ctypes.c_ssize_t
-            lib.nghttp2_hd_inflate_end_headers.argtypes = [ctypes.c_void_p]
-            lib.nghttp2_hd_inflate_del.argtypes = [ctypes.c_void_p]
-            lib.nghttp2_hd_deflate_new.argtypes = [
-                ctypes.POINTER(ctypes.c_void_p), ctypes.c_size_t
-            ]
-            lib.nghttp2_hd_deflate_new.restype = ctypes.c_int
-            lib.nghttp2_hd_deflate_bound.argtypes = [
-                ctypes.c_void_p, ctypes.POINTER(_NV), ctypes.c_size_t
-            ]
-            lib.nghttp2_hd_deflate_bound.restype = ctypes.c_size_t
-            lib.nghttp2_hd_deflate_hd.argtypes = [
-                ctypes.c_void_p, ctypes.POINTER(ctypes.c_uint8),
-                ctypes.c_size_t, ctypes.POINTER(_NV), ctypes.c_size_t,
-            ]
-            lib.nghttp2_hd_deflate_hd.restype = ctypes.c_ssize_t
-            lib.nghttp2_hd_deflate_del.argtypes = [ctypes.c_void_p]
-        except AttributeError:
-            continue
-        _NGHTTP2 = lib
-        return lib
-    _NGHTTP2 = False
-    return False
-
-
-def hpack_available() -> bool:
-    """h2 is always offerable: HPACK comes from libnghttp2 (ctypes)
-    when the shared library is present — the codec the reference
-    links — with the pure-Python RFC 7541 codec (hpack_py.py) as the
-    fallback, so a deployment without libnghttp2.so no longer loses
-    h2 silently."""
-    return True
-
-
-def HpackDecoder():
-    """Pick the HPACK inflater: libnghttp2 when loadable, else the
-    pure-Python RFC 7541 implementation."""
-    if _load_nghttp2():
-        return _NgHpackDecoder()
-    return _PyHpackDecoderAdapter()
-
-
-def HpackEncoder():
-    if _load_nghttp2():
-        return _NgHpackEncoder()
-    return _PyHpackEncoder()
-
-
-class _PyHpackDecoderAdapter:
-    """hpack_py decoder surfacing malformed blocks as H2Error (what
-    the connection layer and the fetcher's fallback path expect)."""
-
-    def __init__(self):
-        self._d = _PyHpackDecoder()
-
-    def decode(self, block: bytes) -> List[Tuple[bytes, bytes]]:
-        try:
-            return self._d.decode(block)
-        except _HpackError as e:
-            raise H2Error("HPACK: %s" % e)
-
-
-class _NgHpackDecoder:
-    """Streaming inflater over one connection's header blocks."""
-
-    def __init__(self):
-        lib = _load_nghttp2()
-        if not lib:
-            raise H2Error("libnghttp2 not available")
-        self._lib = lib
-        self._p = ctypes.c_void_p()
-        rv = lib.nghttp2_hd_inflate_new(ctypes.byref(self._p))
-        if rv != 0:
-            raise H2Error("nghttp2_hd_inflate_new: %d" % rv)
-
-    def decode(self, block: bytes) -> List[Tuple[bytes, bytes]]:
-        lib = self._lib
-        buf = (ctypes.c_uint8 * len(block)).from_buffer_copy(block)
-        pos, total = 0, len(block)
-        out: List[Tuple[bytes, bytes]] = []
-        nv = _NV()
-        flags = ctypes.c_int(0)
-        while True:
-            rv = lib.nghttp2_hd_inflate_hd2(
-                self._p, ctypes.byref(nv), ctypes.byref(flags),
-                ctypes.cast(
-                    ctypes.byref(buf, pos), ctypes.POINTER(ctypes.c_uint8)
-                ),
-                total - pos, 1,
-            )
-            if rv < 0:
-                raise H2Error("HPACK inflate error %d" % rv)
-            pos += rv
-            if flags.value & _HD_INFLATE_EMIT:
-                out.append(
-                    (
-                        ctypes.string_at(nv.name, nv.namelen),
-                        ctypes.string_at(nv.value, nv.valuelen),
-                    )
-                )
-            if flags.value & _HD_INFLATE_FINAL:
-                lib.nghttp2_hd_inflate_end_headers(self._p)
-                break
-            if rv == 0 and not (flags.value & _HD_INFLATE_EMIT):
-                raise H2Error("HPACK inflate stalled")
-        return out
-
-    def __del__(self):
-        try:
-            if getattr(self, "_p", None):
-                self._lib.nghttp2_hd_inflate_del(self._p)
-        except Exception:
-            pass
-
-
-class _NgHpackEncoder:
-    """Header-block deflater (same C codec; used for requests and by
-    the test server)."""
-
-    def __init__(self, max_table: int = 4096):
-        lib = _load_nghttp2()
-        if not lib:
-            raise H2Error("libnghttp2 not available")
-        self._lib = lib
-        self._p = ctypes.c_void_p()
-        rv = lib.nghttp2_hd_deflate_new(ctypes.byref(self._p), max_table)
-        if rv != 0:
-            raise H2Error("nghttp2_hd_deflate_new: %d" % rv)
-
-    def encode(self, headers: List[Tuple[bytes, bytes]]) -> bytes:
-        lib = self._lib
-        nva = (_NV * len(headers))()
-        keep = []  # hold buffers alive through the call
-        for i, (n, v) in enumerate(headers):
-            nb = ctypes.create_string_buffer(n, len(n))
-            vb = ctypes.create_string_buffer(v, len(v))
-            keep.append((nb, vb))
-            nva[i].name = ctypes.cast(nb, ctypes.POINTER(ctypes.c_uint8))
-            nva[i].value = ctypes.cast(vb, ctypes.POINTER(ctypes.c_uint8))
-            nva[i].namelen = len(n)
-            nva[i].valuelen = len(v)
-            nva[i].flags = 0
-        bound = lib.nghttp2_hd_deflate_bound(self._p, nva, len(headers))
-        out = (ctypes.c_uint8 * bound)()
-        rv = lib.nghttp2_hd_deflate_hd(self._p, out, bound, nva, len(headers))
-        if rv < 0:
-            raise H2Error("HPACK deflate error %d" % rv)
-        return bytes(bytearray(out[:rv]))
-
-    def __del__(self):
-        try:
-            if getattr(self, "_p", None):
-                self._lib.nghttp2_hd_deflate_del(self._p)
-        except Exception:
-            pass
 
 
 # ---------------------------------------------------------------------------
@@ -302,14 +88,18 @@ def pack_frame(ftype: int, flags: int, stream_id: int,
 
 
 class H2Connection:
-    """One HTTP/2 connection over an already-TLS'd (ALPN h2) socket.
-    Single in-flight stream, ids 1,3,5,... (the reference's per-job
-    session shape)."""
+    """One HTTP/2 connection over an asyncio (reader, writer) pair
+    whose TLS session negotiated ALPN h2. Single in-flight stream, ids
+    1,3,5,... (the reference's per-job session shape). Every socket
+    operation is nonblocking on the caller's event loop, so one loop
+    thread carries every h2 session of a partition (the reference's
+    one-thread/many-sockets shape, crawler.c:1809-1860)."""
 
-    def __init__(self, sock):
-        self.sock = sock
-        self.decoder = HpackDecoder()
-        self.encoder = HpackEncoder()
+    def __init__(self, reader, writer):
+        self.reader = reader
+        self.writer = writer
+        self.decoder = PyHpackDecoder()
+        self.encoder = PyHpackEncoder()
         self.next_stream = 1
         self.peer_max_frame = DEFAULT_MAX_FRAME
         # send-side flow control (RFC 9113 §5.2): the connection
@@ -325,47 +115,63 @@ class H2Connection:
         self._pending: list = []  # frames read while awaiting window
         self._recv_debt = 0  # conn-window credit deferred to next use
         self._did_handshake = False
+        self._deadline = 0.0
+        self._write_err: Optional[Exception] = None
 
     # -- raw io --------------------------------------------------------
 
-    def _drive(self, gen, deadline: float):
-        """Sync driver for the sans-io generators: ("send", bytes)
-        writes, ("recv",) reads — each op under the remaining-time
-        budget. AsyncH2Connection drives the SAME generators with
-        asyncio streams; the protocol logic exists once."""
-        try:
-            op = gen.send(None)
-            while True:
-                if time.monotonic() >= deadline:
-                    raise TimeoutError("h2 i/o timed out")
-                self.sock.settimeout(max(0.1, deadline - time.monotonic()))
-                if op[0] == "send":
-                    self.sock.sendall(op[1])
-                    op = gen.send(None)
-                else:
-                    op = gen.send(self.sock.recv(65536))
-        except StopIteration as s:
-            return s.value
+    def _budget(self) -> float:
+        """Remaining time for the next socket operation of the
+        current request."""
+        left = self._deadline - time.monotonic()
+        if left <= 0:
+            raise TimeoutError("h2 i/o timed out")
+        return max(0.1, left)
 
-    def _steps_recv_frame(self):
-        """Yields ("recv",) until one whole frame is buffered; b""
-        from the driver means peer EOF."""
-        while len(self._buf) < 9:
-            data = yield ("recv",)
+    async def _send(self, data: bytes) -> None:
+        budget = self._budget()
+        if self._write_err is not None:
+            return
+        try:
+            self.writer.write(data)
+            async with asyncio.timeout(budget):
+                await self.writer.drain()
+        except ConnectionError as e:
+            # a peer that sends GOAWAY (or its final frame) and closes
+            # fails our next write, e.g. the SETTINGS ack, before we
+            # have read what it sent: keep parsing the frames already
+            # buffered so their verdict wins; this error is reported
+            # only if the stream reaches EOF without one (_fill)
+            self._write_err = e
+            self.closed = True
+
+    async def _fill(self, n: int) -> None:
+        """Read until at least n bytes are buffered."""
+        while len(self._buf) < n:
+            async with asyncio.timeout(self._budget()):
+                data = await self.reader.read(65536)
             if not data:
+                if self._write_err is not None:
+                    raise self._write_err
                 raise H2Error("connection closed mid-frame")
             self._buf += data
+
+    async def _recv_frame(self):
+        """One whole frame: (type, flags, stream id, payload)."""
+        await self._fill(9)
         ln = struct.unpack(">I", b"\x00" + self._buf[:3])[0]
         ftype, flags = self._buf[3], self._buf[4]
         stream_id = struct.unpack(">I", self._buf[5:9])[0] & 0x7FFFFFFF
-        while len(self._buf) < 9 + ln:
-            data = yield ("recv",)
-            if not data:
-                raise H2Error("connection closed mid-frame")
-            self._buf += data
+        await self._fill(9 + ln)
         payload = self._buf[9:9 + ln]
         self._buf = self._buf[9 + ln:]
         return ftype, flags, stream_id, payload
+
+    def _decode(self, block: bytes) -> List[Tuple[bytes, bytes]]:
+        try:
+            return self.decoder.decode(block)
+        except HpackError as e:
+            raise H2Error("HPACK: %s" % e)
 
     # -- session -------------------------------------------------------
 
@@ -414,11 +220,11 @@ class H2Connection:
             raise H2Error("unexpected PUSH_PROMISE")
         return b""
 
-    def _steps_wait_window(self, stream_id: int):
+    async def _wait_window(self, stream_id: int) -> None:
         """Until a WINDOW_UPDATE opens send capacity. Response/stray
         frames that arrive first queue for the response loop."""
         while (min(self.send_window, self.stream_send_window) <= 0):
-            ftype, fflags, sid, payload = yield from self._steps_recv_frame()
+            ftype, fflags, sid, payload = await self._recv_frame()
             if ftype == F_WINDOW_UPDATE and sid == stream_id:
                 if len(payload) >= 4:
                     inc = struct.unpack(">I", payload[:4])[0] & 0x7FFFFFFF
@@ -426,7 +232,7 @@ class H2Connection:
             elif sid == 0:
                 out = self._handle_control(ftype, fflags, sid, payload)
                 if out:
-                    yield ("send", out)
+                    await self._send(out)
             elif ftype == F_RST_STREAM and sid == stream_id:
                 err = struct.unpack(">I", payload[:4])[0]
                 raise H2Error("stream reset by server (error %d)" % err)
@@ -435,31 +241,22 @@ class H2Connection:
 
     # -- request/response ----------------------------------------------
 
-    def request(self, method: str, scheme: str, authority: str,
-                path: str, headers: List[Tuple[str, str]],
-                body: Optional[bytes], deadline: float) -> bytes:
-        """Run one stream to completion; returns the response
-        synthesized as HTTP/1.1-style raw bytes."""
-        return self._drive(
-            self._steps_request(method, scheme, authority, path,
-                                headers, body),
-            deadline,
-        )
-
-    def _steps_request(self, method: str, scheme: str, authority: str,
-                       path: str, headers: List[Tuple[str, str]],
-                       body: Optional[bytes]):
+    async def request(self, method: str, scheme: str, authority: str,
+                      path: str, headers: List[Tuple[str, str]],
+                      body: Optional[bytes], deadline: float) -> bytes:
+        """Run one stream to completion within `deadline`; returns the
+        response synthesized as HTTP/1.1-style raw bytes."""
+        self._deadline = deadline
         if not self._did_handshake:
-            yield ("send", self._handshake_bytes())
+            await self._send(self._handshake_bytes())
         if self._recv_debt:
             # pay back the connection window consumed by previous
             # responses' final DATA frames (see the END_STREAM branch)
-            yield (
-                "send",
+            await self._send(
                 pack_frame(
                     F_WINDOW_UPDATE, 0, 0,
                     struct.pack(">I", self._recv_debt),
-                ),
+                )
             )
             self._recv_debt = 0
         stream_id = self.next_stream
@@ -481,7 +278,7 @@ class H2Connection:
         block = self.encoder.encode(nva)
         flags = FLAG_END_HEADERS | (0 if body else FLAG_END_STREAM)
         self.stream_send_window = self.initial_stream_window
-        yield ("send", pack_frame(F_HEADERS, flags, stream_id, block))
+        await self._send(pack_frame(F_HEADERS, flags, stream_id, block))
         if body:
             # DATA respects BOTH send windows (RFC 9113 §5.2): when
             # exhausted, block on the peer's WINDOW_UPDATE (response
@@ -490,18 +287,17 @@ class H2Connection:
             while off < len(body):
                 avail = min(self.send_window, self.stream_send_window)
                 if avail <= 0:
-                    yield from self._steps_wait_window(stream_id)
+                    await self._wait_window(stream_id)
                     continue
                 n = min(avail, self.peer_max_frame, len(body) - off)
                 chunk = body[off:off + n]
                 off += n
-                yield (
-                    "send",
+                await self._send(
                     pack_frame(
                         F_DATA,
                         FLAG_END_STREAM if off == len(body) else 0,
                         stream_id, chunk,
-                    ),
+                    )
                 )
                 self.send_window -= n
                 self.stream_send_window -= n
@@ -511,7 +307,6 @@ class H2Connection:
         body_parts: List[bytes] = []
         header_frag = b""
         in_headers = False
-        trailer_pass = False
         # END_STREAM lives on the initiating HEADERS frame (RFC 9113
         # §6.2), so it must be remembered across CONTINUATIONs
         headers_end_stream = False
@@ -519,64 +314,36 @@ class H2Connection:
             if self._pending:
                 ftype, fflags, sid, payload = self._pending.pop(0)
             else:
-                ftype, fflags, sid, payload = (
-                    yield from self._steps_recv_frame()
-                )
+                ftype, fflags, sid, payload = await self._recv_frame()
             if in_headers:
                 if ftype != F_CONTINUATION or sid != stream_id:
                     raise H2Error("expected CONTINUATION")
                 header_frag += payload
-                if fflags & FLAG_END_HEADERS:
-                    in_headers = False
-                    decoded = self.decoder.decode(header_frag)
-                    if not trailer_pass:
-                        status, resp_headers = self._split_status(decoded)
-                        if status is not None and 100 <= status < 200:
-                            status = None
-                            resp_headers = []
-                    if headers_end_stream:
-                        break
-                continue
-            if sid == 0:
+            elif sid == 0:
                 out = self._handle_control(ftype, fflags, sid, payload)
                 if out:
-                    yield ("send", out)
+                    await self._send(out)
                 continue
-            if sid != stream_id:
+            elif sid != stream_id:
                 # stray frame for an old/pushed stream: reset it
                 if ftype not in (F_PRIORITY, F_WINDOW_UPDATE, F_RST_STREAM):
-                    yield (
-                        "send",
+                    await self._send(
                         pack_frame(
                             F_RST_STREAM, 0, sid,
                             struct.pack(">I", 0x5),  # STREAM_CLOSED
-                        ),
+                        )
                     )
                 continue
-            if ftype == F_HEADERS:
+            elif ftype == F_HEADERS:
                 frag = payload
                 if fflags & FLAG_PADDED:
                     pad = frag[0]
                     frag = frag[1:len(frag) - pad]
                 if fflags & FLAG_PRIORITY:
                     frag = frag[5:]
-                if fflags & FLAG_END_HEADERS:
-                    decoded = self.decoder.decode(frag)
-                    if status is None:
-                        status, resp_headers = self._split_status(decoded)
-                        # 1xx interim responses precede the real one
-                        if status is not None and 100 <= status < 200:
-                            status = None
-                            resp_headers = []
-                    else:
-                        trailer_pass = True  # trailers: decoded, dropped
-                    if fflags & FLAG_END_STREAM:
-                        break
-                else:
-                    header_frag = frag
-                    in_headers = True
-                    trailer_pass = status is not None
-                    headers_end_stream = bool(fflags & FLAG_END_STREAM)
+                header_frag = frag
+                in_headers = True
+                headers_end_stream = bool(fflags & FLAG_END_STREAM)
             elif ftype == F_DATA:
                 frag = payload
                 if fflags & FLAG_PADDED:
@@ -596,11 +363,11 @@ class H2Connection:
                     # replenish both flow-control windows (RFC 9113
                     # §5.2.2); the reference delegates this to nghttp2
                     inc = struct.pack(">I", len(payload))
-                    yield (
-                        "send",
+                    await self._send(
                         pack_frame(F_WINDOW_UPDATE, 0, 0, inc)
-                        + pack_frame(F_WINDOW_UPDATE, 0, stream_id, inc),
+                        + pack_frame(F_WINDOW_UPDATE, 0, stream_id, inc)
                     )
+                continue
             elif ftype == F_RST_STREAM:
                 err = struct.unpack(">I", payload[:4])[0]
                 raise H2Error("stream reset by server (error %d)" % err)
@@ -608,7 +375,24 @@ class H2Connection:
                 if len(payload) >= 4:
                     inc = struct.unpack(">I", payload[:4])[0] & 0x7FFFFFFF
                     self.stream_send_window += inc
-            # PRIORITY on our stream: ignored
+                continue
+            else:
+                continue  # PRIORITY on our stream: ignored
+            if not (fflags & FLAG_END_HEADERS):
+                continue
+            # a complete header block (HEADERS [+ CONTINUATION...])
+            in_headers = False
+            decoded = self._decode(header_frag)
+            if status is None:
+                status, resp_headers = self._split_status(decoded)
+                # 1xx interim responses precede the real one
+                if status is not None and 100 <= status < 200:
+                    status = None
+                    resp_headers = []
+            # else trailers: decoded (keeps the HPACK table in step),
+            # dropped
+            if headers_end_stream:
+                break
 
         if status is None:
             raise H2Error("stream ended without response headers")
@@ -629,52 +413,6 @@ class H2Connection:
             else:
                 headers.append((n, v))
         return status, headers
-
-    def close(self) -> None:
-        try:
-            self.sock.close()
-        except OSError:
-            pass
-        self.closed = True
-
-
-class AsyncH2Connection(H2Connection):
-    """The same sans-io protocol core driven by asyncio streams — the
-    nonblocking-socket path the fetch-stage multiplexer uses, so one
-    event-loop thread carries every h2 session in a partition (the
-    reference's one-thread/many-sockets shape, crawler.c:1809-1860)."""
-
-    def __init__(self, reader, writer):
-        super().__init__(sock=None)
-        self.reader = reader
-        self.writer = writer
-
-    async def request_async(self, method: str, scheme: str,
-                            authority: str, path: str,
-                            headers: List[Tuple[str, str]],
-                            body: Optional[bytes],
-                            deadline: float) -> bytes:
-        import asyncio
-
-        gen = self._steps_request(method, scheme, authority, path,
-                                  headers, body)
-        try:
-            op = gen.send(None)
-            while True:
-                if time.monotonic() >= deadline:
-                    raise TimeoutError("h2 i/o timed out")
-                budget = max(0.1, deadline - time.monotonic())
-                if op[0] == "send":
-                    self.writer.write(op[1])
-                    await asyncio.wait_for(self.writer.drain(), budget)
-                    op = gen.send(None)
-                else:
-                    data = await asyncio.wait_for(
-                        self.reader.read(65536), budget
-                    )
-                    op = gen.send(data)
-        except StopIteration as s:
-            return s.value
 
     def close(self) -> None:
         try:

@@ -10,8 +10,10 @@ Design decisions, mapped to the reference:
   wire); ALL protocol interpretation — head parse, chunked decode,
   gzip, charset, cookies, redirects — stays in the engine's own
   functions/httpproto.py, exactly like the reference owns its parser.
-- DNS: socket.getaddrinfo, IPv4 results first then IPv6 (the
-  reference launches A and falls back to AAAA, crawler.c:416-436);
+- DNS: /etc/hosts, then the stub resolver on the event loop
+  (sources/adns.py) with getaddrinfo as its fallback; IPv4 results
+  first then IPv6 (the reference launches A and falls back to AAAA,
+  crawler.c:416-436);
   connect failover walks the list with a per-attempt timeout of
   timeout/3 (>6s total) else 2s (crawler.c:1873-1885).
 - TLS: ssl.create_default_context; `insecure=True` disables
@@ -19,20 +21,25 @@ Design decisions, mapped to the reference:
   reference's cert.c:258 (h2 sessions ride sources/http2.py; -2 /
   disable_http2 drops the offer), with a downgrade ladder mirroring
   crawler.c:97-131 on handshake failure.
-- Two execution models, one protocol: the blocking path
-  (http_fetcher) and the asyncio path (http_fetcher_async, used by
-  the fetch-stage multiplexer so one event-loop thread carries every
-  in-flight chain) drive the SAME sans-io framing generators, so
-  their semantics cannot drift.
-- Keep-alive pool: one cached connection per (scheme, host, port) per
-  worker process — the reference's same-host connection reuse
-  (crawler.c:1624-1632; host-partitioning makes hits likely). To keep
-  a reused socket clean the fetcher reads exactly one response using
+- One execution model, the reference's single-threaded select() loop
+  over every socket (crawler.c:1809-1860): http_fetcher_async does
+  every socket operation nonblocking on the caller's event loop, so
+  the fetch-stage multiplexer carries every in-flight chain of a
+  partition on one thread. The blocking entry point http_fetcher
+  (robots, sitemap, direct use) runs the same coroutine on one
+  long-lived event loop per thread.
+- Keep-alive pool: AsyncFetchContext holds idle connections per
+  (scheme, host, port) — the reference's same-host connection reuse
+  (crawler.c:1624-1632; host-partitioning makes hits likely). The
+  fetch stage makes one per event loop; each thread's blocking driver
+  keeps one for its loop's lifetime, so blocking callers reuse
+  connections and h2 sessions across calls. To keep a reused
+  connection clean the fetcher reads exactly one response using
   minimal framing (head end + Content-Length / chunked terminator /
   Connection: close); the RAW bytes still flow to the engine, whose
   own protocol layer remains the semantic authority. Responses that
   declare `Connection: close` (or undelimited bodies) drop the
-  socket.
+  connection.
 - delay_ms is the measured wall time, so the engine's virtual clock
   accumulates real elapsed time; `timeout_s` bounds the whole fetch.
 
@@ -44,8 +51,10 @@ Use from the crawl engine:
 
 from __future__ import annotations
 
+import asyncio
 import socket
 import ssl
+import threading
 import time
 from urllib.parse import urlsplit
 
@@ -61,15 +70,13 @@ _DEFAULTS = {
 
 def configure(timeout_s: float = 5.0, insecure: bool = False,
               ipv6_only: bool = False,
-              disable_http2: bool = False,
-              disable_async_dns: bool = False) -> None:
+              disable_http2: bool = False) -> None:
     """Process-global knobs, set by the engine per fetch stage
     (resolve_fetcher passes the crawl settings through)."""
     _DEFAULTS["timeout_s"] = timeout_s
     _DEFAULTS["insecure"] = insecure
     _DEFAULTS["ipv6_only"] = ipv6_only
     _DEFAULTS["disable_http2"] = disable_http2
-    _DEFAULTS["disable_async_dns"] = disable_async_dns
 
 
 # per-process DNS cache: ONE getaddrinfo per host per TTL window,
@@ -133,10 +140,6 @@ def _order_addrs(infos, port: int):
     if _DEFAULTS["ipv6_only"]:
         return v6
     return v4 + v6
-
-
-def _resolve(host: str, port: int):
-    return _order_addrs(_lookup(host), port)
 
 
 # Health gate for the nonblocking resolver (sources/adns.py): after
@@ -203,7 +206,7 @@ def _etc_hosts_infos(host: str):
 
 
 async def _alookup(host: str):
-    """Async twin of _lookup sharing the same cache. /etc/hosts is
+    """The connector's resolver, sharing _lookup's cache. /etc/hosts is
     consulted FIRST (mtime-cached parse — the stub resolver bypasses
     nsswitch) and dotless names go straight to getaddrinfo (search
     domains live there); other cold lookups go through the
@@ -212,8 +215,6 @@ async def _alookup(host: str):
     with getaddrinfo-in-executor as the fallback for whatever the
     stub resolver can't serve (truncated answers, a dead or
     secondary-only nameserver)."""
-    import asyncio
-
     entry = _DNS_CACHE.get(host)
     now = time.monotonic()
     if entry is not None and now < entry[1]:
@@ -234,11 +235,7 @@ async def _alookup(host: str):
     # Limitation (documented): the stub path queries only the FIRST
     # resolv.conf nameserver; secondaries are reached via the
     # 3-strikes getaddrinfo fallback below.
-    if "." in host.strip(".") and not _ADNS_STATE[
-        "disabled"
-    ] and not _DEFAULTS.get(
-        "disable_async_dns"
-    ):
+    if "." in host.strip(".") and not _ADNS_STATE["disabled"]:
         from . import adns
 
         try:
@@ -273,7 +270,7 @@ async def _alookup(host: str):
 
 def resolved_ip(host: str):
     """First-choice IP (A before AAAA) from the same cached resolution
-    _connect dials first; None when unresolvable. The politeness slot
+    _aopen dials first; None when unresolvable. The politeness slot
     hash keys on this, so shared-IP hosts genuinely share a channel."""
     try:
         infos = _lookup(host)
@@ -282,52 +279,6 @@ def resolved_ip(host: str):
     v4 = [i for i in infos if i[0] == socket.AF_INET]
     chosen = v4 or infos
     return chosen[0][4][0] if chosen else None
-
-
-def _connect(addrs, total_timeout: float):
-    """Non-blocking-style connect failover across resolved addresses:
-    per-attempt timeout = total/3 when total > 6 else 2s
-    (crawler.c:1873-1885)."""
-    per = total_timeout / 3.0 if total_timeout > 6 else 2.0
-    last_err = None
-    for family, stype, proto, _cname, sockaddr in addrs:
-        s = socket.socket(family, stype, proto)
-        s.settimeout(min(per, total_timeout))
-        try:
-            s.connect(sockaddr)
-            return s
-        except OSError as e:
-            last_err = e
-            s.close()
-    # never re-raise a bare TimeoutError here: the engine maps
-    # TimeoutError to the reference's RECVREPLY timeout record, while a
-    # connect-phase failure must stay "Connection failed" (crawler.c
-    # maps connect timeouts to the next-IP/error path, not the timeout
-    # record).
-    raise OSError("connect failed: %s" % (last_err or "no addresses"))
-
-
-# per-process keep-alive pool: (scheme, host, port) -> [sockets].
-# The multiplexed fetch stage runs several chains per host at once
-# (crawl.py run_multiplexed), so the pool holds a small LIFO of idle
-# sockets per key; list append/pop are atomic under the GIL.
-_POOL: dict = {}
-_POOL_PER_KEY = 4
-
-
-def _pool_get(key):
-    try:
-        return _POOL[key].pop()
-    except (KeyError, IndexError):
-        return None
-
-
-def _pool_put(key, sock) -> None:
-    bucket = _POOL.setdefault(key, [])
-    if len(bucket) < _POOL_PER_KEY:
-        bucket.append(sock)
-    else:
-        sock.close()
 
 
 # TLS downgrade ladder (crawler.c:97-131 lower_ssl_protocol): on
@@ -398,13 +349,7 @@ def _tls_rung_get(host):
 
 
 def _h2_enabled() -> bool:
-    if _DEFAULTS["disable_http2"]:
-        return False
-    from .http2 import hpack_available
-
-    # like the reference's HAVE_LIBNGHTTP2 gate: h2 is only offered
-    # when the nghttp2 HPACK codec is loadable
-    return hpack_available()
+    return not _DEFAULTS["disable_http2"]
 
 
 def _tls_context(max_version) -> ssl.SSLContext:
@@ -428,56 +373,12 @@ def _tls_context(max_version) -> ssl.SSLContext:
     return ctx
 
 
-def _open(scheme: str, host: str, port: int, deadline: float,
-          timeout_s: float):
-    addrs = _resolve(host, port)
-    if scheme != "https":
-        return _connect(addrs, timeout_s)
-
-    start = _tls_rung_get(host)
-    rungs = _TLS_LADDER[_TLS_LADDER.index(start):]
-    last_err: Exception = ssl.SSLError("no TLS attempt made")
-    for i, max_ver in enumerate(rungs):
-        if time.monotonic() >= deadline:
-            break
-        sock = _connect(addrs, timeout_s)
-        sock.settimeout(max(0.1, deadline - time.monotonic()))
-        try:
-            tls = _tls_context(max_ver).wrap_socket(
-                sock, server_hostname=host
-            )
-            if max_ver != ssl.TLSVersion.MAXIMUM_SUPPORTED:
-                _TLS_MAX[host] = (
-                    max_ver, time.monotonic() + _TLS_MAX_TTL_S
-                )
-            return tls
-        except ssl.SSLCertVerificationError:
-            sock.close()
-            raise  # downgrading never fixes a bad cert (cert.c:216-351)
-        except (ssl.SSLError, TimeoutError) as e:
-            # walk only on version-negotiation reasons + handshake
-            # timeout (_walks_ladder); plain TCP errors (RST,
-            # refused) and generic SSL errors (bad MAC, truncation)
-            # are hard failures, NOT downgrade signals
-            sock.close()
-            if not _walks_ladder(e):
-                raise
-            last_err = e
-        except ValueError as e:
-            # this OpenSSL build refuses the rung entirely
-            sock.close()
-            last_err = ssl.SSLError(str(e))
-    if isinstance(last_err, TimeoutError):
-        last_err = ssl.SSLError("handshake timed out: %s" % last_err)
-    raise last_err
-
-
 async def _aopen(scheme: str, host: str, port: int, deadline: float,
                  timeout_s: float):
-    """Async twin of _open: nonblocking connect failover + the same
-    TLS downgrade-ladder semantics, returning (reader, writer)."""
-    import asyncio
-
+    """Resolve, then nonblocking connect failover across the
+    addresses (per-attempt timeout = total/3 when total > 6 else 2s,
+    crawler.c:1873-1885) and, for https, the TLS handshake with the
+    downgrade ladder; returns (reader, writer)."""
     addrs = _order_addrs(await _alookup(host), port)
     per = timeout_s / 3.0 if timeout_s > 6 else 2.0
     loop = asyncio.get_running_loop()
@@ -496,8 +397,10 @@ async def _aopen(scheme: str, host: str, port: int, deadline: float,
             except (OSError, asyncio.TimeoutError) as e:
                 last_err = e
                 s.close()
-        # same taxonomy as _connect: connect-phase failures are
-        # "Connection failed", never the timeout record
+        # never re-raise a bare TimeoutError here: the engine maps
+        # TimeoutError to the reference's RECVREPLY timeout record,
+        # while a connect-phase failure must stay "Connection failed"
+        # (crawler.c maps connect timeouts to the next-IP/error path)
         raise OSError("connect failed: %s" % (last_err or "no addresses"))
 
     if scheme != "https":
@@ -528,14 +431,16 @@ async def _aopen(scheme: str, host: str, port: int, deadline: float,
             sock.close()
             raise  # downgrading never fixes a bad cert
         except (ssl.SSLError, TimeoutError) as e:
-            # same trigger set as _open: version-negotiation reasons
-            # and handshake timeouts walk the ladder; everything
-            # else raises
+            # walk only on version-negotiation reasons + handshake
+            # timeout (_walks_ladder); plain TCP errors (RST,
+            # refused) and generic SSL errors (bad MAC, truncation)
+            # are hard failures, NOT downgrade signals
             sock.close()
             if not _walks_ladder(e):
                 raise
             last_err = e
         except ValueError as e:
+            # this OpenSSL build refuses the rung entirely
             sock.close()
             last_err = ssl.SSLError(str(e))
     if isinstance(last_err, TimeoutError):
@@ -543,67 +448,42 @@ async def _aopen(scheme: str, host: str, port: int, deadline: float,
     raise last_err
 
 
-def _read_response(sock, deadline: float, method: str = "GET") -> tuple:
-    """Read exactly one HTTP/1.1 response on a blocking socket (sync
-    driver over _read_response_steps)."""
-    gen = _read_response_steps(deadline, method)
-    try:
-        op = gen.send(None)
-        while True:
-            sock.settimeout(op[1])
-            try:
-                data = sock.recv(65536)
-            except TimeoutError:
-                data = None
-            except OSError:
-                if not op[2]:
-                    raise
-                data = None  # tolerant op (trailer drain): best-effort
-            op = gen.send(data)
-    except StopIteration as s:
-        return s.value
-
-
 async def _aread_response(reader, deadline: float,
                           method: str = "GET") -> tuple:
-    """Async driver over the same framing core."""
-    import asyncio
-
-    gen = _read_response_steps(deadline, method)
-    try:
-        op = gen.send(None)
-        while True:
-            try:
-                data = await asyncio.wait_for(reader.read(65536), op[1])
-            except (TimeoutError, asyncio.TimeoutError):
-                data = None
-            except OSError:
-                if not op[2]:
-                    raise
-                data = None
-            op = gen.send(data)
-    except StopIteration as s:
-        return s.value
-
-
-def _read_response_steps(deadline: float, method: str = "GET"):
-    """Sans-io core of one-HTTP/1.1-response framing. Yields
-    ("recv", max_wait_s, tolerant); the driver sends back bytes
-    (b"" = peer EOF, None = that read timed out). Returns (raw_bytes,
+    """Read exactly one HTTP/1.1 response. Returns (raw_bytes,
     reusable): minimal framing only — the engine's protocol layer is
     the semantic authority; this just finds the response boundary so
-    a kept-alive connection stays clean. Both the blocking and the
-    asyncio fetcher drive THIS generator, so framing can never drift
-    between them."""
+    a kept-alive connection stays clean."""
+
+    async def recv(wait: float, tolerant: bool = False):
+        """Next bytes (b"" = peer EOF), or None if the read timed out
+        or, when tolerant, failed."""
+        try:
+            async with asyncio.timeout(wait):
+                return await reader.read(65536)
+        except TimeoutError:
+            return None
+        except OSError:
+            if not tolerant:
+                raise
+            return None
+
+    async def recv_more():
+        # a trickling server must not extend the fetch past the
+        # deadline: bail with b"" (callers treat it as end-of-body and
+        # return the partial buffer; the engine's elapsed>timeout check
+        # then emits the reference's timeout record)
+        if time.monotonic() >= deadline:
+            return b""
+        return await recv(max(0.1, deadline - time.monotonic())) or b""
+
     buf = b""
     head_end = -1
     body_at = 0
     while head_end < 0 and len(buf) < MAX_RESPONSE:
-        if time.monotonic() >= deadline:
-            return buf, False  # deadline expired: hand back the partial
-        data = yield ("recv", max(0.1, deadline - time.monotonic()), False)
+        data = await recv_more()
         if not data:
-            return buf, False  # EOF, or remaining-time read timed out
+            return buf, False  # EOF, deadline, or a timed-out read
         buf += data
         head_end = buf.find(b"\r\n\r\n")
         if head_end < 0:
@@ -630,16 +510,6 @@ def _read_response_steps(deadline: float, method: str = "GET"):
     if method == "HEAD" or status in ("204", "304"):
         return buf, not conn_close  # bodiless by definition
 
-    def recv_more():
-        # a trickling server must not extend the fetch past the
-        # deadline: bail with b"" (callers treat it as end-of-body and
-        # return the partial buffer; the engine's elapsed>timeout check
-        # then emits the reference's timeout record)
-        if time.monotonic() >= deadline:
-            return b""
-        data = yield ("recv", max(0.1, deadline - time.monotonic()), False)
-        return data or b""
-
     if chunked:
         # walk chunk frames (size lines are positional — scanning for
         # a terminator byte-pattern would false-positive on binary
@@ -662,7 +532,7 @@ def _read_response_steps(deadline: float, method: str = "GET"):
 
         state = chunks_done(buf)
         while state is None and len(buf) < MAX_RESPONSE:
-            data = yield from recv_more()
+            data = await recv_more()
             if not data:
                 return buf, False
             buf += data
@@ -670,13 +540,13 @@ def _read_response_steps(deadline: float, method: str = "GET"):
         if state is True:
             # drain the trailer's final CRLF if it is still in flight
             if not buf.endswith(b"\r\n\r\n"):
-                data = yield ("recv", 0.05, True)  # tolerant: best-effort
+                data = await recv(0.05, tolerant=True)  # best-effort
                 if data:
                     buf += data
             return buf, not conn_close
         # malformed or oversized: read to close
         while len(buf) < MAX_RESPONSE:
-            data = yield from recv_more()
+            data = await recv_more()
             if not data:
                 break
             buf += data
@@ -688,109 +558,32 @@ def _read_response_steps(deadline: float, method: str = "GET"):
             want = None
         if want is not None:
             while len(buf) < min(want, MAX_RESPONSE):
-                data = yield from recv_more()
+                data = await recv_more()
                 if not data:
                     return buf, False
                 buf += data
             return buf, not conn_close
     # no framing -> body is close-delimited
     while len(buf) < MAX_RESPONSE:
-        data = yield from recv_more()
+        data = await recv_more()
         if not data:
             break
         buf += data
     return buf, False
 
 
-def http_fetcher(method: str, url: str, headers: dict, body):
-    """The fetcher-contract entry point."""
-    timeout_s = float(_DEFAULTS["timeout_s"])
-    deadline = time.monotonic() + timeout_s
-    t0 = time.monotonic()
-
-    parts = urlsplit(url)
-    scheme = (parts.scheme or "http").lower()
-    host = parts.hostname or ""
-    port = parts.port or (443 if scheme == "https" else 80)
-    path = parts.path or "/"
-    if parts.query:
-        path += "?" + parts.query
-
-    lines = ["%s %s HTTP/1.1" % (method, path)]
-    for k, v in headers.items():
-        lines.append("%s: %s" % (k, v))
-    req = ("\r\n".join(lines) + "\r\n\r\n").encode("latin-1")
-    if body:
-        req += bytes(body)
-
-    from .http2 import H2Connection, H2Error
-
-    key = (scheme, host, port)
-    authority = headers.get("Host") or host
-    raw = b""
-    reusable = False
-    sock = None
-    pooled = _pool_get(key)
-    for sock, fresh in ((pooled, False), (None, True)):
-        if sock is None:
-            if not fresh:
-                continue  # no pooled connection; go straight to fresh
-            sock = _open(scheme, host, port, deadline, timeout_s)
-            if (
-                scheme == "https"
-                and getattr(sock, "selected_alpn_protocol", lambda: None)()
-                == "h2"
-            ):
-                sock = H2Connection(sock)
-        if isinstance(sock, H2Connection):
-            # ALPN picked h2 (crawler.c:203-224): one stream per hop,
-            # response synthesized back to HTTP/1.1-shape raw bytes
-            try:
-                raw = sock.request(
-                    method, scheme, authority, path,
-                    list(headers.items()),
-                    bytes(body) if body else None, deadline,
-                )
-                reusable = not sock.closed
-            except (H2Error, OSError) as e:
-                sock.close()
-                sock = None
-                if fresh:
-                    if isinstance(e, TimeoutError):
-                        raise
-                    raise OSError("h2: %s" % e)
-                continue  # stale pooled session; retry fresh
-            break
-        try:
-            sock.settimeout(max(0.1, deadline - time.monotonic()))
-            sock.sendall(req)
-            raw, reusable = _read_response(sock, deadline, method)
-        except OSError:
-            sock.close()
-            sock = None
-            if fresh:
-                raise
-            continue  # stale pooled socket; retry once on a fresh one
-        if raw or fresh:
-            break
-        sock.close()  # pooled socket returned nothing: retry fresh
-        sock = None
-    if sock is not None:
-        if reusable:
-            _pool_put(key, sock)
-        else:
-            sock.close()
-
-    delay_ms = int((time.monotonic() - t0) * 1000)
-    return raw, delay_ms
+# idle connections kept per (scheme, host, port): the multiplexed
+# fetch stage runs several chains per host at once
+_POOL_PER_KEY = 4
 
 
 class AsyncFetchContext:
-    """Per-event-loop keep-alive pool for http_fetcher_async. asyncio
-    transports are bound to their loop, so unlike the sync _POOL this
-    cannot be process-global: the fetch stage creates one per
-    asyncio.run and closes it when the batch's loop ends. Entries are
-    (reader, writer) pairs or AsyncH2Connection sessions."""
+    """Keep-alive pool for http_fetcher_async: (scheme, host, port) ->
+    a small LIFO of idle (reader, writer) pairs or H2Connection
+    sessions. asyncio transports are bound to their event loop, so a
+    context serves one loop: the fetch stage creates one per batch's
+    loop and closes it when the batch ends; each thread's blocking
+    driver keeps one for as long as its loop lives."""
 
     def __init__(self):
         self._pool: dict = {}
@@ -814,7 +607,7 @@ class AsyncFetchContext:
             if isinstance(entry, tuple):
                 entry[1].close()  # (reader, writer)
             else:
-                entry.close()     # AsyncH2Connection
+                entry.close()     # H2Connection
         except Exception:
             pass
 
@@ -827,16 +620,12 @@ class AsyncFetchContext:
 
 async def http_fetcher_async(method: str, url: str, headers: dict,
                              body, ctx: AsyncFetchContext = None):
-    """Coroutine twin of http_fetcher for the fetch-stage multiplexer:
-    identical request bytes and identical framing (both drive the SAME
-    sans-io cores — _read_response_steps and H2Connection's step
-    generators), but every socket operation is nonblocking on the
-    caller's event loop, so one loop thread carries all in-flight
-    chains (crawler.c:1809-1860's one-thread/many-sockets shape; only
-    DNS cache misses touch asyncio's resolver executor)."""
-    import asyncio
-
-    from .http2 import AsyncH2Connection, H2Error
+    """The fetcher contract as a coroutine: every socket operation is
+    nonblocking on the caller's event loop, so one loop thread carries
+    all in-flight chains (crawler.c:1809-1860's one-thread/many-sockets
+    shape; only DNS cache misses touch asyncio's resolver executor).
+    Connections come from and return to `ctx` when one is given."""
+    from .http2 import H2Connection, H2Error
 
     timeout_s = float(_DEFAULTS["timeout_s"])
     deadline = time.monotonic() + timeout_s
@@ -875,12 +664,15 @@ async def http_fetcher_async(method: str, url: str, headers: dict,
                 ssl_obj is not None
                 and ssl_obj.selected_alpn_protocol() == "h2"
             ):
-                conn = AsyncH2Connection(reader, writer)
+                # ALPN picked h2 (crawler.c:203-224): one stream per
+                # hop, response synthesized back to HTTP/1.1-shape raw
+                # bytes
+                conn = H2Connection(reader, writer)
             else:
                 conn = (reader, writer)
-        if isinstance(conn, AsyncH2Connection):
+        if isinstance(conn, H2Connection):
             try:
-                raw = await conn.request_async(
+                raw = await conn.request(
                     method, scheme, authority, path,
                     list(headers.items()),
                     bytes(body) if body else None, deadline,
@@ -898,9 +690,8 @@ async def http_fetcher_async(method: str, url: str, headers: dict,
         reader, writer = conn
         try:
             writer.write(req)
-            await asyncio.wait_for(
-                writer.drain(), max(0.1, deadline - time.monotonic())
-            )
+            async with asyncio.timeout(max(0.1, deadline - time.monotonic())):
+                await writer.drain()
             raw, reusable = await _aread_response(reader, deadline, method)
         except OSError:
             writer.close()
@@ -920,3 +711,29 @@ async def http_fetcher_async(method: str, url: str, headers: dict,
 
     delay_ms = int((time.monotonic() - t0) * 1000)
     return raw, delay_ms
+
+
+# the blocking driver's per-thread state: (event loop, keep-alive
+# pool), created on a thread's first blocking fetch
+_THREAD = threading.local()
+
+
+def _thread_driver():
+    """This thread's long-lived event loop and its AsyncFetchContext."""
+    driver = getattr(_THREAD, "driver", None)
+    if driver is None:
+        driver = _THREAD.driver = (
+            asyncio.new_event_loop(), AsyncFetchContext()
+        )
+    return driver
+
+
+def http_fetcher(method: str, url: str, headers: dict, body):
+    """The blocking fetcher-contract entry point: runs
+    http_fetcher_async to completion on this thread's event loop, so
+    robots, sitemap and direct callers share the one socket driver and
+    reuse the thread's keep-alive connections and h2 sessions."""
+    loop, ctx = _thread_driver()
+    return loop.run_until_complete(
+        http_fetcher_async(method, url, headers, body, ctx=ctx)
+    )

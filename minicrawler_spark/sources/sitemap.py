@@ -112,15 +112,7 @@ def _fetch_level(spark: SparkSession, sm_urls: List[str],
     def stage(batches: Iterator):
         import pandas as pd
 
-        from ..functions.httpproto import (
-            DEFAULT_AGENT,
-            decode_chunked,
-            dispatch_headers,
-            find_head_end,
-            gunzip_tolerant,
-            parse_head,
-            ResponseState,
-        )
+        from ..functions.httpproto import DEFAULT_AGENT, decode_response
         from ..streaming.crawl import resolve_fetcher
 
         fetcher = resolve_fetcher(sdict["fetcher"], sdict)
@@ -134,25 +126,12 @@ def _fetch_level(spark: SparkSession, sm_urls: List[str],
                 )
             except Exception as e:
                 return [(url, "error", str(e), None, None, -1)]
-            head_end = find_head_end(bytes(raw))
-            if head_end is None:
-                return [(url, "error", "no response head", None, None, -1)]
-            parsed = parse_head(bytes(raw[:head_end]))
-            if parsed is None:
+            decoded = decode_response(raw)
+            if decoded is None:
                 return [(url, "error", "bad response head", None, None, -1)]
-            status, header_list = parsed
+            status, body = decoded
             if not (200 <= status < 300):
                 return [(url, "error", "status", None, None, status)]
-            state = ResponseState("GET", "")
-            dispatch_headers(state, status, header_list)
-            body = bytes(raw[head_end:])
-            if state.chunked:
-                body, _ = decode_chunked(body)
-            elif state.has_contentlen and state.contentlen >= 0:
-                body = body[: state.contentlen]
-            if state.gzipped:
-                unz = gunzip_tolerant(body)
-                body = unz if unz is not None else b""
             try:
                 kind, items = parse_sitemap(body)
             except ValueError as e:

@@ -197,11 +197,14 @@ def resolve_fetcher(spec: str, settings: Optional[dict] = None) -> Callable:
 def resolve_async_fetcher(spec: str) -> Optional[Callable]:
     """The async twin of a fetcher spec, if the module provides one:
     `module:func` -> module.func_async (a coroutine function taking
-    the same (method, url, headers, body)). The built-in
-    sources.httpfetch provides it, so the multiplexed fetch stage runs
-    pure asyncio socket I/O — one event-loop thread per partition —
-    instead of a thread per in-flight chain. Fetchers without an
-    async twin fall back to the loop's executor (bounded, documented)."""
+    the same (method, url, headers, body) plus a `ctx` keyword, the
+    module's AsyncFetchContext or None). The built-in
+    sources.httpfetch provides it: its blocking http_fetcher is only a
+    driver for it, so in real_time mode every fetch stage runs pure
+    asyncio socket I/O — one event-loop thread per partition, at any
+    fetch_concurrency — instead of a thread per in-flight chain.
+    Fetchers without an async twin fall back to the loop's executor
+    (bounded, documented)."""
     mod_name, _, fn = spec.partition(":")
     mod = importlib.import_module(mod_name)
     return getattr(mod, fn + "_async", None)
@@ -273,6 +276,8 @@ def _make_fetch_stage(settings: dict, round_no: int):
     GOTIP..DOWNLOADED plus finish() (crawler.c:1473-1518)."""
 
     def fetch_stage(batches):
+        import time
+
         import pandas as pd
         from pyspark import TaskContext
 
@@ -370,24 +375,17 @@ def _make_fetch_stage(settings: dict, round_no: int):
             t["done"] = max(max(t.values()), elapsed, 1)
             o["timing_json"] = json.dumps(t)
 
-        if settings.get("real_time"):
-            import time as _time
-
-            stage_t0 = _time.monotonic()
-        else:
-            stage_t0 = None
-
         def process_steps(row):
             """The per-job state machine as a sans-io GENERATOR: it
             yields ("fetch", method, href, headers, post) for every
             hop and receives (raw, delay_ms) via .send() — or the
             fetcher's exception via .throw(). The finished record is
             the generator's return value. Pure protocol logic, no
-            sockets, no clocks: the sync driver runs it against the
-            blocking fetcher, the asyncio driver awaits the fetcher
-            coroutine — one state machine, two execution models (the
-            reference's event-driven job states, crawler.c:341-604
-            dispatch)."""
+            sockets, no clocks: on the virtual clock the sync driver
+            runs it against the blocking fetcher; in real_time mode
+            the asyncio driver awaits the fetcher coroutine — one
+            state machine, two execution models (the reference's
+            event-driven job states, crawler.c:341-604 dispatch)."""
             o = base_out(row)
             elapsed = int(row["elapsed_ms"]) + int(row["wait_ms"])
             # politeness wait blew the budget -> never started
@@ -661,16 +659,10 @@ def _make_fetch_stage(settings: dict, round_no: int):
             set_timing(o, elapsed, True, True, scheme == "https")
             return o
 
-        def process(row, wall_wait: bool = True) -> dict:
-            """Sync driver over process_steps: blocking politeness
-            wait + blocking fetcher (fixture/virtual-clock mode and
-            the serial escape hatch)."""
-            if wall_wait and stage_t0 is not None:
-                import time as _time
-
-                lag = stage_t0 + int(row["wait_ms"]) / 1000.0 - _time.monotonic()
-                if lag > 0:
-                    _time.sleep(lag)
+        def process(row) -> dict:
+            """Sync driver over process_steps with the blocking fetcher:
+            virtual-clock mode, and the executor fallback for a
+            real-time fetcher without an async twin."""
             g = process_steps(row)
             try:
                 req = next(g)
@@ -686,9 +678,10 @@ def _make_fetch_stage(settings: dict, round_no: int):
 
         # -- the select() multiplexer analogue (crawler.c:1809-1860) --
         # In real_time mode each job's hop chain runs as a coroutine on
-        # ONE event loop per partition: politeness lags are awaited on
-        # the loop (costing no I/O slot) and up to fetch_concurrency
-        # chains are in flight at once. With an async-capable fetcher
+        # ONE event loop per batch: politeness lags (relative to the
+        # stage start) are awaited on the loop, costing no I/O slot,
+        # and up to fetch_concurrency chains are in flight at once (1
+        # = serial on the same loop). With an async-capable fetcher
         # (sources.httpfetch provides http_fetcher_async) the socket
         # I/O itself is nonblocking on the loop — one thread, many
         # sockets, the reference's model for real — so K slow hosts
@@ -696,15 +689,15 @@ def _make_fetch_stage(settings: dict, round_no: int):
         # without an async twin fall back to the loop's executor. The
         # virtual-clock fixture mode has no wall waits to overlap and
         # stays serial (deterministic, zero loop overhead).
+        real_time = bool(settings.get("real_time"))
         k_inflight = int(settings.get("fetch_concurrency") or 1)
-        use_mux = bool(settings.get("real_time")) and k_inflight > 1
         afetcher = (
-            resolve_async_fetcher(settings["fetcher"]) if use_mux else None
+            resolve_async_fetcher(settings["fetcher"]) if real_time else None
         )
+        stage_t0 = time.monotonic()
 
         def run_multiplexed(rows):
             import asyncio
-            import time as _time
 
             async def drive_async(row, actx):
                 g = process_steps(row)
@@ -721,17 +714,13 @@ def _make_fetch_stage(settings: dict, round_no: int):
                     return s.value
 
             async def chain(row, loop, sem, actx):
-                if stage_t0 is not None:
-                    lag = (
-                        stage_t0 + int(row["wait_ms"]) / 1000.0
-                        - _time.monotonic()
-                    )
-                    if lag > 0:
-                        await asyncio.sleep(lag)  # schedule wait, slot-free
+                lag = stage_t0 + int(row["wait_ms"]) / 1000.0 - time.monotonic()
+                if lag > 0:
+                    await asyncio.sleep(lag)  # schedule wait, slot-free
                 async with sem:
                     if afetcher is not None:
                         return await drive_async(row, actx)
-                    return await loop.run_in_executor(None, process, row, False)
+                    return await loop.run_in_executor(None, process, row)
 
             async def main():
                 loop = asyncio.get_running_loop()
@@ -740,8 +729,7 @@ def _make_fetch_stage(settings: dict, round_no: int):
                 if afetcher is not None:
                     # per-event-loop fetch context (connection pool
                     # etc.) from the fetcher's own module — asyncio
-                    # transports are loop-bound, so it cannot be
-                    # process-global like the sync pool
+                    # transports are loop-bound
                     ctx_cls = getattr(
                         importlib.import_module(
                             settings["fetcher"].partition(":")[0]
@@ -764,7 +752,7 @@ def _make_fetch_stage(settings: dict, round_no: int):
             if len(pdf) == 0:
                 continue
             rows = pdf.to_dict("records")
-            if use_mux and len(rows) > 1:
+            if real_time:
                 recs = run_multiplexed(rows)
             else:
                 recs = [process(r) for r in rows]
@@ -848,15 +836,7 @@ def fetch_robots(hosts: DataFrame, fetcher_spec: str, settings: dict) -> DataFra
     def stage(batches):
         import pandas as pd
 
-        from ..functions.httpproto import (
-            DEFAULT_AGENT,
-            decode_chunked,
-            dispatch_headers,
-            find_head_end,
-            gunzip_tolerant,
-            parse_head,
-            ResponseState,
-        )
+        from ..functions.httpproto import DEFAULT_AGENT, decode_response
         from ..functions.robots import parse_robots
 
         fetcher = resolve_fetcher(settings["fetcher"], settings)
@@ -878,28 +858,15 @@ def fetch_robots(hosts: DataFrame, fetcher_spec: str, settings: dict) -> DataFra
                 )
             except Exception:
                 return deny_all, None, -1
-            head_end = find_head_end(bytes(raw))
-            if head_end is None:
+            decoded = decode_response(raw)
+            if decoded is None:
                 return deny_all, None, -1
-            parsed = parse_head(bytes(raw[:head_end]))
-            if parsed is None:
-                return deny_all, None, -1
-            status, header_list = parsed
+            status, body = decoded
             if status >= 500:
                 return deny_all, None, status
             if not (200 <= status < 300):
                 # 3xx/4xx -> allow-all (RFC 9309 §2.3.1.2) in both modes
                 return "[]", None, status
-            state = ResponseState("GET", "")
-            dispatch_headers(state, status, header_list)
-            body = bytes(raw[head_end:])
-            if state.chunked:
-                body, _ = decode_chunked(body)
-            elif state.has_contentlen and state.contentlen >= 0:
-                body = body[: state.contentlen]
-            if state.gzipped:
-                unz = gunzip_tolerant(body)
-                body = unz if unz is not None else b""
             # agent product token = text before '/' (e.g. minicrawler/5.2.7)
             token = agent.split("/", 1)[0].lower()
             rules, delay_s = parse_robots(

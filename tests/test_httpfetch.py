@@ -4,6 +4,7 @@ connect, request bytes on a real socket, raw response back through the
 engine's own protocol layer (head parse, redirects, cookies, gzip,
 chunked, html2text spans)."""
 
+import asyncio
 import gzip
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -165,14 +166,15 @@ def test_keepalive_reuse(server):
     crawler.c:1624-1632 reuse); the second response is clean."""
     from minicrawler_spark.sources import httpfetch
 
-    httpfetch._POOL.clear()
+    loop, ctx = httpfetch._thread_driver()  # this thread's pool
+    loop.run_until_complete(ctx.close())
     r1, _ = http_fetcher("GET", server + "/ok", {"Host": "x"}, None)
     assert r1.endswith(b"plain body")
-    assert len(httpfetch._POOL) == 1
-    pooled = next(iter(httpfetch._POOL.values()))[0]
+    assert len(ctx._pool) == 1
+    pooled = next(iter(ctx._pool.values()))[0]
     r2, _ = http_fetcher("GET", server + "/gzip", {"Host": "x"}, None)
     assert r2.startswith(b"HTTP/1.1 200")
-    assert next(iter(httpfetch._POOL.values()))[0] is pooled  # same socket
+    assert next(iter(ctx._pool.values()))[0] is pooled  # same connection
     # chunked framing keeps the socket clean too
     r3, _ = http_fetcher("GET", server + "/chunked", {"Host": "x"}, None)
     assert b"chunked" in r3.lower()
@@ -183,11 +185,13 @@ def test_keepalive_reuse(server):
 def test_stale_pooled_socket_retries_fresh(server):
     from minicrawler_spark.sources import httpfetch
 
-    httpfetch._POOL.clear()
+    loop, ctx = httpfetch._thread_driver()
+    loop.run_until_complete(ctx.close())
     r1, _ = http_fetcher("GET", server + "/ok", {"Host": "x"}, None)
-    # kill the pooled socket behind the fetcher's back
-    key, bucket = next(iter(httpfetch._POOL.items()))
-    bucket[0].close()
+    # kill the pooled connection behind the fetcher's back
+    key, bucket = next(iter(ctx._pool.items()))
+    _reader, writer = bucket[0]
+    writer.close()
     r2, _ = http_fetcher("GET", server + "/ok", {"Host": "x"}, None)
     assert r2.endswith(b"plain body")
 
@@ -317,7 +321,6 @@ def test_etc_hosts_wins_over_stub_resolver(monkeypatch, tmp_path):
     monkeypatch.setattr(
         hf, "_ADNS_STATE", {"fails": 0, "disabled": False}
     )
-    monkeypatch.setitem(hf._DEFAULTS, "disable_async_dns", False)
     hf._DNS_CACHE.clear()
     try:
         infos = asyncio.run(hf._alookup("PINNED.example.test"))
@@ -340,58 +343,84 @@ def test_etc_hosts_wins_over_stub_resolver(monkeypatch, tmp_path):
         hf._DNS_CACHE.clear()
 
 
+def _fake_tls_seam(monkeypatch, hf, handshake):
+    """Fake the TLS handshake at the asyncio seam _aopen uses
+    (asyncio.open_connection with ssl=): every attempt records its
+    rung's max version, then `handshake(max_ver)` raises to fail it
+    or returns to succeed, with the plain TCP stream standing in for
+    the TLS one. The real per-rung context is still built."""
+    attempts = []
+    real_ctx = hf._tls_context
+    real_open = asyncio.open_connection
+
+    def fake_ctx(max_ver):
+        real_ctx(max_ver)
+        return max_ver
+
+    async def fake_open(*args, ssl=None, server_hostname=None, sock=None,
+                        **kw):
+        if ssl is None:
+            return await real_open(*args, sock=sock, **kw)
+        attempts.append(ssl)
+        try:
+            handshake(ssl)
+        except Exception:
+            sock.close()  # asyncio closes the socket of a failed handshake
+            raise
+        return await real_open(sock=sock)
+
+    monkeypatch.setattr(hf, "_tls_context", fake_ctx)
+    monkeypatch.setattr(asyncio, "open_connection", fake_open)
+    hf._TLS_MAX.clear()
+    return attempts
+
+
+def _aopen_https(hf, port):
+    """One _aopen to 127.0.0.1:port over https; closes what it opens."""
+    import time as _time
+
+    async def go():
+        _reader, writer = await hf._aopen(
+            "https", "127.0.0.1", port, _time.monotonic() + 5, 5.0
+        )
+        writer.close()
+
+    asyncio.run(go())
+
+
+def _listener():
+    lsock = __import__("socket").socket()
+    lsock.bind(("127.0.0.1", 0))
+    lsock.listen(4)
+    return lsock, lsock.getsockname()[1]
+
+
 def test_tls_downgrade_ladder(monkeypatch):
     """crawler.c:97-131: a handshake failure at the top rung retries
     with max_proto stepped down one version; success is remembered
     per host so the ladder is not re-walked."""
     import ssl as _ssl
+    import time as _time
 
     from minicrawler_spark.sources import httpfetch as hf
 
-    attempts = []
-    real_ctx = hf._tls_context
+    def handshake(max_ver):
+        if max_ver == _ssl.TLSVersion.MAXIMUM_SUPPORTED:
+            err = _ssl.SSLError("fake 1.3 version reject")
+            err.reason = "UNSUPPORTED_PROTOCOL"
+            raise err
 
-    class _FakeTLS:
-        def __init__(self, sock):
-            self._sock = sock
-
-        def __getattr__(self, k):
-            return getattr(self._sock, k)
-
-    def fake_ctx(max_ver):
-        ctx = real_ctx(max_ver)
-
-        class W:
-            def wrap_socket(self, sock, server_hostname=None):
-                attempts.append(max_ver)
-                if max_ver == _ssl.TLSVersion.MAXIMUM_SUPPORTED:
-                    err = _ssl.SSLError("fake 1.3 version reject")
-                    err.reason = "UNSUPPORTED_PROTOCOL"
-                    raise err
-                return _FakeTLS(sock)
-
-        return W()
-
-    monkeypatch.setattr(hf, "_tls_context", fake_ctx)
-    hf._TLS_MAX.clear()
-
-    lsock = __import__("socket").socket()
-    lsock.bind(("127.0.0.1", 0))
-    lsock.listen(4)
-    port = lsock.getsockname()[1]
+    attempts = _fake_tls_seam(monkeypatch, hf, handshake)
+    lsock, port = _listener()
     try:
-        import time as _time
-
-        s = hf._open("https", "127.0.0.1", port, _time.monotonic() + 5, 5.0)
-        s.close()
+        _aopen_https(hf, port)
         assert attempts == [
             _ssl.TLSVersion.MAXIMUM_SUPPORTED,
             _ssl.TLSVersion.TLSv1_2,
         ]
         assert hf._TLS_MAX["127.0.0.1"][0] == _ssl.TLSVersion.TLSv1_2
         # second open starts at the remembered rung — no re-walk
-        s = hf._open("https", "127.0.0.1", port, _time.monotonic() + 5, 5.0)
-        s.close()
+        _aopen_https(hf, port)
         assert attempts[-1] == _ssl.TLSVersion.TLSv1_2
         assert len(attempts) == 3
         # ADVICE r2: the rung EXPIRES — a transient failure must not
@@ -415,44 +444,18 @@ def test_unexpected_eof_walks_tls_ladder(monkeypatch):
     SSL_ERROR_SYSCALL ret==0 path downgrades there) — abrupt EOF
     during the handshake must walk the ladder, unlike an RST."""
     import ssl as _ssl
-    import time as _time
 
     from minicrawler_spark.sources import httpfetch as hf
 
-    attempts = []
-    real_ctx = hf._tls_context
+    def handshake(max_ver):
+        if max_ver in (_ssl.TLSVersion.MAXIMUM_SUPPORTED,
+                       _ssl.TLSVersion.TLSv1_2):
+            raise _ssl.SSLEOFError(8, "EOF occurred in violation of protocol")
 
-    class _FakeTLS:
-        def __init__(self, sock):
-            self._sock = sock
-
-        def __getattr__(self, k):
-            return getattr(self._sock, k)
-
-    def fake_ctx(max_ver):
-        real_ctx(max_ver)
-
-        class W:
-            def wrap_socket(self, sock, server_hostname=None):
-                attempts.append(max_ver)
-                if max_ver in (_ssl.TLSVersion.MAXIMUM_SUPPORTED,
-                               _ssl.TLSVersion.TLSv1_2):
-                    raise _ssl.SSLEOFError(
-                        8, "EOF occurred in violation of protocol"
-                    )
-                return _FakeTLS(sock)
-
-        return W()
-
-    monkeypatch.setattr(hf, "_tls_context", fake_ctx)
-    hf._TLS_MAX.clear()
-    lsock = __import__("socket").socket()
-    lsock.bind(("127.0.0.1", 0))
-    lsock.listen(4)
-    port = lsock.getsockname()[1]
+    attempts = _fake_tls_seam(monkeypatch, hf, handshake)
+    lsock, port = _listener()
     try:
-        s = hf._open("https", "127.0.0.1", port, _time.monotonic() + 5, 5.0)
-        s.close()
+        _aopen_https(hf, port)
         assert attempts == [
             _ssl.TLSVersion.MAXIMUM_SUPPORTED,
             _ssl.TLSVersion.TLSv1_2,
@@ -470,33 +473,17 @@ def test_tcp_reset_does_not_walk_tls_ladder(monkeypatch):
     downgrade signal — an attacker-injected RST must not pin the host
     to a legacy TLS version."""
     import ssl as _ssl
-    import time as _time
 
     from minicrawler_spark.sources import httpfetch as hf
 
-    attempts = []
-    real_ctx = hf._tls_context
+    def handshake(max_ver):
+        raise ConnectionResetError("injected RST")
 
-    def fake_ctx(max_ver):
-        real_ctx(max_ver)
-
-        class W:
-            def wrap_socket(self, sock, server_hostname=None):
-                attempts.append(max_ver)
-                raise ConnectionResetError("injected RST")
-
-        return W()
-
-    monkeypatch.setattr(hf, "_tls_context", fake_ctx)
-    hf._TLS_MAX.clear()
-
-    lsock = __import__("socket").socket()
-    lsock.bind(("127.0.0.1", 0))
-    lsock.listen(4)
-    port = lsock.getsockname()[1]
+    attempts = _fake_tls_seam(monkeypatch, hf, handshake)
+    lsock, port = _listener()
     try:
         with pytest.raises(ConnectionResetError):
-            hf._open("https", "127.0.0.1", port, _time.monotonic() + 5, 5.0)
+            _aopen_https(hf, port)
         assert attempts == [_ssl.TLSVersion.MAXIMUM_SUPPORTED]
         assert hf._TLS_MAX == {}
     finally:
@@ -509,41 +496,23 @@ def test_generic_ssl_error_does_not_walk_tls_ladder(monkeypatch):
     ladder. A generic SSLError (truncated record, bad MAC, reason
     None) is a hard failure — no rung change, no _TLS_MAX pin."""
     import ssl as _ssl
-    import time as _time
-
-    import pytest as _pytest
 
     from minicrawler_spark.sources import httpfetch as hf
 
-    real_ctx = hf._tls_context
     for reason in ("DECRYPTION_FAILED_OR_BAD_RECORD_MAC",
                    "CERTIFICATE_VERIFY_FAILED", None):
-        attempts = []
 
-        def fake_ctx(max_ver, _attempts=attempts, _reason=reason):
-            real_ctx(max_ver)
+        def handshake(max_ver, _reason=reason):
+            err = _ssl.SSLError("generic failure")
+            if _reason is not None:
+                err.reason = _reason
+            raise err
 
-            class W:
-                def wrap_socket(self, sock, server_hostname=None):
-                    _attempts.append(max_ver)
-                    err = _ssl.SSLError("generic failure")
-                    if _reason is not None:
-                        err.reason = _reason
-                    raise err
-
-            return W()
-
-        monkeypatch.setattr(hf, "_tls_context", fake_ctx)
-        hf._TLS_MAX.clear()
-        lsock = __import__("socket").socket()
-        lsock.bind(("127.0.0.1", 0))
-        lsock.listen(4)
-        port = lsock.getsockname()[1]
+        attempts = _fake_tls_seam(monkeypatch, hf, handshake)
+        lsock, port = _listener()
         try:
-            with _pytest.raises(_ssl.SSLError):
-                hf._open(
-                    "https", "127.0.0.1", port, _time.monotonic() + 5, 5.0
-                )
+            with pytest.raises(_ssl.SSLError):
+                _aopen_https(hf, port)
             assert attempts == [_ssl.TLSVersion.MAXIMUM_SUPPORTED], reason
             assert hf._TLS_MAX == {}
         finally:
@@ -803,8 +772,8 @@ def test_multiplexed_fetch_uses_no_executor_threads(monkeypatch):
 
 
 def test_fetch_concurrency_1_stays_serial():
-    """fetch_concurrency=1 disables the multiplexer (control for the
-    overlap test; also the documented escape hatch)."""
+    """fetch_concurrency=1 runs the chains one at a time on the
+    multiplexer's loop (control for the overlap test)."""
     import time as _time
 
     servers, rows = _slow_server_rows(3, 1, 0.4)

@@ -152,6 +152,7 @@ def test_slot_and_fetch_share_one_resolution(monkeypatch):
     """ADVICE r2 / VERDICT r2 #9: the politeness slot and the
     connector must key on the SAME cached resolution — exactly one
     getaddrinfo per host per TTL window, however many rounds ask."""
+    import asyncio
     import socket as _socket
 
     from minicrawler_spark.sources import httpfetch as hf
@@ -169,8 +170,8 @@ def test_slot_and_fetch_share_one_resolution(monkeypatch):
         # three "rounds" of slot computation + two connector lookups
         for _ in range(3):
             resolve_slot("localhost", True)
-        addrs = hf._resolve("localhost", 80)
-        hf._resolve("localhost", 443)
+        addrs = hf._order_addrs(asyncio.run(hf._alookup("localhost")), 80)
+        hf._order_addrs(asyncio.run(hf._alookup("localhost")), 443)
         assert calls == ["localhost"]
         # the slot keys on the first-choice IP the connector dials
         assert hf.resolved_ip("localhost") == addrs[0][4][0]
