@@ -30,11 +30,6 @@ class CrawlSettings:
     max_depth: int = 3               # link-following depth budget
     max_rounds: int = 64             # driver-loop bound
     per_host_budget: int = 0         # 0 = unlimited; else top-k per host/round
-    hot_host_split: int = 1024       # split a host across partitions every
-                                     # k scheduled slots (0 = never split);
-                                     # politeness stays correct because the
-                                     # wait schedule is computed globally
-                                     # before the repartition
     real_time: bool = False          # sleep politeness waits on the wall
                                      # clock (real-network fetchers);
                                      # False = virtual clock (fixtures,

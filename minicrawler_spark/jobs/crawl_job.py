@@ -9,7 +9,7 @@
 
 Seeds: one URL per line (blank lines / '#' comments skipped). Results
 are written as parquet to --output; per-round lineage metrics land in
-{checkpoint_dir}/metrics/round=N and a JSON summary on stdout. The
+the frontier snapshots' summaries and a JSON summary on stdout. The
 session is taken from spark-submit via getOrCreate, so --master /
 --num-executors / --conf flow through untouched; only
 spark.sql.shuffle.partitions is defaulted when unset.
@@ -33,7 +33,6 @@ def parse_args(argv):
     p.add_argument("--max-depth", type=int, default=3)
     p.add_argument("--max-rounds", type=int, default=64)
     p.add_argument("--per-host-budget", type=int, default=0)
-    p.add_argument("--hot-host-split", type=int, default=1024)
     p.add_argument("--extract-links", action="store_true")
     p.add_argument("--dedup", action="store_true")
     p.add_argument("--respect-robots", action="store_true")
@@ -85,7 +84,6 @@ def main(argv=None):
         max_depth=args.max_depth,
         max_rounds=args.max_rounds,
         per_host_budget=args.per_host_budget,
-        hot_host_split=args.hot_host_split,
         extract_links=args.extract_links,
         dedup=args.dedup,
         respect_robots=args.respect_robots,

@@ -26,8 +26,8 @@ Properties mirrored from Iceberg:
 - expiration/compaction: `expire(table, keep_last=k)` removes old
   snapshots' data (the north star's "compacted frontier snapshots").
 
-Snapshot ids are caller-supplied (the crawl engine uses the round
-number), keeping runs deterministic — no wall-clock ids.
+Snapshot ids are caller-supplied (the crawl engine numbers its rounds
+on from CURRENT), keeping runs deterministic — no wall-clock ids.
 """
 
 from __future__ import annotations
@@ -83,10 +83,10 @@ class SnapshotCatalog:
             f for f in self.fs.listdir(data_dir)
             if f.endswith(".parquet")
         ]
-        # Re-committing an id that is already CURRENT (at-least-once
-        # foreachBatch retry, or crawl() re-run on an existing
-        # checkpoint_dir restarting round ids) must not create a
-        # self-referential parent chain: inherit the prior parent.
+        # Re-committing an id that is already CURRENT (the stream's
+        # at-least-once foreachBatch replay of an epoch) must not
+        # create a self-referential parent chain: inherit the prior
+        # parent.
         parent = self.current_id(table)
         if parent == snapshot_id:
             try:

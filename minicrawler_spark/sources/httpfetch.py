@@ -575,31 +575,46 @@ async def _aread_response(reader, deadline: float,
 # idle connections kept per (scheme, host, port): the multiplexed
 # fetch stage runs several chains per host at once
 _POOL_PER_KEY = 4
+# idle connections kept in all: a long-lived loop (a thread's blocking
+# driver fetches one robots.txt per new host) must not hold a socket
+# for every host it ever fetched
+_POOL_TOTAL = 64
 
 
 class AsyncFetchContext:
     """Keep-alive pool for http_fetcher_async: (scheme, host, port) ->
     a small LIFO of idle (reader, writer) pairs or H2Connection
-    sessions. asyncio transports are bound to their event loop, so a
-    context serves one loop: the fetch stage creates one per batch's
-    loop and closes it when the batch ends; each thread's blocking
-    driver keeps one for as long as its loop lives."""
+    sessions, least recently used key first. asyncio transports are
+    bound to their event loop, so a context serves one loop: the fetch
+    stage creates one per batch's loop and closes it when the batch
+    ends; each thread's blocking driver keeps one for as long as its
+    loop lives."""
 
     def __init__(self):
         self._pool: dict = {}
 
     def get(self, key):
-        try:
-            return self._pool[key].pop()
-        except (KeyError, IndexError):
+        bucket = self._pool.get(key)
+        if not bucket:
             return None
+        entry = bucket.pop()
+        if not bucket:
+            del self._pool[key]
+        return entry
 
     def put(self, key, entry) -> None:
-        bucket = self._pool.setdefault(key, [])
-        if len(bucket) < _POOL_PER_KEY:
-            bucket.append(entry)
-        else:
+        bucket = self._pool.pop(key, [])
+        self._pool[key] = bucket
+        if len(bucket) >= _POOL_PER_KEY:
             self._close_entry(entry)
+            return
+        if sum(map(len, self._pool.values())) >= _POOL_TOTAL:
+            # close the least recently used key's oldest idle entry
+            lru = next(iter(self._pool))
+            self._close_entry(self._pool[lru].pop(0))
+            if not self._pool[lru]:
+                del self._pool[lru]
+        bucket.append(entry)
 
     @staticmethod
     def _close_entry(entry) -> None:

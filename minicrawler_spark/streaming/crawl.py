@@ -21,8 +21,7 @@ expiry uses epoch + elapsed, never wall time.
 Scale design (north rule):
 - the frontier is repartitioned by xxhash64(host) % N each round so
   same-host jobs co-locate (connection-reuse locality, politeness
-  enforced within one partition) — hot hosts can be split further by
-  salting on (host, floor(seq/k)),
+  enforced within one partition),
 - the URL-seen filter is a left_anti join on url_hash (64-bit
   xxhash64 of the canonical href), with the seen table checkpointed
   per round; plans/seen.py adds the bloom-sidecar partition pruning,
@@ -903,7 +902,7 @@ def _robots_gate(
     matcher is a vectorized pandas UDF (regexes cached per distinct
     rules_json on each executor). The decided frame is checkpointed
     (lazily), so the UDF runs once per row however many consumers
-    read `allowed` and `denied`: the fetch, a denied count, the
+    read `allowed` and `denied`: the fetch, the round's tally, the
     final results."""
     from pyspark.sql.functions import pandas_udf
 
@@ -1148,25 +1147,6 @@ def crawl_round(
     else:
         deferred = None
 
-    # Hot-host skew split (SURVEY §4 skew note): politeness is
-    # enforced by the schedule computed above (wait_ms is global, not
-    # per-partition), so a hot host CAN be split across partitions
-    # without breaking the delay contract. Rows already sit clustered
-    # by host from the single exchange above; only rows BEYOND the
-    # first hot_host_split slots of an overflowing host need to move.
-    # The cold side (virtually always everything) passes through
-    # narrow — filter preserves the host clustering — while the hot
-    # tail fans out to (host, slot // hot_host_split) buckets through
-    # its own exchange, which is EMPTY on normal rounds (an empty AQE
-    # stage, not a full reshuffle of the frontier).
-    if settings.hot_host_split > 0:
-        cold = ok.filter(F.col("slot") < settings.hot_host_split)
-        hot = ok.filter(F.col("slot") >= settings.hot_host_split).repartition(
-            num_partitions,
-            F.col("host"),
-            (F.col("slot") / F.lit(settings.hot_host_split)).cast("long"),
-        )
-        ok = cold.unionByName(hot)
     if settings.real_time:
         # real-network mode: the stage sleeps each job until its
         # scheduled offset, so rows must arrive in schedule order
@@ -1190,23 +1170,29 @@ def _round_partitions(n_rows: int, parallelism: int) -> int:
     return min(parallelism, max(1, n_rows // 100 + 1))
 
 
+def _frontier_counts(canon: DataFrame) -> Tuple[int, int]:
+    """(rows, rows that parsed) of a canonicalized frontier, in one
+    job: the rows size the round, the parsed ones are the seen gate's
+    candidates."""
+    n, n_valid = canon.agg(
+        F.count("*"), F.count_if(F.col("errkind") == "")
+    ).collect()[0]
+    return n, n_valid
+
+
 def _seen_gate(
     canon: DataFrame,
     seen_filter,
     seen: Optional[DataFrame],
-    metrics: Optional[dict] = None,
 ) -> Tuple[DataFrame, Optional[DataFrame]]:
     """URL-seen gate: keep the valid rows whose canonical href is not
     yet seen and add them to the seen set. Parse-failure rows (href
     null) pass through to the error gate untouched. With a SeenFilter
     (plans/seen.py) the set lives in storage under the checkpoint dir;
     without one, `seen` is the in-memory url_hash frame and comes back
-    extended. Returns (gated rows, seen); fills `metrics`' candidates,
-    scheduled and dedup_dropped when given."""
+    extended. Returns (gated rows, seen)."""
     valid, bad = _split_valid(canon)
     hashed = valid.withColumn("url_hash", F.xxhash64("href"))
-    if metrics is not None:
-        metrics["candidates"] = hashed.count()
     if seen_filter is not None:
         novel = seen_filter.novel(hashed).localCheckpoint(eager=True)
         seen_filter.add(novel.select("url_hash"), assume_novel=True)
@@ -1221,10 +1207,6 @@ def _seen_gate(
         # inside the next round's anti-join, not as its own job
         new_seen = novel.select("url_hash").distinct().localCheckpoint(eager=False)
         seen = new_seen if seen is None else seen.union(new_seen)
-    if metrics is not None:
-        n_novel = novel.count()
-        metrics["scheduled"] = n_novel
-        metrics["dedup_dropped"] = metrics["candidates"] - n_novel
     return novel.drop("url_hash").unionByName(bad), seen
 
 
@@ -1384,9 +1366,9 @@ def crawl(
 
     Pass `report={}` to receive per-round / per-partition lineage
     metrics (north rule): report["rounds"] = list of round dicts with
-    scheduled / dedup_dropped / robots_denied counts and per-
-    (partition_id, outcome) row counts; written to
-    `{checkpoint_dir}/metrics/round=N` as parquet when checkpointing.
+    candidates / scheduled / dedup_dropped / robots_denied counts and
+    per-(partition_id, outcome) row counts; with a checkpoint_dir each
+    is also its frontier snapshot's summary (`SnapshotCatalog.history`).
     """
     settings = settings or CrawlSettings()
     # num_partitions=None -> sized per round from the (checkpointed,
@@ -1414,6 +1396,8 @@ def crawl(
         from ..plans.snapshots import SnapshotCatalog
 
         catalog = SnapshotCatalog(checkpoint_dir)
+        # a crawl on an existing catalog continues its snapshot ids
+        first_id = (catalog.current_id("frontier") or 0) + 1
 
     # the sharded bloom-sidecar filter needs storage executors can
     # read, so it is the seen set whenever a checkpoint_dir exists (it
@@ -1446,7 +1430,7 @@ def crawl(
     next_canon = _canonicalize_df(
         frontier.coalesce(parallelism)
     ).localCheckpoint(eager=False)
-    n_frontier = next_canon.count()
+    n_frontier, n_valid = _frontier_counts(next_canon)
     while round_no < settings.max_rounds:
         # label the round so its Spark-job count is observable (the
         # barrier-reduction work is graded on this going DOWN)
@@ -1458,15 +1442,14 @@ def crawl(
         round_metrics = {"round": round_no} if want_metrics else None
 
         if settings.dedup:
-            canon, seen = _seen_gate(canon, seen_filter, seen, round_metrics)
+            canon, seen = _seen_gate(canon, seen_filter, seen)
 
+        denied = None
         if settings.respect_robots:
             canon, denied, robots_df = _robots_step(
                 canon, robots_df, settings, fetcher_spec, round_no
             )
             results.append(denied)
-            if want_metrics:
-                round_metrics["robots_denied"] = denied.count()
 
         if carryover is not None:
             # rows deferred by the per-host budget: already
@@ -1480,7 +1463,7 @@ def crawl(
             _round_partitions(n_frontier + carry_n, parallelism)
             if num_partitions is None else num_partitions
         )
-        carry_n = 0
+        carry_in, carry_n = carry_n, 0
         fetched, errors, deferred = crawl_round(
             canon, settings, fetcher_spec, round_no, host_stats, round_parts,
         )
@@ -1507,34 +1490,40 @@ def crawl(
 
         if want_metrics:
             # per-partition lineage: which partition produced how many
-            # rows of each outcome this round
-            part_rows = (
-                fetched.groupBy("partition_id", "outcome")
+            # rows of each outcome this round. The robots-denied rows
+            # ride the same job under a null partition_id
+            tally = fetched.select("partition_id", "outcome", "elapsed_ms")
+            if denied is not None:
+                tally = tally.unionByName(denied.select(
+                    F.lit(None).cast(IntegerType()).alias("partition_id"),
+                    "outcome", "elapsed_ms",
+                ))
+            part_rows = [
+                r.asDict()
+                for r in tally.groupBy("partition_id", "outcome")
                 .agg(
                     F.count("*").alias("n"),
                     F.sum("elapsed_ms").alias("elapsed_ms_sum"),
                 )
                 .collect()
-            )
-            round_metrics["partitions"] = [r.asDict() for r in part_rows]
-            round_metrics.setdefault(
-                "scheduled", sum(r["n"] for r in part_rows)
-            )
+            ]
+            parts = [r for r in part_rows if r["partition_id"] is not None]
+            n_fetched = sum(r["n"] for r in parts)
+            n_denied = sum(r["n"] for r in part_rows) - n_fetched
+            if settings.dedup:
+                # every novel parsed row is denied, fetched or deferred,
+                # and the fetched rows include last round's carry-over
+                scheduled = n_fetched + n_denied + carry_n - carry_in
+                round_metrics["candidates"] = n_valid
+                round_metrics["scheduled"] = scheduled
+                round_metrics["dedup_dropped"] = n_valid - scheduled
+            else:
+                round_metrics["scheduled"] = n_fetched
+            if denied is not None:
+                round_metrics["robots_denied"] = n_denied
+            round_metrics["partitions"] = parts
             if report is not None:
                 report["rounds"].append(round_metrics)
-            if checkpoint_dir is not None:
-                local_frame(
-                    spark,
-                    [
-                        (round_no, r["partition_id"], r["outcome"], r["n"],
-                         r["elapsed_ms_sum"])
-                        for r in part_rows
-                    ],
-                    "round int, partition_id int, outcome string, n long, "
-                    "elapsed_ms_sum long",
-                ).write.mode("overwrite").parquet(
-                    "%s/metrics/round=%d" % (checkpoint_dir, round_no)
-                )
 
         # lazy, but not free: under AQE the call runs the groupBy's
         # shuffle stage (reading `fetched`) as its own job; only the
@@ -1557,7 +1546,7 @@ def crawl(
             # the next round's frontier with this round's metrics as
             # the snapshot summary; any round is resumable by id
             catalog.commit(
-                "frontier", frontier, snapshot_id=round_no + 1,
+                "frontier", frontier, snapshot_id=first_id + round_no,
                 summary=round_metrics or {},
             )
 
@@ -1570,7 +1559,7 @@ def crawl(
         next_canon = _canonicalize_df(
             frontier.coalesce(parallelism)
         ).localCheckpoint(eager=False)
-        n_frontier = next_canon.count()
+        n_frontier, n_valid = _frontier_counts(next_canon)
         if want_metrics:
             # jobs this round (the dict is already in report["rounds"])
             round_metrics["spark_jobs"] = len(

@@ -247,10 +247,12 @@ def test_per_host_budget_defers_not_drops(spark):
     rounds (they are already in the seen set, so silently dropping
     them would lose the URLs forever)."""
     seeds = [f"http://one.test/page/{i}" for i in range(7)]
+    report = {}
     res = crawl(
         spark, seeds,
         CrawlSettings(timeout=600, dedup=True, per_host_budget=3,
                       max_rounds=10),
+        report=report,
     ).cache()
     done = res.filter("outcome = 'done'")
     assert done.count() == 7  # every seed eventually fetched
@@ -262,6 +264,53 @@ def test_per_host_budget_defers_not_drops(spark):
     # cross-round host_seq stays gapless 0..6
     seqs = sorted(r["host_seq"] for r in done.collect())
     assert seqs == list(range(7))
+    # the deferred rows were scheduled once, in round 0
+    assert _round_counts(report) == [
+        (0, 7, 7, 0, None), (1, 0, 0, 0, None), (2, 0, 0, 0, None),
+    ]
+
+
+def _round_counts(report):
+    """(round, candidates, scheduled, dedup_dropped, robots_denied) of
+    each round of a crawl report."""
+    return [
+        (r["round"], r["candidates"], r["scheduled"], r["dedup_dropped"],
+         r.get("robots_denied"))
+        for r in report["rounds"]
+    ]
+
+
+@pytest.mark.parametrize("seen_path", ["memory", "seen_filter"])
+def test_per_host_budget_report_pinned(spark, tmp_path, seen_path):
+    """Per-round report counts of a dedup + robots + links crawl whose
+    per-host budget defers rows across rounds, on both seen paths (the
+    in-memory anti-join without a checkpoint_dir, the SeenFilter with
+    one). The counts were recorded when each was its own count() job;
+    the round now derives them from the jobs it runs anyway."""
+    seeds = synthetic_seeds(4, 2) + [
+        "http://host0.test/page/28",      # Disallow: /page/28
+        "http://host2.test/private3/a",   # Disallow: /private3/
+        "bogus",                          # fails URL parsing
+    ]
+    settings = CrawlSettings(
+        timeout=600, extract_links=True, dedup=True, respect_robots=True,
+        max_depth=2, max_rounds=10, per_host_budget=5,
+    )
+    ck = str(tmp_path / "ck") if seen_path == "seen_filter" else None
+    report = {}
+    res = crawl(spark, seeds, settings, checkpoint_dir=ck, report=report)
+    outcomes = {
+        r["outcome"]: r["count"] for r in res.groupBy("outcome").count().collect()
+    }
+    assert outcomes == {"done": 156, "robots": 2, "error": 1}
+    assert _round_counts(report) == [
+        (0, 10, 10, 0, 2), (1, 45, 45, 0, 0), (2, 91, 70, 21, 0),
+        (3, 60, 27, 33, 0), (4, 18, 6, 12, 0), (5, 0, 0, 0, 0),
+        (6, 0, 0, 0, 0), (7, 0, 0, 0, 0),
+    ]
+    assert [sum(p["n"] for p in r["partitions"]) for r in report["rounds"]] == [
+        8, 23, 33, 31, 21, 20, 14, 6,
+    ]
 
 
 @pytest.mark.parametrize(

@@ -196,6 +196,48 @@ def test_stale_pooled_socket_retries_fresh(server):
     assert r2.endswith(b"plain body")
 
 
+def test_idle_pool_bounded_across_hosts():
+    """One-shot GETs to more hosts than the pool's total cap leave at
+    most _POOL_TOTAL idle connections: each put past the cap closes the
+    least recently used one."""
+    from minicrawler_spark.sources import httpfetch as hf
+
+    async def serve(reader, writer):
+        try:
+            while await reader.readuntil(b"\r\n\r\n"):  # keep-alive
+                writer.write(b"HTTP/1.1 200 OK\r\nContent-Length: 2\r\n\r\nok")
+                await writer.drain()
+        except (asyncio.IncompleteReadError, ConnectionError):
+            writer.close()
+
+    async def main():
+        servers = [
+            await asyncio.start_server(serve, "127.0.0.1", 0)
+            for _ in range(hf._POOL_TOTAL + 8)
+        ]
+        ports = [srv.sockets[0].getsockname()[1] for srv in servers]
+        ctx = hf.AsyncFetchContext()
+        try:
+            for port in ports:
+                raw, _ = await hf.http_fetcher_async(
+                    "GET", "http://127.0.0.1:%d/" % port, {"Host": "x"}, None,
+                    ctx,
+                )
+                assert raw.endswith(b"ok")
+                if port == ports[0]:
+                    first = ctx._pool[("http", "127.0.0.1", port)][0]
+            idle = [e for bucket in ctx._pool.values() for e in bucket]
+            assert len(idle) == hf._POOL_TOTAL
+            assert [k[2] for k in ctx._pool] == ports[-hf._POOL_TOTAL:]
+            assert first[1].is_closing()
+        finally:
+            await ctx.close()
+            for srv in servers:
+                srv.close()
+
+    asyncio.run(main())
+
+
 def test_trickling_server_bounded_by_deadline():
     """A server that dribbles bytes forever must not extend the fetch
     past timeout_s: the fetcher returns the partial buffer at the

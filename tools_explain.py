@@ -116,9 +116,7 @@ def main():
     # the crawl fetch pipeline (crawl_round): since round 5 the
     # politeness window and the fetch repartition share ONE exchange
     # (repartition-by-host first; the window's ClusteredDistribution
-    # is then already satisfied), and the hot-host skew fan-out moves
-    # only slot >= hot_host_split overflow rows through a side
-    # exchange that is empty on normal rounds
+    # is then already satisfied); a host's rows stay in one fetch task
     from minicrawler_spark.config import CrawlSettings
     from minicrawler_spark.streaming.crawl import crawl_round
 
@@ -187,11 +185,8 @@ def main():
             "fetch task count against AQE coalescing) feeds BOTH the "
             "politeness window (its ClusteredDistribution(host) is "
             "satisfied, so it only sorts within partitions) and the "
-            "Arrow fetch stage; the hot-host skew fan-out "
-            "repartitions only the slot >= hot_host_split overflow "
-            "rows — an exchange that is empty on rounds without an "
-            "overflowing host, instead of a second full reshuffle of "
-            "the frontier.\n"
+            "Arrow fetch stage, with no second exchange: a host's "
+            "rows stay in one fetch task.\n"
         )
         if bad:
             f.write("\n**VIOLATIONS:** %s\n" % [r["query"] for r in bad])
