@@ -71,6 +71,10 @@ _CH = {
 }
 
 
+# bytes the main walk hands to put_char as _CH_OTHER
+_PLAIN_RUN = re.compile(rb"[^\r\n\t &<]+")
+
+
 def _is_space(c: int) -> bool:
     return c in (0x0A, 0x0D, 0x20, 0x09)
 
@@ -245,7 +249,7 @@ def convert(html: bytes, collect_media: bool = True, collect_links: bool = True)
         c = html[i]
         if c == 0x0D:
             i += 1
-        elif c in (0x0A, 0x09):
+        elif c in (0x0A, 0x09, 0x20):
             put_char(0x20)
             i += 1
         elif c == 0x26:  # &
@@ -324,8 +328,12 @@ def convert(html: bytes, collect_media: bool = True, collect_links: bool = True)
                             open_tab.discard(known)
                 i = ni
         else:
-            put_char(c)
-            i += 1
+            # a run of _CH_OTHER bytes: put_char would append each one
+            j = _PLAIN_RUN.match(html, i).end()
+            if not open_skip:
+                out += html[i:j]
+                ending = _CH_OTHER
+            i = j
 
     return bytes(out), media, links
 

@@ -238,9 +238,10 @@ class SeenFilter:
                 columns=["part", "shard", "m_bits", "n", "kind", "payload"],
             )
 
-        # A Python task costs ~0.2 s before it reads a row, so the
-        # n_shards partitions run as one task per core. Coalescing data
-        # hash-partitioned by shard keeps every shard inside one task:
+        # A Python task has a fixed cost before it reads a row (README
+        # "Python task cost"), so the n_shards partitions run as one
+        # task per core. Coalescing data hash-partitioned by shard
+        # keeps every shard inside one task:
         # still exactly one delta row per shard. `part` records each
         # row's shard partition so the driver applies the deltas (and
         # numbers the sidecar generations) in partition order.

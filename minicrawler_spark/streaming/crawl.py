@@ -1420,7 +1420,7 @@ def crawl(
     # valid/bad fan-out below then reads the materialized checkpoint
     # (the round-3 single-reference discipline).
     # Every Python stage of a round runs at most one task per core: a
-    # Python task pays a fixed ~0.2 s before its first row (README
+    # Python task pays a fixed cost before its first row (README
     # "Python task cost"), so the tasks follow the row count, capped at
     # defaultParallelism, not the partitioning a shuffle left behind.
     parallelism = spark.sparkContext.defaultParallelism

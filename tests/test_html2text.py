@@ -127,3 +127,69 @@ def test_put_code_consume_entity():
     assert consume_entity(b"&amp;", 0, 5) == (38, 5)
     assert consume_entity(b"&nope;", 0, 6) == (0, 0)
     assert consume_entity(b"&#x2603;", 0, 8) == (0x2603, 8)
+
+
+def _random_doc(rng):
+    """One seeded document over the walk's branches: known, unknown,
+    end and self-closing tags with quoted (and escaped) attributes,
+    skip elements, entities, comments, raw whitespace and high bytes."""
+    tags = ["p", "div", "td", "th", "tr", "img", "a", "script", "style",
+            "option", "span", "b", "h1", "table"]
+    words = [b"alpha", b"x", b"caf\xc3\xa9", b"\xff\xfe", b"a;b", b"]]",
+             b"--", b">", b"/", b"\x00", b"\\"]
+    entities = [b"&amp;", b"&nbsp;", b"&eacute;", b"&#233;", b"&#x1F600;",
+                b"&#xD800;", b"&#0;", b"&nope;", b"&", b"&#-60;", b"&amp"]
+    ws = [b" ", b"  ", b"\t", b"\n", b"\r\n", b"\r"]
+    out = []
+    for _ in range(rng.randrange(1, 80)):
+        r = rng.random()
+        if r < 0.30:
+            out.append(rng.choice(words) * rng.randrange(1, 4))
+        elif r < 0.45:
+            out.append(rng.choice(ws))
+        elif r < 0.60:
+            out.append(rng.choice(entities))
+        elif r < 0.97:
+            name = rng.choice(tags).encode()
+            if rng.random() < 0.3:
+                name = name.upper()
+            attr = b""
+            if rng.random() < 0.5:
+                q = rng.choice([b'"', b"'", b""])
+                attr = b" %s=%s/v\\%s%d%s" % (
+                    rng.choice([b"src", b"href", b"class"]), q, q,
+                    rng.randrange(100), q)
+            end = rng.choice([b">", b" />", b">", b""])
+            out.append(b"<" + rng.choice([b"", b"/", b" "]) + name + attr + end)
+        else:
+            out.append(b"<!-- c <p> -->")
+    # both of these run to the end of the document
+    r = rng.random()
+    if r < 0.05:
+        out.append(b"<!-- open" + rng.choice(words))
+    elif r < 0.15:
+        out.append(b"<!CDATA[\t" + rng.choice(words) + b"]]>" + rng.choice(ws))
+    return b"".join(out)
+
+
+def test_convert_digest_pinned():
+    """convert() output over the fixture web (32 hosts x 20 pages) and
+    600 seeded random documents, pinned by one sha256. The digest was
+    recorded on the per-byte walk, so a faster walk must give exactly
+    the same text, media offsets and links."""
+    import hashlib
+    import random
+
+    from minicrawler_spark.sources.fixtures import fixture_response
+
+    docs = []
+    for h in range(32):
+        for p in range(20):
+            raw, _ = fixture_response("GET", "http://host%d.test/page/%d" % (h, p))
+            docs.append(raw.split(b"\r\n\r\n", 1)[1])
+    rng = random.Random(13)
+    docs += [_random_doc(rng) for _ in range(600)]
+    digest = hashlib.sha256()
+    for doc in docs:
+        digest.update(repr(convert(doc)).encode())
+    assert digest.hexdigest()[:16] == "f3eea18cc6b694e6"

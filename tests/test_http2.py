@@ -9,6 +9,7 @@ directions of our client's pure-Python HPACK (literal blocks decoded by
 the C library, indexed+Huffman+dynamic-table blocks produced by it)
 are validated against the same authority the reference binary links."""
 
+import random
 import socket
 import ssl
 import struct
@@ -30,7 +31,9 @@ from minicrawler_spark.sources.http2 import (
     PREFACE,
     pack_frame,
 )
-from minicrawler_spark.sources.hpack_py import PyHpackDecoder, PyHpackEncoder
+from minicrawler_spark.sources.hpack_py import (
+    STATIC_TABLE, PyHpackDecoder, PyHpackEncoder,
+)
 
 from .nghttp2_hpack import _NgHpackDecoder, _NgHpackEncoder, _load_nghttp2
 
@@ -760,6 +763,61 @@ def test_pyhpack_rejects_malformed():
         with pytest.raises(HpackError):
             PyHpackDecoder().decode(bad)
     assert dec.decode(b"") == []
+
+
+_GET = [
+    (b":method", b"GET"), (b":scheme", b"https"),
+    (b":authority", b"www.example.com"), (b":path", b"/docs/page?q=7"),
+    (b"accept", b"*/*"), (b"user-agent", b"minicrawler/5.2.7"),
+    (b"accept-encoding", b"gzip"),
+]
+
+
+def test_pyhpack_encoder_compact_request():
+    """Static-table fields go out as one-byte indices, static names as
+    name indices, and strings Huffman-coded when shorter: the 7-field
+    GET is 142 bytes as raw literals and at most 60 here (libnghttp2:
+    54). Literals never enter the peer's dynamic table."""
+    block = PyHpackEncoder().encode(_GET)
+    assert sum(3 + len(n) + len(v) for n, v in _GET) == 142
+    assert len(block) <= 60
+    assert block[:2] == b"\x82\x87"  # :method GET, :scheme https
+    dec = PyHpackDecoder()
+    assert dec.decode(block) == _GET
+    assert dec._dyn == []
+    # a string Huffman would lengthen stays raw
+    assert PyHpackEncoder().encode([(b"x", b"\xff\xfe")]) == b"\x00\x01x\x02\xff\xfe"
+
+
+@needs_nghttp2
+def test_pyhpack_encoder_seeded_differential():
+    """Seeded header lists over every encoder branch (exact static
+    fields, static names with other values, new names, binary and
+    long values) decode to the input through both libnghttp2 and the
+    pure-Python decoder."""
+    rng = random.Random(7)
+    names = sorted({n for n, _ in STATIC_TABLE}) + [b"x-a", b"x-trace-id"]
+    alphabet = bytes(range(1, 256))
+    for _ in range(300):
+        headers = []
+        for _ in range(rng.randrange(1, 10)):
+            r = rng.random()
+            if r < 0.3:
+                headers.append(rng.choice(STATIC_TABLE))
+                continue
+            name = rng.choice(names)
+            if r < 0.6:
+                value = bytes(rng.choice(b"abcdefghij0123456789/-.")
+                              for _ in range(rng.randrange(0, 40)))
+            elif r < 0.9:
+                value = bytes(rng.choice(alphabet)
+                              for _ in range(rng.randrange(0, 20)))
+            else:
+                value = b"v" * rng.randrange(120, 400)
+            headers.append((name, value))
+        block = PyHpackEncoder().encode(headers)
+        assert PyHpackDecoder().decode(block) == headers
+        assert _NgHpackDecoder().decode(block) == headers
 
 
 def test_h2_end_to_end_without_libnghttp2(tmp_path, h2_env):
