@@ -16,8 +16,8 @@ by seed index (the reference prints in completion order, which is
 timing-dependent); -S is an accepted no-op (TLS is controlled by the
 URL scheme); -2 disables HTTP/2 exactly like MCURL_OPT_DISABLE_HTTP2
 (by default ALPN offers h2 + http/1.1, sources/http2.py); fetching
-defaults to the real-socket fetcher unless --fixture is passed
-(sandbox testing).
+defaults to the real-socket fetcher, on the wall clock, unless
+--fixture picks the fixture web (sandbox testing).
 """
 
 from __future__ import annotations
@@ -178,15 +178,12 @@ def main(argv=None) -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    if fixture:
-        fetcher = "minicrawler_spark.sources.fixtures:fixture_fetcher"
-        real_time = False
-    else:
-        fetcher = "minicrawler_spark.sources.httpfetch:http_fetcher"
-        real_time = True
-
+    fetcher = (
+        "minicrawler_spark.sources.fixtures:fixture_fetcher" if fixture
+        else "minicrawler_spark.sources.httpfetch:http_fetcher"
+    )
     warc_dir = settings_kw.pop("_warc_dir", None)
-    settings = CrawlSettings(real_time=real_time, **settings_kw)
+    settings = CrawlSettings(**settings_kw)
     results = crawl(spark, seeds, settings, fetcher_spec=fetcher)
     if warc_dir:
         from .sources.warc import write_warc

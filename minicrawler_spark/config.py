@@ -1,11 +1,14 @@
 """Crawl settings — mcrawler_settings + per-URL options as one record
 (src/h/minicrawler.h:34-39, struct.h:6-11, cli.c:50-153). Broadcast to
-executors; everything is deterministic (virtual clock, no wall time).
+executors. The clock is not a setting: the fetcher decides it
+(streaming/crawl.py resolve_async_fetcher). The fixture web runs on a
+deterministic virtual clock; a real-network fetcher also spaces
+same-host requests on the wall clock.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass
@@ -30,10 +33,6 @@ class CrawlSettings:
     max_depth: int = 3               # link-following depth budget
     max_rounds: int = 64             # driver-loop bound
     per_host_budget: int = 0         # 0 = unlimited; else top-k per host/round
-    real_time: bool = False          # sleep politeness waits on the wall
-                                     # clock (real-network fetchers);
-                                     # False = virtual clock (fixtures,
-                                     # deterministic tests)
     insecure: bool = False           # -k: skip TLS verification
     disable_http2: bool = False      # -2: don't offer h2 in ALPN
                                      # (MCURL_OPT_DISABLE_HTTP2); default
@@ -48,15 +47,6 @@ class CrawlSettings:
                                      # the channel). Default stays per-host
                                      # (1:1 on the fixture web; documented
                                      # round-1 deviation).
-    fetch_concurrency: int = 64      # in-flight requests per partition in
-                                     # real_time mode (the select()
-                                     # multiplexer analogue, crawler.c:
-                                     # 1809-1860: many parallel requests on
-                                     # one thread); every real-time fetch
-                                     # runs on that one event loop, and 1
-                                     # = serial on it. Virtual-clock
-                                     # fixture mode has no wall waits to
-                                     # overlap, so it stays serial.
 
     def as_dict(self) -> dict:
         return self.__dict__.copy()

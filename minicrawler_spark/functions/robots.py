@@ -16,10 +16,11 @@ reference. Design decisions:
   is surfaced in seconds so the politeness scheduler can take
   max(settings.delay, crawl_delay) per host.
 - 3xx/4xx statuses -> allow all (RFC 9309 §2.3.1.2). Unreachable
-  robots.txt and 5xx are mode-dependent (crawl.py fetch_robots):
-  real-network mode treats them as complete disallow per RFC 9309
-  §2.3.1.3-4 (the host could not serve its policy); fixture mode keeps
-  allow-all so deterministic fixtures without robots.txt stay total.
+  robots.txt and 5xx depend on the fetcher (crawl.py fetch_robots): a
+  real-network fetcher (one with an async twin) treats them as
+  complete disallow per RFC 9309 §2.3.1.3-4 (the host could not serve
+  its policy); the fixture web keeps allow-all so deterministic
+  fixtures without robots.txt stay total.
 
 Rules travel between Spark stages as a JSON column
 `[[allow:bool, pattern:str], ...]` per host; matching is vectorized

@@ -21,10 +21,11 @@ Correctness gate: the 311-case WHATWG corpus the reference ships
 (test/urltestdata.json, run by test/run) — see tests/test_whatwg_url.py.
 
 Scale note: `parse_url` is a pure function (no I/O); the Spark surface
-is `canonicalize_batch` (pandas Series in/out, Arrow-batched) wrapped as
-a pandas UDF in minicrawler_spark.operators.frontier. A regex fast path
-skips the state machine for already-canonical ASCII http(s) URLs, which
-dominate real frontiers.
+is `canonicalize_full_batch` (pandas Series in, DataFrame out), which
+the crawl's canonicalize stage runs over Arrow batches
+(streaming/crawl.py _canonicalize_df). One regex fast path
+(`_try_fast`) skips the state machine for already-canonical ASCII
+http(s) URLs, which dominate real frontiers.
 """
 
 from __future__ import annotations
@@ -45,7 +46,7 @@ __all__ = [
     "href",
     "getters",
     "canonicalize",
-    "canonicalize_batch",
+    "canonicalize_full_batch",
 ]
 
 SPECIAL_SCHEME_PORTS = {
@@ -1020,28 +1021,46 @@ _CANON_FAST = re.compile(
 # reach the fast path — the charsets exclude it, and the medium path
 # strips fragments before revalidating).
 _DOTSEG = re.compile(r"/\.\.?(?=[/?]|$)|%2[eE]")
+_LONG_LABEL = re.compile(r"[a-z0-9-]{64}")  # any 64-run => some label > 63
+
+
+def _try_fast(cand: str):
+    """(href, host, hostname, scheme, path_query, '') for an
+    already-canonical http(s) URL (_CANON_FAST plus the length, label,
+    port and dot-segment gates), else None."""
+    m = _CANON_FAST.match(cand)
+    if m is None:
+        return None
+    sch, host, port, path, query = m.groups()
+    if (
+        _DOTSEG.search(cand) is None
+        and len(cand) <= 8191
+        and len(host) <= 253
+        and _LONG_LABEL.search(host) is None
+        and not (port == "80" and sch == "http")
+        and not (port == "443" and sch == "https")
+        and (port is None or int(port) <= 65535)
+        and (path is not None or query is None)
+    ):
+        hostport = host if port is None else host + ":" + port
+        return (
+            cand if path is not None else sch + "://" + hostport + "/",
+            hostport,
+            host,
+            sch,
+            (path or "/") + (query or ""),
+            "",
+        )
+    return None
 
 
 def canonicalize(url_str: str, base_str: Optional[str] = None):
     """Return (href, host, scheme, failure_flag). Fast path for
     already-canonical URLs; full state machine otherwise."""
     if url_str is not None and base_str is None:
-        m = _CANON_FAST.match(url_str)
-        if m and not _DOTSEG.search(url_str):
-            scheme, hostname, port, path, query = m.groups()
-            if (
-                len(hostname) <= 253
-                and max(len(l) for l in hostname.split(".")) <= 63
-                and not (scheme == "http" and port == "80")
-                and not (scheme == "https" and port == "443")
-                and (port is None or int(port) <= 65535)
-                and (path is not None or query is None)
-            ):
-                hostport = hostname + (":" + port if port else "")
-                out = url_str if path is not None else (
-                    scheme + "://" + hostport + "/" + (query or "")
-                )
-                return (out, hostport, scheme, False)
+        row = _try_fast(url_str)
+        if row is not None:
+            return (row[0], row[1], row[3], False)
     base = None
     if base_str:
         base = parse_url(base_str)
@@ -1056,32 +1075,9 @@ def canonicalize(url_str: str, base_str: Optional[str] = None):
     return (serialize_url(u, exclude_fragment=True), host, u.scheme, False)
 
 
-def canonicalize_batch(urls, bases=None):
-    """pandas Series → DataFrame-of-columns; Arrow-batched hot path.
-    Used by the canonicalize pandas UDF in operators.frontier."""
-    import pandas as pd
-
-    hrefs, hosts, schemes, fails = [], [], [], []
-    if bases is None:
-        bases = [None] * len(urls)
-    for u, b in zip(urls, bases):
-        if u is None:
-            hrefs.append(None); hosts.append(None); schemes.append(None); fails.append(True)
-            continue
-        h, ho, sc, f = canonicalize(u, b if b else None)
-        hrefs.append(h); hosts.append(ho); schemes.append(sc); fails.append(f)
-    return pd.DataFrame(
-        {"href": hrefs, "host": hosts, "scheme": schemes, "failure": fails}
-    )
-
-
 # ---------------------------------------------------------------------------
 # vectorized full canonicalization (the frontier scheduling hot path)
 # ---------------------------------------------------------------------------
-
-_LONG_LABEL = re.compile(r"[a-z0-9-]{64}")  # any 64-run => some label > 63
-_DOTSEG_NC = _DOTSEG  # lookahead form has no capture group; kept as alias
-
 
 def canonicalize_full(u, base_str=None, _base_cache=None):
     """One row of the scheduling schema:
@@ -1132,38 +1128,6 @@ _MEDIUM_RX = re.compile(
 )
 
 
-def _fast_eval(sc, orig):
-    """Vectorized already-canonical check over a Series (NaN = not a
-    candidate). Returns (mask, href, hostport, hostname, scheme,
-    path_query); all outputs NaN outside the mask."""
-    import pandas as pd
-
-    ext = sc.str.extract(_CANON_FAST)
-    scheme_g, host_g, port_g, path_g, query_g = (ext[i] for i in range(5))
-    fast = (
-        scheme_g.notna()
-        & ~sc.str.contains(_DOTSEG_NC, regex=True, na=True)
-        & (sc.str.len() <= 8191)
-        & (host_g.str.len() <= 253)
-        & ~host_g.str.contains(_LONG_LABEL, regex=True, na=True)
-        & ~((scheme_g == "http") & (port_g == "80"))
-        & ~((scheme_g == "https") & (port_g == "443"))
-        & ~(pd.to_numeric(port_g, errors="coerce") > 65535)
-        & (path_g.notna() | query_g.isna())
-    )
-    hostport = host_g.where(port_g.isna(), host_g + ":" + port_g)
-    href = orig.where(path_g.notna(), scheme_g + "://" + hostport + "/")
-    path_query = path_g.fillna("/") + query_g.fillna("")
-    return (
-        fast,
-        href.where(fast),
-        hostport.where(fast),
-        host_g.where(fast),
-        scheme_g.where(fast),
-        path_query.where(fast),
-    )
-
-
 def canonicalize_full_batch(urls, bases=None):
     """Batched canonicalize_full — one compiled-regex Python loop:
 
@@ -1176,7 +1140,7 @@ def canonicalize_full_batch(urls, bases=None):
        per-row WHATWG state machine.
 
     r6: the pandas str.extract/where formulation was replaced by this
-    per-row loop over pre-bound compiled regexes — the vectorized form
+    per-row loop over compiled regexes (_try_fast) — the vectorized form
     paid ~6 µs/row in pandas per-op overhead and built hostport/href
     concat columns for every row; the loop does one match plus cheap
     checks (~2 µs/row, measured 2.8x end-to-end on the bench frontier
@@ -1197,40 +1161,7 @@ def canonicalize_full_batch(urls, bases=None):
         else None
     )
 
-    fast_match = _CANON_FAST.match
     med_match = _MEDIUM_RX.match
-    dotseg = _DOTSEG.search
-    longlab = _LONG_LABEL.search
-
-    def _try_fast(cand):
-        """(href, host, hostname, scheme, path_query, '') for an
-        already-canonical string, else None — the exact _fast_eval
-        gates."""
-        m = fast_match(cand)
-        if m is None:
-            return None
-        sch, host, port, path, query = m.groups()
-        if (
-            dotseg(cand) is None
-            and len(cand) <= 8191
-            and len(host) <= 253
-            and longlab(host) is None
-            and not (port == "80" and sch == "http")
-            and not (port == "443" and sch == "https")
-            and (port is None or int(port) <= 65535)
-            and (path is not None or query is None)
-        ):
-            hostport = host if port is None else host + ":" + port
-            return (
-                cand if path is not None
-                else sch + "://" + hostport + "/",
-                hostport,
-                host,
-                sch,
-                (path or "/") + (query or ""),
-                "",
-            )
-        return None
 
     rows = [None] * n
     base_cache: dict = {}

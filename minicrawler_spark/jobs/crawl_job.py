@@ -7,12 +7,16 @@
         --seeds seeds.txt --output /tmp/out --checkpoint-dir /tmp/ck \
         --extract-links --dedup --respect-robots --max-depth 2
 
-Seeds: one URL per line (blank lines / '#' comments skipped). Results
-are written as parquet to --output; per-round lineage metrics land in
-the frontier snapshots' summaries and a JSON summary on stdout. The
-session is taken from spark-submit via getOrCreate, so --master /
---num-executors / --conf flow through untouched; only
-spark.sql.shuffle.partitions is defaulted when unset.
+Seeds: one URL per line (blank lines / '#' comments skipped). The
+--fetcher sets the clock: the default fixture web runs on the virtual
+clock, and a real-network fetcher such as
+`minicrawler_spark.sources.httpfetch:http_fetcher` spaces same-host
+requests by --delay ms on the wall clock. Each round's task count
+follows its row count. Results are written as parquet to --output;
+per-round lineage metrics land in the frontier snapshots' summaries
+and a JSON summary on stdout. The session is taken from spark-submit
+via getOrCreate, so --master / --num-executors / --conf flow through
+untouched; only spark.sql.shuffle.partitions is defaulted when unset.
 """
 
 from __future__ import annotations
@@ -45,9 +49,9 @@ def parse_args(argv):
         "--fetcher",
         default="minicrawler_spark.sources.fixtures:fixture_fetcher",
         help="module:function with the (method,url,headers,body)->"
-             "(raw_bytes,delay_ms) contract",
+             "(raw_bytes,delay_ms) contract; one whose module also has "
+             "function_async (sources.httpfetch) crawls on the wall clock",
     )
-    p.add_argument("--num-partitions", type=int, default=None)
     return p.parse_args(argv)
 
 
@@ -100,7 +104,6 @@ def main(argv=None):
         load_seeds(args.seeds),
         settings,
         fetcher_spec=args.fetcher,
-        num_partitions=args.num_partitions,
         checkpoint_dir=args.checkpoint_dir,
         report=report,
     )

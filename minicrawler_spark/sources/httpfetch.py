@@ -45,8 +45,13 @@ Design decisions, mapped to the reference:
 
 Use from the crawl engine:
 
-    crawl(spark, seeds, CrawlSettings(real_time=True),
+    crawl(spark, seeds, CrawlSettings(),
           fetcher_spec="minicrawler_spark.sources.httpfetch:http_fetcher")
+
+http_fetcher_async is what makes this a real-network fetcher for the
+engine: the crawl then spaces same-host requests on the wall clock,
+resolves real DNS for politeness_by_ip, and treats an unreachable
+robots.txt as disallow-all (streaming/crawl.py resolve_async_fetcher).
 """
 
 from __future__ import annotations

@@ -25,9 +25,10 @@ Topology:
   repartition, mapInPandas fetch), result rows, host-stats merge and
   discovered links. Redirects and auth retries finish inside the
   fetch stage, so nothing but links and budget-deferred rows returns
-  to the frontier. What is the stream's own: the per-host budget cut
-  before the seen gate, the catalog reads and commits, the denied
-  sink, the WARC archive and the TSV feedback.
+  to the frontier. What is the stream's own: one row per URL within
+  a micro-batch and the per-host budget cut, both before the seen
+  gate, the catalog reads and commits, the denied sink, the WARC
+  archive and the TSV feedback.
 
 `applyInPandasWithState` is the alternative for per-host state; the
 foreachBatch formulation is chosen because the frontier feedback loop
@@ -42,7 +43,7 @@ import os
 import uuid
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import CrawlSettings
@@ -60,6 +61,7 @@ from .crawl import (
     _split_valid,
     crawl_round,
     finalize_results,
+    resolve_async_fetcher,
 )
 
 HOST_STATS_SCHEMA = "host string, host_count long, host_err long"
@@ -92,6 +94,9 @@ def crawl_stream(
 ):
     """Start the continuous crawl; returns the StreamingQuery.
 
+    `fetcher_spec` is resolved before the stream starts and sets the
+    clock, as in crawl() (resolve_async_fetcher).
+
     `archive_dir`: when given, every micro-batch's done pages are
     ALSO archived as rolled .warc.gz files there (sources/warc.py
     write_warc) before bodies are dropped from the parquet results —
@@ -104,6 +109,7 @@ def crawl_stream(
     content-digest-derived file names, and rewrites identical bytes
     atomically instead of duplicating records."""
     settings = settings or CrawlSettings()
+    resolve_async_fetcher(fetcher_spec)  # a bad spec fails here
     catalog = SnapshotCatalog(checkpoint_dir)
     seen_filter = None
     if settings.dedup:
@@ -137,12 +143,23 @@ def crawl_stream(
             _frontier_rows(batch.withColumn("index", F.lit(0)), settings)
         ).localCheckpoint(eager=True)
 
+        if seen_filter is not None:
+            # the seen gate only drops URLs of earlier batches, so a URL
+            # twice in this one (two seed files, a link and a seed) is
+            # kept once: its shallowest row
+            valid, bad = _split_valid(canon)
+            first = Window.partitionBy("href").orderBy("depth", "seq")
+            canon = (
+                valid.withColumn("href_rank", F.row_number().over(first))
+                .filter(F.col("href_rank") == 1)
+                .drop("href_rank")
+                .unionByName(bad)
+            )
+
         if settings.per_host_budget > 0:
             # budget cut BEFORE the seen-add: deferred rows go back
             # into the frontier stream as fresh files, so they must
             # not be marked seen yet
-            from pyspark.sql import Window
-
             valid, bad = _split_valid(canon)
             w = Window.partitionBy("host").orderBy("priority", "seq")
             slotted = valid.withColumn(

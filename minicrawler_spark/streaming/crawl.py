@@ -16,7 +16,10 @@ per-host politeness window (test_free_channel, time.c:103-114 →
 Window.partitionBy(host).orderBy(priority, seq)) adds slot*delay, the
 fixture's service delay adds the rest. Crawl order per host =
 (priority, seq) FIFO — the order the correctness gate checks. Cookie
-expiry uses epoch + elapsed, never wall time.
+expiry uses epoch + elapsed, never wall time. A real-network fetcher
+(one with an async twin, resolve_async_fetcher) also waits each
+slot's delay out on the wall clock, as the reference's select() loop
+does.
 
 Scale design (north rule):
 - the frontier is repartitioned by xxhash64(host) % N each round so
@@ -170,6 +173,11 @@ TIMEOUT_REASONS = {
 
 CRAWL_EPOCH = 1_750_000_000  # virtual wall-clock origin (deterministic)
 
+# in-flight hop chains per partition on a real-network fetch stage's
+# event loop (the select() multiplexer, crawler.c:1809-1860, has no
+# limit but its fd set)
+FETCH_CONCURRENCY = 64
+
 ROBOTS_SCHEMA = StructType(
     [
         StructField("host", StringType()),
@@ -197,15 +205,22 @@ def resolve_async_fetcher(spec: str) -> Optional[Callable]:
     """The async twin of a fetcher spec, if the module provides one:
     `module:func` -> module.func_async (a coroutine function taking
     the same (method, url, headers, body) plus a `ctx` keyword, the
-    module's AsyncFetchContext or None). The built-in
-    sources.httpfetch provides it: its blocking http_fetcher is only a
-    driver for it, so in real_time mode every fetch stage runs pure
-    asyncio socket I/O — one event-loop thread per partition, at any
-    fetch_concurrency — instead of a thread per in-flight chain.
-    Fetchers without an async twin fall back to the loop's executor
-    (bounded, documented)."""
+    module's AsyncFetchContext or None).
+
+    The twin also sets the crawl's clock. A fetcher with one is a
+    real-network fetcher (sources.httpfetch): politeness waits are
+    spaced on the wall clock, hosts resolve through real DNS, an
+    unreachable robots.txt denies, and each fetch stage drives every
+    chain on one asyncio event loop. Every other fetcher (the fixture
+    web, test fakes) runs on the virtual clock. A spec whose module or
+    function does not exist raises ImportError / AttributeError naming
+    the spec."""
     mod_name, _, fn = spec.partition(":")
-    mod = importlib.import_module(mod_name)
+    try:
+        mod = importlib.import_module(mod_name)
+        getattr(mod, fn)
+    except (ImportError, AttributeError) as e:
+        raise type(e)("fetcher_spec %r: %s" % (spec, e)) from e
     return getattr(mod, fn + "_async", None)
 
 
@@ -343,12 +358,6 @@ def _make_fetch_stage(settings: dict, round_no: int):
             )
             return d
 
-        def err(o, status, msg):
-            o["outcome"] = "error"
-            o["status"] = status
-            o["error_msg"] = msg
-            return o
-
         def set_timing(o, elapsed, started, got_reply, https):
             """Synthetic mcrawler_timing on the virtual clock
             (minicrawler.h:48-61): offsets are deterministic functions
@@ -381,21 +390,12 @@ def _make_fetch_stage(settings: dict, round_no: int):
             fetcher's exception via .throw(). The finished record is
             the generator's return value. Pure protocol logic, no
             sockets, no clocks: on the virtual clock the sync driver
-            runs it against the blocking fetcher; in real_time mode
-            the asyncio driver awaits the fetcher coroutine — one
-            state machine, two execution models (the reference's
+            runs it against the blocking fetcher; with a real-network
+            fetcher the asyncio driver awaits the fetcher coroutine —
+            one state machine, two execution models (the reference's
             event-driven job states, crawler.c:341-604 dispatch)."""
             o = base_out(row)
             elapsed = int(row["elapsed_ms"]) + int(row["wait_ms"])
-            # politeness wait blew the budget -> never started
-            if elapsed > timeout_ms:
-                o["outcome"] = "timeout"
-                o["timeout_state"] = S_GOTIP
-                o["timeout_reason"] = TIMEOUT_REASONS[S_GOTIP]
-                o["elapsed_ms"] = elapsed
-                set_timing(o, elapsed, False, False, False)
-                return o
-
             jar = json.loads(row["cookies_json"] or "[]")
             chain = json.loads(row["redirect_json"] or "[]")
             href, host = row["href"], row["host"]
@@ -417,6 +417,23 @@ def _make_fetch_stage(settings: dict, round_no: int):
                 o["redirect_json"] = json.dumps(chain)
                 set_timing(o, elapsed, True, True, scheme == "https")
                 return o
+
+            def timed_out(state_no, at, started=True):
+                """The timeout record (crawler.c:1984 timeouting):
+                `state_no` is the state the job was cut in, `at` its
+                elapsed ms; started=False = never left the slot wait."""
+                o["outcome"] = "timeout"
+                o["timeout_state"] = state_no
+                o["timeout_reason"] = TIMEOUT_REASONS[state_no]
+                o["elapsed_ms"] = at
+                o["cookies_json"] = json.dumps(jar)
+                o["redirect_json"] = json.dumps(chain)
+                set_timing(o, at, started, False, scheme == "https")
+                return o
+
+            # politeness wait blew the budget -> never started
+            if elapsed > timeout_ms:
+                return timed_out(S_GOTIP, elapsed, started=False)
 
             # the per-job state machine: hops (redirects + one auth
             # retry) run to completion inside the stage, like the
@@ -475,31 +492,16 @@ def _make_fetch_stage(settings: dict, round_no: int):
                     if isinstance(e, TimeoutError):
                         # mid-transfer socket timeout == the reference's
                         # timeout record (state RECVREPLY), not a
-                        # connection error (crawler.c:1984 timeouting)
-                        o["outcome"] = "timeout"
-                        o["timeout_state"] = S_RECVREPLY
-                        o["timeout_reason"] = TIMEOUT_REASONS[S_RECVREPLY]
-                        o["elapsed_ms"] = max(elapsed, timeout_ms + 1)
-                        o["cookies_json"] = json.dumps(jar)
-                        o["redirect_json"] = json.dumps(chain)
-                        set_timing(
-                            o, o["elapsed_ms"], True, False,
-                            scheme == "https",
+                        # connection error
+                        return timed_out(
+                            S_RECVREPLY, max(elapsed, timeout_ms + 1)
                         )
-                        return o
                     return err(
                         S_CONNECT - S_ERROR, "Connection failed: %s" % e
                     )
                 elapsed += int(delay_ms)
                 if elapsed > timeout_ms:
-                    o["outcome"] = "timeout"
-                    o["timeout_state"] = S_RECVREPLY
-                    o["timeout_reason"] = TIMEOUT_REASONS[S_RECVREPLY]
-                    o["elapsed_ms"] = elapsed
-                    o["cookies_json"] = json.dumps(jar)
-                    o["redirect_json"] = json.dumps(chain)
-                    set_timing(o, elapsed, True, False, scheme == "https")
-                    return o
+                    return timed_out(S_RECVREPLY, elapsed)
 
                 head_end = find_head_end(bytes(raw))
                 if head_end is None:
@@ -659,9 +661,8 @@ def _make_fetch_stage(settings: dict, round_no: int):
             return o
 
         def process(row) -> dict:
-            """Sync driver over process_steps with the blocking fetcher:
-            virtual-clock mode, and the executor fallback for a
-            real-time fetcher without an async twin."""
+            """Sync driver over process_steps with the blocking fetcher
+            (the virtual clock)."""
             g = process_steps(row)
             try:
                 req = next(g)
@@ -676,23 +677,17 @@ def _make_fetch_stage(settings: dict, round_no: int):
                 return s.value
 
         # -- the select() multiplexer analogue (crawler.c:1809-1860) --
-        # In real_time mode each job's hop chain runs as a coroutine on
-        # ONE event loop per batch: politeness lags (relative to the
-        # stage start) are awaited on the loop, costing no I/O slot,
-        # and up to fetch_concurrency chains are in flight at once (1
-        # = serial on the same loop). With an async-capable fetcher
-        # (sources.httpfetch provides http_fetcher_async) the socket
-        # I/O itself is nonblocking on the loop — one thread, many
-        # sockets, the reference's model for real — so K slow hosts
-        # complete in ~max, not ~sum, of their chains. Fetchers
-        # without an async twin fall back to the loop's executor. The
-        # virtual-clock fixture mode has no wall waits to overlap and
-        # stays serial (deterministic, zero loop overhead).
-        real_time = bool(settings.get("real_time"))
-        k_inflight = int(settings.get("fetch_concurrency") or 1)
-        afetcher = (
-            resolve_async_fetcher(settings["fetcher"]) if real_time else None
-        )
+        # A real-network fetcher (one with an async twin) runs each
+        # job's hop chain as a coroutine on ONE event loop per batch:
+        # politeness lags (relative to the stage start) are awaited on
+        # the loop, costing no I/O slot, up to FETCH_CONCURRENCY chains
+        # are in flight at once, and the socket I/O itself is
+        # nonblocking on the loop — one thread, many sockets, the
+        # reference's model for real — so K slow hosts complete in
+        # ~max, not ~sum, of their chains. A virtual-clock fetcher has
+        # no wall waits to overlap and runs serially (deterministic,
+        # zero loop overhead).
+        afetcher = resolve_async_fetcher(settings["fetcher"])
         stage_t0 = time.monotonic()
 
         def run_multiplexed(rows):
@@ -712,34 +707,29 @@ def _make_fetch_stage(settings: dict, round_no: int):
                 except StopIteration as s:
                     return s.value
 
-            async def chain(row, loop, sem, actx):
+            async def chain(row, sem, actx):
                 lag = stage_t0 + int(row["wait_ms"]) / 1000.0 - time.monotonic()
                 if lag > 0:
                     await asyncio.sleep(lag)  # schedule wait, slot-free
                 async with sem:
-                    if afetcher is not None:
-                        return await drive_async(row, actx)
-                    return await loop.run_in_executor(None, process, row)
+                    return await drive_async(row, actx)
 
             async def main():
-                loop = asyncio.get_running_loop()
-                sem = asyncio.Semaphore(k_inflight)
-                actx = None
-                if afetcher is not None:
-                    # per-event-loop fetch context (connection pool
-                    # etc.) from the fetcher's own module — asyncio
-                    # transports are loop-bound
-                    ctx_cls = getattr(
-                        importlib.import_module(
-                            settings["fetcher"].partition(":")[0]
-                        ),
-                        "AsyncFetchContext",
-                        None,
-                    )
-                    actx = ctx_cls() if ctx_cls is not None else None
+                sem = asyncio.Semaphore(FETCH_CONCURRENCY)
+                # per-event-loop fetch context (connection pool etc.)
+                # from the fetcher's own module — asyncio transports
+                # are loop-bound
+                ctx_cls = getattr(
+                    importlib.import_module(
+                        settings["fetcher"].partition(":")[0]
+                    ),
+                    "AsyncFetchContext",
+                    None,
+                )
+                actx = ctx_cls() if ctx_cls is not None else None
                 try:
                     return await asyncio.gather(
-                        *[chain(r, loop, sem, actx) for r in rows]
+                        *[chain(r, sem, actx) for r in rows]
                     )
                 finally:
                     if actx is not None:
@@ -751,7 +741,7 @@ def _make_fetch_stage(settings: dict, round_no: int):
             if len(pdf) == 0:
                 continue
             rows = pdf.to_dict("records")
-            if real_time:
+            if afetcher is not None:
                 recs = run_multiplexed(rows)
             else:
                 recs = [process(r) for r in rows]
@@ -828,8 +818,10 @@ def fetch_robots(hosts: DataFrame, fetcher_spec: str, settings: dict) -> DataFra
 
     One mapInPandas pass over the distinct new hosts of a round; the
     result is a small (host, rules_json, crawl_delay_ms, status) table
-    that is broadcast-joined onto the frontier. Non-2xx or unparseable
-    responses degrade to allow-all (rules_json='[]').
+    that is broadcast-joined onto the frontier. 3xx/4xx responses
+    allow all (rules_json='[]'); an unreachable robots.txt, an
+    unparseable reply or a 5xx denies all with a real-network fetcher
+    and allows all on the virtual clock.
     """
 
     def stage(batches):
@@ -842,12 +834,12 @@ def fetch_robots(hosts: DataFrame, fetcher_spec: str, settings: dict) -> DataFra
         agent = settings["customagent"] or DEFAULT_AGENT
         # RFC 9309 §2.3.1.3-4: an UNREACHABLE robots.txt or a server
         # error means the host could not serve its policy -> complete
-        # disallow. Applied only in real-network mode; the fixture web
-        # keeps the documented allow-all so deterministic fixtures that
-        # serve no robots.txt stay total (robots.py module docstring).
-        deny_all = (
-            json.dumps([[False, "/"]]) if settings.get("real_time") else "[]"
-        )
+        # disallow. Applied only with a real-network fetcher; the
+        # fixture web keeps the documented allow-all so deterministic
+        # fixtures that serve no robots.txt stay total (robots.py
+        # module docstring).
+        wall_clock = resolve_async_fetcher(settings["fetcher"]) is not None
+        deny_all = json.dumps([[False, "/"]]) if wall_clock else "[]"
 
         def one(host, hostname, scheme):
             url = "%s://%s/robots.txt" % (scheme, host)
@@ -1029,12 +1021,11 @@ def _gate_errors(df: DataFrame, round_no: int) -> Tuple[DataFrame, DataFrame]:
     return ok, errors
 
 
-def _with_ip_slot(ok: DataFrame, settings: CrawlSettings) -> DataFrame:
+def _with_ip_slot(ok: DataFrame, real_dns: bool) -> DataFrame:
     """Attach the reference's 64-entry politeness slot
     (functions/ipslot.py): distinct hostnames resolve once per round
-    (Arrow batch; real DNS in real_time mode, the deterministic
-    fixture pseudo-IP otherwise), then join back."""
-    real_dns = bool(settings.real_time)
+    (Arrow batch; real DNS for a real-network fetcher, the
+    deterministic fixture pseudo-IP otherwise), then join back."""
 
     def stage(batches):
         import pandas as pd
@@ -1080,6 +1071,7 @@ def crawl_round(
     fetched — which the driver loop carries into the next round (they
     are already in the seen set, so they must not re-enter through
     dedup)."""
+    wall_clock = resolve_async_fetcher(fetcher_spec) is not None
     ok, errors = _gate_errors(canon, round_no)
 
     # ONE exchange for schedule + fetch: repartition by host FIRST so
@@ -1116,7 +1108,7 @@ def crawl_round(
         # rank runs over the 64-slot IP hash — colliding hosts share a
         # channel and delay each other — while host_seq / budget /
         # salting stay per-host (output + skew semantics)
-        ok = _with_ip_slot(ok, settings)
+        ok = _with_ip_slot(ok, wall_clock)
         w_ip = Window.partitionBy("ip_slot").orderBy("priority", "seq")
         wait_rank = F.row_number().over(w_ip) - F.lit(1)
     else:
@@ -1147,9 +1139,9 @@ def crawl_round(
     else:
         deferred = None
 
-    if settings.real_time:
-        # real-network mode: the stage sleeps each job until its
-        # scheduled offset, so rows must arrive in schedule order
+    if wall_clock:
+        # the stage sleeps each job until its scheduled offset, so
+        # rows must arrive in schedule order
         ok = ok.sortWithinPartitions("wait_ms")
 
     sdict = settings.as_dict()
@@ -1349,20 +1341,29 @@ def crawl(
     seeds,
     settings: Optional[CrawlSettings] = None,
     fetcher_spec: str = "minicrawler_spark.sources.fixtures:fixture_fetcher",
-    num_partitions: Optional[int] = None,
     checkpoint_dir: Optional[str] = None,
     report: Optional[dict] = None,
-    on_finish: Optional[Callable[[DataFrame], DataFrame]] = None,
 ) -> DataFrame:
     """mcrawler_go (crawler.c:2047-2094) as a driver loop. `seeds` is a
     list of URL strings/dicts or a frontier DataFrame. Returns the
     results DataFrame (one row per finished job, plus per-hop rows are
-    folded into redirect chains exactly like the reference).
+    folded into redirect chains exactly like the reference); the
+    reference's on-finish callback (mcrawler_url_callback) is a
+    transform composed on it.
 
     Each round runs the shared gates: seen -> robots -> crawl_round
     (fetch) -> host stats -> discovered links, which are the next
     round's frontier. Nothing else re-enters the frontier except the
-    rows the per-host budget defers.
+    rows the per-host budget defers. Seeds are not deduplicated
+    against each other: like the reference's argv, every seed row is
+    a job of its own (`dedup` drops URLs seen in earlier rounds, and
+    links are one row per URL).
+
+    `fetcher_spec` (`module:function`) is resolved here, before any
+    Spark job, and it sets the clock (resolve_async_fetcher): a
+    real-network fetcher spaces same-host requests on the wall clock,
+    any other runs on the virtual clock. Each round's fetch tasks
+    follow its row count (_round_partitions).
 
     Pass `report={}` to receive per-round / per-partition lineage
     metrics (north rule): report["rounds"] = list of round dicts with
@@ -1371,8 +1372,7 @@ def crawl(
     is also its frontier snapshot's summary (`SnapshotCatalog.history`).
     """
     settings = settings or CrawlSettings()
-    # num_partitions=None -> sized per round from the (checkpointed,
-    # so cheap-to-count) frontier (_round_partitions)
+    resolve_async_fetcher(fetcher_spec)  # a bad spec fails here
     if isinstance(seeds, DataFrame):
         frontier = seeds
     else:
@@ -1459,10 +1459,7 @@ def crawl(
 
         # n_frontier carries over from the loop-exit count of the
         # previous round — one driver barrier, not two
-        round_parts = (
-            _round_partitions(n_frontier + carry_n, parallelism)
-            if num_partitions is None else num_partitions
-        )
+        round_parts = _round_partitions(n_frontier + carry_n, parallelism)
         carry_in, carry_n = carry_n, 0
         fetched, errors, deferred = crawl_round(
             canon, settings, fetcher_spec, round_no, host_stats, round_parts,
@@ -1574,12 +1571,7 @@ def crawl(
     out = results[0]
     for r in results[1:]:
         out = out.unionByName(r, allowMissingColumns=True)
-    out = finalize_results(out)
-    if on_finish is not None:
-        # the mcrawler_url_callback extension point (minicrawler.h:204,
-        # 209; SURVEY §2.11) as a DataFrame -> DataFrame transform
-        out = on_finish(out)
-    return out
+    return finalize_results(out)
 
 
 def finalize_results(df: DataFrame) -> DataFrame:

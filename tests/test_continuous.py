@@ -126,6 +126,31 @@ def test_streaming_robots_gate(spark, tmp_path):
         q.stop()
 
 
+def test_streaming_dedup_within_one_batch(spark, tmp_path):
+    """Under dedup a URL that reaches one micro-batch twice (two seed
+    files, here at depths 1 and 0 and in two spellings of one
+    canonical href) is fetched once, at its smallest depth; the seen
+    gate alone only drops URLs of earlier batches."""
+    frontier = str(tmp_path / "frontier")
+    out = str(tmp_path / "out")
+    ck = str(tmp_path / "ck")
+
+    write_seeds(frontier, ["http://host0.test/page/1",
+                           "http://host1.test/page/2"], depth=1)
+    write_seeds(frontier, ["HTTP://HOST0.test:80/page/1"])
+    q = crawl_stream(spark, frontier, out, ck,
+                     CrawlSettings(timeout=600, dedup=True),
+                     trigger_seconds=0.5)
+    try:
+        _wait_stable(spark, out, settle_rounds=3, min_rows=2)
+    finally:
+        q.stop()
+    rows = sorted((r["url"], r["depth"])
+                  for r in spark.read.parquet(out).collect())
+    assert rows == [("http://host0.test/page/1", 0),
+                    ("http://host1.test/page/2", 1)]
+
+
 def test_streaming_restart_resumes_seen(spark, tmp_path):
     """Stop the stream, restart on the same checkpoint: the SeenFilter
     reloads its sidecar manifest (round-1 code crashed here on a

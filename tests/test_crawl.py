@@ -222,26 +222,6 @@ def test_politeness_delay_budget(spark):
     assert res.count() == 30
 
 
-def test_on_finish_hook(spark):
-    """The on-finish callback extension point (minicrawler.h:204;
-    SURVEY §2.11) as a DataFrame transform."""
-    calls = []
-
-    def hook(df):
-        calls.append(1)
-        return df.withColumn("hooked", F.lit(True)).filter("status = 200")
-
-    res = crawl(
-        spark,
-        ["http://host0.test/page/1", "http://host0.test/teapot"],
-        CrawlSettings(timeout=600),
-        on_finish=hook,
-    )
-    rows = res.collect()
-    assert calls == [1]
-    assert len(rows) == 1 and rows[0]["hooked"] is True
-
-
 def test_per_host_budget_defers_not_drops(spark):
     """Rows beyond the per-host round budget must carry over to later
     rounds (they are already in the seen set, so silently dropping
@@ -329,3 +309,22 @@ def test_seed_type_errors_name_the_seed(seed, message):
     # no session: the check runs before any Spark work
     with pytest.raises(TypeError, match=message):
         seeds_to_frontier(None, ["http://host0.test/", seed], CrawlSettings())
+
+
+@pytest.mark.parametrize(
+    "spec, error",
+    [
+        ("minicrawler_spark.sources.fixtures:fixture_fetcherr", AttributeError),
+        ("minicrawler_spark.sources.nosuch:fetch", ImportError),
+    ],
+    ids=["no-function", "no-module"],
+)
+def test_bad_fetcher_spec_fails_on_the_driver(spec, error, tmp_path):
+    # no session: both entry points resolve the spec before any Spark work
+    from minicrawler_spark.streaming.continuous import crawl_stream
+
+    with pytest.raises(error, match="fetcher_spec '%s'" % spec):
+        crawl(None, ["http://host0.test/"], fetcher_spec=spec)
+    with pytest.raises(error, match="fetcher_spec '%s'" % spec):
+        crawl_stream(None, str(tmp_path / "f"), str(tmp_path / "o"),
+                     str(tmp_path / "ck"), fetcher_spec=spec)

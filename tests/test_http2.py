@@ -444,9 +444,8 @@ def test_h2_through_crawl_engine(tmp_path, h2_env, spark):
         res = crawl(
             spark,
             ["https://127.0.0.1:%d/start" % srv.port],
-            CrawlSettings(real_time=True, timeout=30, insecure=True),
+            CrawlSettings(timeout=30, insecure=True),
             fetcher_spec="minicrawler_spark.sources.httpfetch:http_fetcher",
-            num_partitions=1,
         )
         rows = res.collect()
     finally:
@@ -537,12 +536,11 @@ def test_h1_h2_full_record_parity(tmp_path, h2_env, spark):
             res = crawl(
                 spark,
                 [origin + p for p in _SCENARIO_PATHS],
-                CrawlSettings(real_time=True, timeout=60, insecure=True,
+                CrawlSettings(timeout=60, insecure=True,
                               disable_http2=disable_http2, delay=10),
                 fetcher_spec=(
                     "minicrawler_spark.sources.httpfetch:http_fetcher"
                 ),
-                num_partitions=1,
             )
             rows = {r["index"]: r for r in res.collect()}
         finally:
@@ -640,10 +638,9 @@ def test_h2_gzip_body_through_engine(tmp_path, h2_env, spark):
     try:
         res = crawl(
             spark, ["https://127.0.0.1:%d/z" % srv.port],
-            CrawlSettings(real_time=True, timeout=30, insecure=True,
+            CrawlSettings(timeout=30, insecure=True,
                           gzip=True),
             fetcher_spec="minicrawler_spark.sources.httpfetch:http_fetcher",
-            num_partitions=1,
         )
         r = res.collect()[0]
     finally:
@@ -1010,10 +1007,9 @@ def test_h2_goaway_error_row_through_crawl(tmp_path, h2_env, spark):
         rows = crawl(
             spark,
             ["https://127.0.0.1:%d/%s" % (port, p) for p in ("a", "b")],
-            CrawlSettings(real_time=True, timeout=10, insecure=True,
+            CrawlSettings(timeout=10, insecure=True,
                           delay=10),
             fetcher_spec="minicrawler_spark.sources.httpfetch:http_fetcher",
-            num_partitions=1,
         ).collect()
     finally:
         lsock.close()

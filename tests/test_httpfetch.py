@@ -102,7 +102,7 @@ def test_crawl_over_real_sockets(server, spark):
         spark,
         seeds,
         CrawlSettings(
-            timeout=30, delay=10, real_time=True, customagent="rt-agent/1",
+            timeout=30, delay=10, customagent="rt-agent/1",
             extract_links=True, max_depth=0,  # spans on, no BFS refetch
         ),
         fetcher_spec="minicrawler_spark.sources.httpfetch:http_fetcher",
@@ -132,29 +132,42 @@ def test_crawl_over_real_sockets(server, spark):
     assert rows[7]["status"] == 404
 
 
-def test_real_politeness_spacing(server, spark):
-    """real_time=True: same-host fetches are spaced by >= delay ms of
-    wall clock (politeness enforced for real, not just scheduled)."""
+def test_real_politeness_spacing(spark):
+    """A real-network fetcher spaces same-host fetches by >= delay ms
+    of wall clock with default settings (politeness enforced for real,
+    not just scheduled): the fetcher, not a setting, picks the clock,
+    so callers that cannot set one (crawl_job.py) are polite too."""
     import time
 
-    seeds = [server + "/ok?i=%d" % i for i in range(4)]
-    t0 = time.monotonic()
-    res = crawl(
-        spark, seeds,
-        CrawlSettings(timeout=30, delay=300, real_time=True),
-        fetcher_spec="minicrawler_spark.sources.httpfetch:http_fetcher",
-    )
-    n = res.filter("status = 200").count()
-    wall = time.monotonic() - t0
+    arrivals = []
+
+    class Timed(Handler):
+        def do_GET(self):
+            arrivals.append(time.monotonic())
+            Handler.do_GET(self)
+
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), Timed)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    base = "http://127.0.0.1:%d" % srv.server_address[1]
+    try:
+        res = crawl(
+            spark, [base + "/ok?i=%d" % i for i in range(4)],
+            CrawlSettings(timeout=30, delay=300),
+            fetcher_spec="minicrawler_spark.sources.httpfetch:http_fetcher",
+        )
+        n = res.filter("status = 200").count()
+    finally:
+        srv.shutdown()
     assert n == 4
-    assert wall >= 0.9  # slots 0/300/600/900 ms
+    gaps = [b - a for a, b in zip(arrivals, arrivals[1:])]
+    assert len(gaps) == 3 and min(gaps) >= 0.25, gaps  # slots 300 ms apart
 
 
 def test_connect_refused_maps_to_error(spark):
     res = crawl(
         spark,
         ["http://127.0.0.1:9/x"],  # port 9: nothing listening
-        CrawlSettings(timeout=3, real_time=True),
+        CrawlSettings(timeout=3),
         fetcher_spec="minicrawler_spark.sources.httpfetch:http_fetcher",
     )
     row = res.collect()[0]
@@ -669,9 +682,10 @@ def test_tls12_only_server_negotiates(tmp_path):
 
 
 def test_robots_5xx_denies_in_real_mode(spark):
-    """RFC 9309 §2.3.1.3-4: in real-network mode a 5xx robots.txt (or
-    an unreachable host) is a complete disallow; the fixture web keeps
-    the documented allow-all (tested in test_robots.py)."""
+    """RFC 9309 §2.3.1.3-4: with a real-network fetcher a 5xx
+    robots.txt is a complete disallow under default settings; the
+    fixture web keeps the documented allow-all (tested in
+    test_robots.py)."""
 
     class R500(Handler):
         def do_GET(self):
@@ -688,7 +702,7 @@ def test_robots_5xx_denies_in_real_mode(spark):
         res = crawl(
             spark,
             [base + "/ok", base + "/page"],
-            CrawlSettings(real_time=True, respect_robots=True, timeout=10),
+            CrawlSettings(respect_robots=True, timeout=10),
             fetcher_spec="minicrawler_spark.sources.httpfetch:http_fetcher",
         )
         rows = res.collect()
@@ -696,6 +710,19 @@ def test_robots_5xx_denies_in_real_mode(spark):
         assert all(r["error_msg"] == "Disallowed by robots.txt" for r in rows)
     finally:
         srv.shutdown()
+
+
+def test_robots_unreachable_denies_in_real_mode(spark):
+    """An unreachable robots.txt (nothing listens on port 9) denies the
+    host's URLs instead of letting them through to the fetch."""
+    res = crawl(
+        spark, ["http://127.0.0.1:9/x"],
+        CrawlSettings(respect_robots=True, timeout=3),
+        fetcher_spec="minicrawler_spark.sources.httpfetch:http_fetcher",
+    )
+    assert [(r["outcome"], r["error_msg"]) for r in res.collect()] == [
+        ("robots", "Disallowed by robots.txt")
+    ]
 
 
 def _slow_server_rows(n_hosts, per_host, sleep_s):
@@ -750,7 +777,7 @@ def _run_stage(rows, **settings_kw):
 
     from minicrawler_spark.streaming.crawl import _make_fetch_stage
 
-    sdict = CrawlSettings(real_time=True, timeout=30, **settings_kw).as_dict()
+    sdict = CrawlSettings(timeout=30, **settings_kw).as_dict()
     sdict["fetcher"] = "minicrawler_spark.sources.httpfetch:http_fetcher"
     stage = _make_fetch_stage(sdict, 0)
     return list(stage(iter([pd.DataFrame(rows)])))[0]
@@ -813,23 +840,6 @@ def test_multiplexed_fetch_uses_no_executor_threads(monkeypatch):
     assert wall < 2.0, f"did not overlap without threads: {wall:.2f}s"
 
 
-def test_fetch_concurrency_1_stays_serial():
-    """fetch_concurrency=1 runs the chains one at a time on the
-    multiplexer's loop (control for the overlap test)."""
-    import time as _time
-
-    servers, rows = _slow_server_rows(3, 1, 0.4)
-    try:
-        t0 = _time.monotonic()
-        out = _run_stage(rows, delay=10, fetch_concurrency=1)
-        wall = _time.monotonic() - t0
-    finally:
-        for srv in servers:
-            srv.shutdown()
-    assert list(out["outcome"]) == ["done"] * 3
-    assert wall >= 1.2, f"serial control should be ~sum (1.2s): {wall:.2f}s"
-
-
 def test_multiplexed_crawl_end_to_end(spark):
     """Same slow-host shape through the full crawl() driver loop:
     results are correct and per-job elapsed_ms reflects each chain's
@@ -842,9 +852,8 @@ def test_multiplexed_crawl_end_to_end(spark):
     try:
         res = crawl(
             spark, seeds,
-            CrawlSettings(real_time=True, timeout=30, delay=100),
+            CrawlSettings(timeout=30, delay=100),
             fetcher_spec="minicrawler_spark.sources.httpfetch:http_fetcher",
-            num_partitions=1,
         )
         rows = res.collect()
     finally:

@@ -233,10 +233,8 @@ def test_real_dns_shared_ip_shares_channel(spark):
             spark,
             ["http://localhost:%d/a" % port,
              "http://127.0.0.1:%d/b" % port],
-            CrawlSettings(real_time=True, timeout=30, delay=300,
-                          politeness_by_ip=True),
+            CrawlSettings(timeout=30, delay=300, politeness_by_ip=True),
             fetcher_spec="minicrawler_spark.sources.httpfetch:http_fetcher",
-            num_partitions=1,
         )
         rows = res.collect()
     finally:

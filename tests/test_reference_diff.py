@@ -160,7 +160,7 @@ def test_records_match_reference(server, spark):
     ref = run_reference(["-t20", "-D300"] + seeds)
     Handler.hits = our_hits = []
     ours = run_ours(
-        spark, seeds, CrawlSettings(timeout=20, delay=300, real_time=True)
+        spark, seeds, CrawlSettings(timeout=20, delay=300)
     )
     Handler.hits = None
 
@@ -222,7 +222,7 @@ def test_span_sequence_matches_reference_c(server, spark):
     ref = run_reference(["-t20", "-c", server + "/doc.html"])
     ours = run_ours(
         spark, [server + "/doc.html"],
-        CrawlSettings(timeout=20, real_time=True, convert_to_text=True,
+        CrawlSettings(timeout=20, convert_to_text=True,
                       convert_to_utf8=True, extract_links=True,
                       max_depth=0),
     )
@@ -240,7 +240,7 @@ def test_span_sequence_matches_reference_c(server, spark):
 def test_error_and_auth_fields_match(server, spark):
     seeds = ["not a url", "ftp://x.test/y", server + "/plain"]
     ref = run_reference(["-t20"] + seeds)
-    ours = run_ours(spark, seeds, CrawlSettings(timeout=20, real_time=True))
+    ours = run_ours(spark, seeds, CrawlSettings(timeout=20))
     for i in range(3):
         assert ref[i]["status"] == ours[i]["status"], i
         if "error_msg" in ref[i]:
@@ -335,7 +335,7 @@ def test_wire_requests_match_reference(echo_server, spark):
             "cookies": [{"name": "jk", "value": "jv", "domain": "127.0.0.1",
                          "path": "/", "secure": False, "host_only": True,
                          "expires": 9999999999}]} for s in seeds[1:]],
-        CrawlSettings(timeout=20, real_time=True, gzip=True,
+        CrawlSettings(timeout=20, gzip=True,
                       customagent="ref-agent/9", customheader="X-Extra: 42",
                       username="usr", password="pw"),
     )

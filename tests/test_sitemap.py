@@ -184,7 +184,7 @@ def test_discover_and_crawl_from_sitemaps(spark, sitemap_server):
     disc = discover_sitemaps(
         spark, seeds,
         fetcher_spec="minicrawler_spark.sources.httpfetch:http_fetcher",
-        settings=CrawlSettings(real_time=True, timeout=30),
+        settings=CrawlSettings(timeout=30),
     )
     rows = disc.collect()
     pages = sorted(r["loc"] for r in rows if r["kind"] == "url")
@@ -202,7 +202,7 @@ def test_discover_and_crawl_from_sitemaps(spark, sitemap_server):
 
     res = crawl(
         spark, frontier,
-        CrawlSettings(real_time=True, timeout=60, delay=10),
+        CrawlSettings(timeout=60, delay=10),
         fetcher_spec="minicrawler_spark.sources.httpfetch:http_fetcher",
     ).collect()
     got = {r["url"]: bytes(r["body"]) for r in res
