@@ -18,17 +18,19 @@ Topology:
   bloom-sharded SeenFilter (plans/seen.py) under the checkpoint dir,
 - per-host state (host_count for cross-batch host_seq, host_err)
   persists through the SnapshotCatalog table "host_stats", and robots
-  rules through the table "robots",
-- each micro-batch runs the batch crawl's round gates, the same
-  private helpers of crawl.py: seen gate, robots step (the UDF at one
-  task per core), crawl_round (window politeness, host-salted
-  repartition, mapInPandas fetch), result rows, host-stats merge and
-  discovered links. Redirects and auth retries finish inside the
+  rules through the table "robots"; epoch e reads both at the
+  snapshot it started from and commits them as snapshot e+1,
+- each micro-batch is one call of the batch crawl's round function
+  (crawl.run_round): seen gate, robots step (the UDF at one task per
+  core), crawl_round (window politeness, host-salted repartition,
+  mapInPandas fetch), impatient cutoff, result rows, host-stats merge
+  and discovered links. Redirects and auth retries finish inside the
   fetch stage, so nothing but links and budget-deferred rows returns
-  to the frontier. What is the stream's own: one row per URL within
-  a micro-batch and the per-host budget cut, both before the seen
-  gate, the catalog reads and commits, the denied sink, the WARC
-  archive and the TSV feedback.
+  to the frontier. What is the stream's own: TSV rows to frontier
+  rows, one row per URL within a micro-batch and the per-host budget
+  cut before the round, the state loads, and the sinks (results,
+  denied rows, robots and host_stats commits, WARC archive, TSV
+  feedback).
 
 `applyInPandasWithState` is the alternative for per-host state; the
 foreachBatch formulation is chosen because the frontier feedback loop
@@ -47,24 +49,25 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import CrawlSettings
+from ..plans.local import local_frame
+from ..plans.seen import SeenFilter
 from ..plans.snapshots import SnapshotCatalog
 from .crawl import (
+    HOST_STATS_SCHEMA,
     ROBOTS_SCHEMA,
+    RoundState,
     _canonicalize_df,
-    _discovered_links,
     _frontier_rows,
-    _merge_host_stats,
-    _robots_step,
-    _round_partitions,
-    _round_results,
-    _seen_gate,
     _split_valid,
-    crawl_round,
     finalize_results,
     resolve_async_fetcher,
+    run_round,
 )
 
-HOST_STATS_SCHEMA = "host string, host_count long, host_err long"
+# archive partitions per micro-batch: the archive's file names derive
+# from each partition's records, so a replayed epoch rewrites the same
+# files only while this count stays the same across restarts
+ARCHIVE_PARTITIONS = 8
 
 
 def write_seeds(frontier_dir: str, urls, depth: int = 0) -> str:
@@ -90,50 +93,50 @@ def crawl_stream(
     fetcher_spec: str = "minicrawler_spark.sources.fixtures:fixture_fetcher",
     trigger_seconds: float = 1.0,
     archive_dir: Optional[str] = None,
-    archive_partitions: int = 8,
 ):
-    """Start the continuous crawl; returns the StreamingQuery.
+    """Start the continuous crawl; returns the StreamingQuery. Each
+    micro-batch is one run_round call, as one round of crawl().
 
     `fetcher_spec` is resolved before the stream starts and sets the
     clock, as in crawl() (resolve_async_fetcher).
 
-    `archive_dir`: when given, every micro-batch's done pages are
+    `archive_dir`: when given, every micro-batch's fetched pages are
     ALSO archived as rolled .warc.gz files there (sources/warc.py
     write_warc) before bodies are dropped from the parquet results —
     the streaming twin of the batch crawl->archive pipeline.
     Idempotent across epoch replays: the batch is deterministically
-    repartitioned (fixed `archive_partitions` count, hash of url)
-    and sorted within partitions before writing, so a replayed
-    epoch — even on a restarted cluster with different parallelism —
-    produces the same per-file record sets, hence the same
-    content-digest-derived file names, and rewrites identical bytes
-    atomically instead of duplicating records."""
+    repartitioned (ARCHIVE_PARTITIONS, hash of url) and sorted within
+    partitions before writing, so a replayed epoch — even on a
+    restarted cluster with different parallelism — produces the same
+    per-file record sets, hence the same content-digest-derived file
+    names, and rewrites identical bytes atomically instead of
+    duplicating records."""
     settings = settings or CrawlSettings()
     resolve_async_fetcher(fetcher_spec)  # a bad spec fails here
     catalog = SnapshotCatalog(checkpoint_dir)
-    seen_filter = None
-    if settings.dedup:
-        from ..plans.seen import SeenFilter
-
-        # the round-2 SeenFilter reloads its sidecar manifest in the
-        # constructor, so restart-resume needs no explicit refresh
-        seen_filter = SeenFilter(spark, checkpoint_dir + "/seen")
+    # the SeenFilter reloads its sidecar manifest in the constructor,
+    # so restart-resume needs no explicit refresh
+    seen = SeenFilter(spark, checkpoint_dir + "/seen")
 
     stream = (
         spark.readStream.schema("depth INT, rawurl STRING")
         .option("sep", "\t")
         .csv(frontier_dir)
     )
-    # the budget cut happens before the seen gate (below), not in
+    # the budget cut happens before the round (below), not in
     # crawl_round
     run_settings = dataclasses.replace(settings, per_host_budget=0)
-    parallelism = spark.sparkContext.defaultParallelism
 
-    def _read_or_none(table: str, schema) -> Optional[DataFrame]:
-        try:
-            return catalog.read(spark, table, schema=schema)
-        except FileNotFoundError:
-            return None
+    def load(table: str, schema, epoch: int) -> DataFrame:
+        """`table` at the snapshot epoch `epoch` started from: CURRENT,
+        or its parent when CURRENT is the epoch's own commit (a
+        replayed epoch); empty before the first commit."""
+        sid = catalog.current_id(table)
+        if sid == epoch + 1:
+            sid = catalog.manifest(table, sid)["parent_id"]
+        if sid is None:
+            return local_frame(spark, [], schema)
+        return catalog.read(spark, table, snapshot_id=sid, schema=schema)
 
     def process_batch(batch: DataFrame, epoch_id: int):
         if batch.isEmpty():
@@ -143,87 +146,71 @@ def crawl_stream(
             _frontier_rows(batch.withColumn("index", F.lit(0)), settings)
         ).localCheckpoint(eager=True)
 
-        if seen_filter is not None:
+        valid, bad = _split_valid(canon)
+        if settings.dedup:
             # the seen gate only drops URLs of earlier batches, so a URL
             # twice in this one (two seed files, a link and a seed) is
             # kept once: its shallowest row
-            valid, bad = _split_valid(canon)
             first = Window.partitionBy("href").orderBy("depth", "seq")
-            canon = (
-                valid.withColumn("href_rank", F.row_number().over(first))
-                .filter(F.col("href_rank") == 1)
-                .drop("href_rank")
-                .unionByName(bad)
-            )
+            valid = valid.withColumn(
+                "href_rank", F.row_number().over(first)
+            ).filter(F.col("href_rank") == 1).drop("href_rank")
 
         if settings.per_host_budget > 0:
             # budget cut BEFORE the seen-add: deferred rows go back
             # into the frontier stream as fresh files, so they must
             # not be marked seen yet
-            valid, bad = _split_valid(canon)
             w = Window.partitionBy("host").orderBy("priority", "seq")
-            slotted = valid.withColumn(
-                "bslot", F.row_number().over(w) - 1
-            )
-            deferred = slotted.filter(
+            valid = valid.withColumn("bslot", F.row_number().over(w) - 1)
+            deferred = valid.filter(
                 F.col("bslot") >= settings.per_host_budget
             ).select("depth", "rawurl")
             if not deferred.isEmpty():
                 (deferred.coalesce(1).write.mode("append")
                  .option("sep", "\t").csv(frontier_dir))
-            canon = (
-                slotted.filter(F.col("bslot") < settings.per_host_budget)
-                .drop("bslot")
-                .unionByName(bad)
-            ).localCheckpoint(eager=True)
+            valid = valid.filter(
+                F.col("bslot") < settings.per_host_budget
+            ).drop("bslot")
 
-        if seen_filter is not None:
-            canon, _ = _seen_gate(canon, seen_filter, None)
-
-        if settings.respect_robots:
-            # robots rules persist across micro-batches (and restarts)
-            # through the catalog table; new hosts are fetched per batch
-            canon, denied, robots = _robots_step(
-                canon, _read_or_none("robots", ROBOTS_SCHEMA), settings,
-                fetcher_spec, round_no,
-            )
-            # the denied write reads the rules' checkpoint first, so
-            # the commit never reads the snapshot it overwrites (an
-            # epoch replay commits the same id again)
-            denied.write.mode("append").parquet(output_dir + "_robots_denied")
-            catalog.commit("robots", robots, snapshot_id=round_no + 1,
-                           summary={"epoch": round_no})
-
-        host_stats = _read_or_none("host_stats", HOST_STATS_SCHEMA)
-        fetched, errors, _ = crawl_round(
-            canon, run_settings, fetcher_spec, round_no, host_stats,
-            _round_partitions(canon.count(), parallelism),
+        # the count materializes the cut rows once for the round
+        canon = valid.unionByName(bad).localCheckpoint(eager=False)
+        state = RoundState(
+            seen,
+            load("robots", ROBOTS_SCHEMA, round_no),
+            load("host_stats", HOST_STATS_SCHEMA, round_no),
         )
-        fetched = fetched.localCheckpoint(eager=True)
+        rnd = run_round(state, canon, None, canon.count(), run_settings,
+                        fetcher_spec, round_no, tally=False)
+
         if archive_dir is not None:
             from ..sources.warc import write_warc
 
             write_warc(
-                fetched.repartition(
-                    archive_partitions, F.xxhash64("url")
+                rnd.fetched.repartition(
+                    ARCHIVE_PARTITIONS, F.xxhash64("url")
                 ).sortWithinPartitions("url"),
                 archive_dir,
             ).collect()
-        out = finalize_results(_round_results(fetched, errors))
+        out = finalize_results(rnd.results)
         out.drop("body", "head", "post").write.mode("append").parquet(output_dir)
 
+        snapshot = dict(snapshot_id=round_no + 1, summary={"epoch": round_no})
+        if settings.respect_robots:
+            rnd.denied.write.mode("append").parquet(output_dir + "_robots_denied")
+            # the rules come from the snapshot the epoch started from
+            # and the robots gate has materialized their checkpoint, so
+            # this commit never reads the snapshot it overwrites (a
+            # replayed epoch commits the same id again)
+            catalog.commit("robots", rnd.state.robots, **snapshot)
         # cross-batch host_seq continuity
-        catalog.commit(
-            "host_stats", _merge_host_stats(host_stats, fetched),
-            snapshot_id=round_no + 1, summary={"epoch": round_no},
-        )
+        catalog.commit("host_stats", rnd.state.host_stats, **snapshot)
 
         # feedback loop: discovered links become new frontier files,
         # written distributed (the file source picks up new part
         # files; no driver-side collect). The files carry depth and
-        # URL only, so no link priority is computed here.
+        # URL only, so the link priority is not carried over.
         if settings.extract_links:
-            links = _discovered_links(fetched, settings).select("depth", "rawurl")
+            links = rnd.frontier.select("depth", "rawurl")
             if not links.isEmpty():
                 (links.coalesce(1).write.mode("append")
                  .option("sep", "\t").csv(frontier_dir))

@@ -7,9 +7,9 @@ auth retries are followed inside that stage, as the reference follows
 them inside its job, so a fetched row leaves the round finished: done,
 error or timeout. The driver loop (mcrawler_go, crawler.c:2047-2094)
 becomes `crawl()`: rounds until the frontier drains or budgets expire.
-A round's gates (seen -> robots -> fetch -> host stats -> discovered
-links) are private helpers shared with the streaming crawl
-(continuous.py), so both modes run one gate sequence.
+A round (seen -> robots -> fetch -> host stats -> discovered links)
+is one function, run_round: crawl()'s loop calls it once per round and
+the streaming crawl (continuous.py) once per micro-batch.
 
 Determinism: a virtual clock. Each job carries `elapsed_ms`; the
 per-host politeness window (test_free_channel, time.c:103-114 →
@@ -39,7 +39,7 @@ from __future__ import annotations
 
 import importlib
 import json
-from typing import Callable, Optional, Tuple
+from typing import Callable, NamedTuple, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -81,16 +81,11 @@ FRONTIER_FIELDS = [
 ]
 FRONTIER_SCHEMA = StructType(FRONTIER_FIELDS)
 
-CANON_SCHEMA = StructType(
-    [
-        StructField("href", StringType()),
-        StructField("host", StringType()),      # host[:port]
-        StructField("hostname", StringType()),
-        StructField("scheme", StringType()),
-        StructField("path_query", StringType()),
-        StructField("errkind", StringType()),   # parse|scheme|proto|host|length|''
-    ]
-)
+# a result row's frontier columns plus the canonical URL parts
+# (_canonicalize_df; host is host[:port])
+RESULT_KEY_COLS = [f.name for f in FRONTIER_FIELDS] + [
+    "href", "host", "hostname", "scheme", "path_query",
+]
 
 FETCH_OUT_FIELDS = FRONTIER_FIELDS + [
     StructField("url", StringType()),            # canonical href fetched
@@ -186,6 +181,10 @@ ROBOTS_SCHEMA = StructType(
         StructField("robots_status", IntegerType()),
     ]
 )
+
+# per-host counters across rounds: host_count continues host_seq,
+# host_err feeds the link priority
+HOST_STATS_SCHEMA = "host string, host_count long, host_err long"
 
 
 def resolve_fetcher(spec: str, settings: Optional[dict] = None) -> Callable:
@@ -785,26 +784,17 @@ def _impatient_cutoff(fetched: DataFrame, settings: CrawlSettings) -> DataFrame:
     strag = (F.col("elapsed_ms") > F.lit(t_prev)) & (
         F.col("outcome") == "done"
     )
-    return (
-        fetched.withColumn(
-            "timeout_state",
-            F.when(strag, F.lit(S_RECVREPLY)).otherwise(F.col("timeout_state")),
-        )
-        .withColumn(
-            "timeout_reason",
-            F.when(strag, F.lit(TIMEOUT_REASONS[S_RECVREPLY])).otherwise(
-                F.col("timeout_reason")
-            ),
-        )
-        .withColumn("status", F.when(strag, F.lit(0)).otherwise(F.col("status")))
-        .withColumn("body", F.when(strag, F.lit(None)).otherwise(F.col("body")))
-        .withColumn(
-            "content_length",
-            F.when(strag, F.lit(0)).otherwise(F.col("content_length")),
-        )
-        .withColumn(
-            "outcome", F.when(strag, F.lit("timeout")).otherwise(F.col("outcome"))
-        )
+    cut = {
+        "timeout_state": S_RECVREPLY,
+        "timeout_reason": TIMEOUT_REASONS[S_RECVREPLY],
+        "status": 0,
+        "body": None,
+        "content_length": 0,
+        "outcome": "timeout",
+    }
+    # one projection: every column tests `strag` on the uncut row
+    return fetched.withColumns(
+        {c: F.when(strag, F.lit(v)).otherwise(F.col(c)) for c, v in cut.items()}
     )
 
 
@@ -813,7 +803,7 @@ def _impatient_cutoff(fetched: DataFrame, settings: CrawlSettings) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def fetch_robots(hosts: DataFrame, fetcher_spec: str, settings: dict) -> DataFrame:
+def fetch_robots(hosts: DataFrame, settings: dict) -> DataFrame:
     """Fetch + parse robots.txt for each (host, hostname, scheme) row.
 
     One mapInPandas pass over the distinct new hosts of a round; the
@@ -918,8 +908,7 @@ def _robots_gate(
     denied = (
         joined.filter(~F.col("robots_ok"))
         .select(
-            *[f.name for f in FRONTIER_FIELDS],
-            "href", "host", "hostname", "scheme", "path_query",
+            *RESULT_KEY_COLS,
             F.lit("robots").alias("outcome"),
             F.lit(0).alias("status"),
             F.lit("Disallowed by robots.txt").alias("error_msg"),
@@ -1057,14 +1046,14 @@ def crawl_round(
     settings: CrawlSettings,
     fetcher_spec: str,
     round_no: int,
-    host_stats: Optional[DataFrame],
+    host_stats: DataFrame,
     num_partitions: int,
 ):
     """One crawl round over canonicalized rows (_canonicalize_df,
     already through the seen and robots gates): parse-error gate ->
     politeness window -> host-salted repartition -> fetch stage.
     `host_stats` holds the per-host `host_count` of earlier rounds
-    (None on the first). Returns (fetched, errors, deferred):
+    (HOST_STATS_SCHEMA). Returns (fetched, errors, deferred):
     `fetched` rows are finished (done, error or timeout; redirects and
     auth retries run inside the fetch stage), and `deferred` holds the
     rows beyond the per-host round budget — still canonicalized, NOT
@@ -1090,12 +1079,9 @@ def crawl_round(
     # per-host delay is max(settings.delay, robots Crawl-delay)
     w = Window.partitionBy("host").orderBy("priority", "seq")
     ok = ok.withColumn("slot", F.row_number().over(w) - F.lit(1))
-    if host_stats is not None:
-        ok = ok.join(
-            F.broadcast(host_stats.select("host", "host_count")), "host", "left"
-        ).fillna(0, subset=["host_count"])
-    else:
-        ok = ok.withColumn("host_count", F.lit(0))
+    ok = ok.join(
+        F.broadcast(host_stats.select("host", "host_count")), "host", "left"
+    ).fillna(0, subset=["host_count"])
     if "crawl_delay_ms" in ok.columns:
         delay_col = F.greatest(
             F.lit(settings.delay).cast("long"),
@@ -1127,9 +1113,7 @@ def crawl_round(
     if settings.per_host_budget > 0:
         # over-budget rows defer to the next round, keeping their
         # canon columns (they already passed dedup/robots)
-        defer_cols = [f.name for f in FRONTIER_FIELDS] + [
-            "href", "host", "hostname", "scheme", "path_query", "errkind",
-        ]
+        defer_cols = RESULT_KEY_COLS + ["errkind"]
         if "crawl_delay_ms" in ok.columns:
             defer_cols.append("crawl_delay_ms")
         deferred = ok.filter(
@@ -1151,117 +1135,91 @@ def crawl_round(
 
 
 # ---------------------------------------------------------------------------
-# round gates, shared by crawl() and the streaming crawl (continuous.py)
+# the round (run_round), shared by crawl() and the streaming crawl
 # ---------------------------------------------------------------------------
 
 
-def _round_partitions(n_rows: int, parallelism: int) -> int:
-    """Fetch tasks for a round of `n_rows`: fetch tasks are per-row
-    Python compute, so the count follows rows, not bytes (AQE's
-    coalescing signal), at ~100 rows a task and at most one per core."""
-    return min(parallelism, max(1, n_rows // 100 + 1))
-
-
-def _frontier_counts(canon: DataFrame) -> Tuple[int, int]:
-    """(rows, rows that parsed) of a canonicalized frontier, in one
-    job: the rows size the round, the parsed ones are the seen gate's
+def _canon_frontier(frontier: DataFrame) -> Tuple[DataFrame, int, int]:
+    """(canonicalized frontier, rows, rows that parsed). The canon
+    rows sit behind a lazy checkpoint that the one counting job
+    materializes, URL parse included, at most one task per core; the
+    rows size the round, the parsed ones are the seen gate's
     candidates."""
+    parallelism = frontier.sparkSession.sparkContext.defaultParallelism
+    canon = _canonicalize_df(
+        frontier.coalesce(parallelism)
+    ).localCheckpoint(eager=False)
     n, n_valid = canon.agg(
         F.count("*"), F.count_if(F.col("errkind") == "")
     ).collect()[0]
-    return n, n_valid
+    return canon, n, n_valid
 
 
-def _seen_gate(
-    canon: DataFrame,
-    seen_filter,
-    seen: Optional[DataFrame],
-) -> Tuple[DataFrame, Optional[DataFrame]]:
+def _seen_gate(canon: DataFrame, seen) -> Tuple[DataFrame, object]:
     """URL-seen gate: keep the valid rows whose canonical href is not
     yet seen and add them to the seen set. Parse-failure rows (href
-    null) pass through to the error gate untouched. With a SeenFilter
-    (plans/seen.py) the set lives in storage under the checkpoint dir;
-    without one, `seen` is the in-memory url_hash frame and comes back
+    null) pass through to the error gate untouched. `seen` is a
+    SeenFilter (plans/seen.py), whose set lives in storage under the
+    checkpoint dir, or the in-memory url_hash frame, which comes back
     extended. Returns (gated rows, seen)."""
     valid, bad = _split_valid(canon)
     hashed = valid.withColumn("url_hash", F.xxhash64("href"))
-    if seen_filter is not None:
-        novel = seen_filter.novel(hashed).localCheckpoint(eager=True)
-        seen_filter.add(novel.select("url_hash"), assume_novel=True)
-    else:
-        if seen is not None:
-            hashed = hashed.join(seen, "url_hash", "left_anti")
-        novel = hashed
+    if isinstance(seen, DataFrame):
+        novel = hashed.join(seen, "url_hash", "left_anti")
         # append-only seen: the batch was already anti-joined against
         # all prior increments, so no distinct over the accumulated
         # history is ever needed — each round only materializes ITS
         # increment (O(batch), not O(total)); lazy: it materializes
         # inside the next round's anti-join, not as its own job
-        new_seen = novel.select("url_hash").distinct().localCheckpoint(eager=False)
-        seen = new_seen if seen is None else seen.union(new_seen)
+        seen = seen.union(
+            novel.select("url_hash").distinct().localCheckpoint(eager=False)
+        )
+    else:
+        novel = seen.novel(hashed).localCheckpoint(eager=True)
+        seen.add(novel.select("url_hash"), assume_novel=True)
     return novel.drop("url_hash").unionByName(bad), seen
 
 
 def _robots_step(
     canon: DataFrame,
-    robots: Optional[DataFrame],
+    robots: DataFrame,
     settings: CrawlSettings,
     fetcher_spec: str,
     round_no: int,
 ) -> Tuple[DataFrame, DataFrame, DataFrame]:
     """Robots gate: fetch robots.txt for the hosts `robots` (the rules
-    known so far, or None) lacks, then split the valid rows on the
-    rules. Returns (allowed + parse-failure rows, denied result rows,
-    all rules known now)."""
+    known so far) lacks, then split the valid rows on the rules.
+    Returns (allowed + parse-failure rows, denied result rows, all
+    rules known now)."""
     # the robots UDF runs in the join stage, one task per partition of
     # `valid`; the seen gate's union adds up its inputs' partitions
     canon = canon.coalesce(canon.sparkSession.sparkContext.defaultParallelism)
     valid, bad = _split_valid(canon)
-    hosts = valid.select("host", "hostname", "scheme").dropDuplicates(["host"])
-    if robots is not None:
-        hosts = hosts.join(robots.select("host"), "host", "left_anti")
+    hosts = (
+        valid.select("host", "hostname", "scheme").dropDuplicates(["host"])
+        .join(robots.select("host"), "host", "left_anti")
+    )
     sdict = settings.as_dict()
     sdict["fetcher"] = fetcher_spec
-    new_robots = fetch_robots(hosts, fetcher_spec, sdict)
     # lazy checkpoint: under AQE the call runs the hosts exchange at
     # once; the robots fetch itself (the result stage) runs in the
     # broadcast job that _robots_gate's checkpoint call starts. Later
     # readers (the next round, the stream's catalog commit) read the
     # checkpoint
-    robots = (
-        new_robots if robots is None else robots.unionByName(new_robots)
-    ).localCheckpoint(eager=False)
+    robots = robots.unionByName(fetch_robots(hosts, sdict)).localCheckpoint(
+        eager=False
+    )
     valid, denied = _robots_gate(valid, robots, round_no)
     return valid.unionByName(bad, allowMissingColumns=True), denied, robots
 
 
-def _round_results(fetched: DataFrame, errors: DataFrame) -> DataFrame:
-    """A round's result rows: the fetched rows plus the parse-error
-    gate's rows."""
-    return fetched.unionByName(
-        errors.select(*[f.name for f in FRONTIER_FIELDS],
-                      "href", "host", "hostname", "scheme", "path_query",
-                      "outcome", "status", "error_msg", "round"),
-        allowMissingColumns=True,
-    )
-
-
-def _merge_host_stats(
-    host_stats: Optional[DataFrame], fetched: DataFrame
-) -> DataFrame:
-    """Cumulative per-host counters (host, host_count, host_err) after
-    this round's fetched rows: host_count continues host_seq across
-    rounds, host_err feeds the link priority."""
+def _merge_host_stats(host_stats: DataFrame, fetched: DataFrame) -> DataFrame:
+    """Cumulative per-host counters (HOST_STATS_SCHEMA) after this
+    round's fetched rows."""
     new = fetched.groupBy("host").agg(
         F.count("*").alias("host_count_new"),
         F.count_if(F.col("outcome") == "error").alias("host_err_new"),
     )
-    if host_stats is None:
-        return new.select(
-            "host",
-            F.col("host_count_new").alias("host_count"),
-            F.col("host_err_new").alias("host_err"),
-        )
     return (
         host_stats.join(new, "host", "outer")
         .fillna(0)
@@ -1302,13 +1260,11 @@ def _frontier_rows(
 
 
 def _discovered_links(
-    fetched: DataFrame,
-    settings: CrawlSettings,
-    host_stats: Optional[DataFrame] = None,
+    fetched: DataFrame, settings: CrawlSettings, host_stats: DataFrame
 ) -> DataFrame:
     """Next-depth frontier rows for the links of this round's done
-    pages below max_depth, one row per distinct URL. With `host_stats`
-    the priority is recomputed (north rule): BFS depth plus a
+    pages below max_depth, one row per distinct URL. The priority is
+    recomputed from `host_stats` (north rule): BFS depth plus a
     deterministic penalty < 1 for hosts with observed errors, so
     error-prone hosts sink in the per-host FIFO (priority, seq)
     without starving."""
@@ -1318,22 +1274,152 @@ def _discovered_links(
         "index",
         (F.col("depth") + 1).alias("depth"),
         F.explode(F.from_json("links_json", ArrayType(StringType()))).alias("rawurl"),
+    ).withColumn(
+        "link_host", F.regexp_extract("rawurl", r"^[a-z+.-]+://([^/]+)", 1)
+    ).join(
+        F.broadcast(host_stats.withColumnRenamed("host", "link_host")),
+        "link_host",
+        "left",
     )
-    priority = None
-    if host_stats is not None:
-        links = links.withColumn(
-            "link_host", F.regexp_extract("rawurl", r"^[a-z+.-]+://([^/]+)", 1)
-        ).join(
-            F.broadcast(host_stats.withColumnRenamed("host", "link_host")),
-            "link_host",
-            "left",
-        )
-        priority = F.col("depth").cast("double") + F.round(
-            F.coalesce(F.col("host_err"), F.lit(0))
-            / F.greatest(F.coalesce(F.col("host_count"), F.lit(0)), F.lit(1)),
-            6,
-        )
+    priority = F.col("depth").cast("double") + F.round(
+        F.coalesce(F.col("host_err"), F.lit(0))
+        / F.greatest(F.coalesce(F.col("host_count"), F.lit(0)), F.lit(1)),
+        6,
+    )
     return _frontier_rows(links, settings, priority).dropDuplicates(["rawurl"])
+
+
+class RoundState(NamedTuple):
+    """What a round hands the next: the URL-seen set (a SeenFilter
+    under a checkpoint dir, else the in-memory url_hash frame), the
+    robots rules (ROBOTS_SCHEMA) and the per-host counters
+    (HOST_STATS_SCHEMA). A fresh crawl starts from empty frames, which
+    the optimizer prunes from joins and unions."""
+
+    seen: object
+    robots: DataFrame
+    host_stats: DataFrame
+
+
+class Round(NamedTuple):
+    """One round's outputs (run_round)."""
+
+    fetched: DataFrame            # fetch-stage rows (the archive's input)
+    results: DataFrame            # fetched and parse-error result rows
+    denied: Optional[DataFrame]   # robots-denied rows (respect_robots)
+    deferred: Optional[DataFrame]  # canon rows over the per-host budget
+    n_deferred: int
+    frontier: DataFrame           # discovered links: the next frontier
+    tally: Optional[list]         # per-(partition_id, outcome) counts
+    state: RoundState
+
+
+def run_round(
+    state: RoundState,
+    canon: DataFrame,
+    carryover: Optional[DataFrame],
+    n_rows: int,
+    settings: CrawlSettings,
+    fetcher_spec: str,
+    round_no: int,
+    tally: bool,
+) -> Round:
+    """One crawl round, the body of crawl()'s loop and of each stream
+    micro-batch (continuous.py): seen gate -> robots step -> carry-over
+    union -> crawl_round (fetch) -> impatient cutoff -> tally -> host
+    stats -> discovered links. `canon` is the canonicalized frontier,
+    `carryover` the rows the last round's per-host budget deferred (or
+    None) and `n_rows` the rows of both, which size the fetch stage.
+    With `tally` the round collects its per-(partition_id, outcome)
+    row counts, robots-denied rows under a null partition_id, before
+    the host-stats exchange reads the fetched rows."""
+    seen, robots, host_stats = state
+    if settings.dedup:
+        canon, seen = _seen_gate(canon, seen)
+
+    denied = None
+    if settings.respect_robots:
+        canon, denied, robots = _robots_step(
+            canon, robots, settings, fetcher_spec, round_no
+        )
+
+    if carryover is not None:
+        # rows deferred by the per-host budget: already
+        # canonicalized, deduped and robots-gated last round
+        canon = canon.unionByName(carryover, allowMissingColumns=True)
+
+    # fetch tasks are per-row Python compute, so their count follows
+    # rows, not bytes (AQE's coalescing signal): ~100 rows a task, at
+    # most one per core
+    parallelism = canon.sparkSession.sparkContext.defaultParallelism
+    fetched, errors, deferred = crawl_round(
+        canon, settings, fetcher_spec, round_no, host_stats,
+        min(parallelism, max(1, n_rows // 100 + 1)),
+    )
+    n_deferred = 0
+    if deferred is not None:
+        # count doubles as the materializing action (one job)
+        deferred = deferred.localCheckpoint(eager=False)
+        n_deferred = deferred.count()
+        deferred = deferred if n_deferred else None
+    # LAZY checkpoint. Under AQE, localCheckpoint(eager=False)
+    # runs the plan's shuffle and broadcast stages when it is
+    # called (here the host exchange feeding the fetch); only the
+    # result stage, the fetch itself, waits for the first reader:
+    # the per-partition tally collect, else the host_stats
+    # exchange below. Every later consumer reads the checkpoint,
+    # so no URL is ever fetched twice.
+    fetched = fetched.localCheckpoint(eager=False)
+    if settings.impatient:
+        # the cutoff needs a driver-side watermark agg, which
+        # materializes `fetched` here anyway
+        fetched = _impatient_cutoff(fetched, settings).localCheckpoint(
+            eager=True
+        )
+
+    part_rows = None
+    if tally:
+        # per-partition lineage: which partition produced how many
+        # rows of each outcome this round. The robots-denied rows
+        # ride the same job under a null partition_id
+        rows = fetched.select("partition_id", "outcome", "elapsed_ms")
+        if denied is not None:
+            rows = rows.unionByName(denied.select(
+                F.lit(None).cast(IntegerType()).alias("partition_id"),
+                "outcome", "elapsed_ms",
+            ))
+        part_rows = [
+            r.asDict()
+            for r in rows.groupBy("partition_id", "outcome")
+            .agg(
+                F.count("*").alias("n"),
+                F.sum("elapsed_ms").alias("elapsed_ms_sum"),
+            )
+            .collect()
+        ]
+
+    # lazy, but not free: under AQE the call runs the groupBy's
+    # shuffle stage (reading `fetched`) as its own job; only the
+    # final aggregate waits for the links broadcast
+    # (extract_links) or the next round's host_counts broadcast
+    host_stats = _merge_host_stats(host_stats, fetched).localCheckpoint(
+        eager=False
+    )
+
+    if settings.extract_links:
+        frontier = _discovered_links(fetched, settings, host_stats)
+    else:
+        frontier = local_frame(canon.sparkSession, [], FRONTIER_SCHEMA)
+    # lazy checkpoint: the links exchange and the host_stats
+    # broadcast it joins run at this call, the rest in its first
+    # reader (crawl()'s snapshot commit or count, the stream's write)
+    frontier = frontier.localCheckpoint(eager=False)
+    results = fetched.unionByName(
+        errors.select(*RESULT_KEY_COLS, "outcome", "status", "error_msg", "round"),
+        allowMissingColumns=True,
+    )
+    return Round(fetched, results, denied, deferred, n_deferred, frontier,
+                 part_rows, RoundState(seen, robots, host_stats))
 
 
 def crawl(
@@ -1351,19 +1437,19 @@ def crawl(
     reference's on-finish callback (mcrawler_url_callback) is a
     transform composed on it.
 
-    Each round runs the shared gates: seen -> robots -> crawl_round
-    (fetch) -> host stats -> discovered links, which are the next
-    round's frontier. Nothing else re-enters the frontier except the
-    rows the per-host budget defers. Seeds are not deduplicated
-    against each other: like the reference's argv, every seed row is
-    a job of its own (`dedup` drops URLs seen in earlier rounds, and
-    links are one row per URL).
+    Each round is one run_round call, as each stream micro-batch is:
+    seen -> robots -> crawl_round (fetch) -> host stats -> discovered
+    links, which are the next round's frontier. Nothing else re-enters
+    the frontier except the rows the per-host budget defers. Seeds are
+    not deduplicated against each other: like the reference's argv,
+    every seed row is a job of its own (`dedup` drops URLs seen in
+    earlier rounds, and links are one row per URL).
 
     `fetcher_spec` (`module:function`) is resolved here, before any
     Spark job, and it sets the clock (resolve_async_fetcher): a
     real-network fetcher spaces same-host requests on the wall clock,
     any other runs on the virtual clock. Each round's fetch tasks
-    follow its row count (_round_partitions).
+    follow its row count (run_round).
 
     Pass `report={}` to receive per-round / per-partition lineage
     metrics (north rule): report["rounds"] = list of round dicts with
@@ -1379,13 +1465,8 @@ def crawl(
         frontier = seeds_to_frontier(spark, seeds, settings)
 
     results: list = []
-    host_stats: Optional[DataFrame] = None  # (host, host_count, host_err)
     carryover: Optional[DataFrame] = None   # budget-deferred canon rows
     carry_n = 0
-    seen: Optional[DataFrame] = None
-    seen_filter = None
-    robots_df: Optional[DataFrame] = None
-    n_frontier: Optional[int] = None
     round_no = 0
     want_metrics = report is not None or checkpoint_dir is not None
     if report is not None:
@@ -1393,20 +1474,24 @@ def crawl(
 
     catalog = None
     if checkpoint_dir is not None:
+        from ..plans.seen import SeenFilter
         from ..plans.snapshots import SnapshotCatalog
 
         catalog = SnapshotCatalog(checkpoint_dir)
         # a crawl on an existing catalog continues its snapshot ids
         first_id = (catalog.current_id("frontier") or 0) + 1
-
-    # the sharded bloom-sidecar filter needs storage executors can
-    # read, so it is the seen set whenever a checkpoint_dir exists (it
-    # also makes the seen set crash-resumable); a checkpoint-less crawl
-    # has no such storage and keeps the in-memory anti-join
-    if settings.dedup and checkpoint_dir is not None:
-        from ..plans.seen import SeenFilter
-
-        seen_filter = SeenFilter(spark, checkpoint_dir + "/seen")
+        # the sharded bloom-sidecar filter needs storage executors can
+        # read, so it is the seen set whenever a checkpoint_dir exists
+        # (it also makes the seen set crash-resumable); a
+        # checkpoint-less crawl keeps the in-memory anti-join
+        seen = SeenFilter(spark, checkpoint_dir + "/seen")
+    else:
+        seen = local_frame(spark, [], "url_hash long")
+    state = RoundState(
+        seen,
+        local_frame(spark, [], ROBOTS_SCHEMA),
+        local_frame(spark, [], HOST_STATS_SCHEMA),
+    )
 
     import uuid as _uuid
 
@@ -1417,20 +1502,16 @@ def crawl(
     # URL-parse stage materializes inside the same job as the fetch
     # tail instead of behind its own eager-checkpoint barrier. The
     # count references the lazy checkpoint exactly ONCE; the
-    # valid/bad fan-out below then reads the materialized checkpoint
-    # (the round-3 single-reference discipline).
+    # valid/bad fan-out in the round then reads the materialized
+    # checkpoint (the round-3 single-reference discipline).
     # Every Python stage of a round runs at most one task per core: a
     # Python task pays a fixed cost before its first row (README
     # "Python task cost"), so the tasks follow the row count, capped at
     # defaultParallelism, not the partitioning a shuffle left behind.
-    parallelism = spark.sparkContext.defaultParallelism
     spark.sparkContext.setJobGroup(
         "crawl-%s-prep" % crawl_tag, "crawl prep"
     )
-    next_canon = _canonicalize_df(
-        frontier.coalesce(parallelism)
-    ).localCheckpoint(eager=False)
-    n_frontier, n_valid = _frontier_counts(next_canon)
+    canon, n_frontier, n_valid = _canon_frontier(frontier)
     while round_no < settings.max_rounds:
         # label the round so its Spark-job count is observable (the
         # barrier-reduction work is graded on this going DOWN)
@@ -1438,75 +1519,23 @@ def crawl(
             "crawl-%s-round-%d" % (crawl_tag, round_no),
             "crawl round %d" % round_no,
         )
-        canon = next_canon
-        round_metrics = {"round": round_no} if want_metrics else None
-
-        if settings.dedup:
-            canon, seen = _seen_gate(canon, seen_filter, seen)
-
-        denied = None
-        if settings.respect_robots:
-            canon, denied, robots_df = _robots_step(
-                canon, robots_df, settings, fetcher_spec, round_no
-            )
-            results.append(denied)
-
-        if carryover is not None:
-            # rows deferred by the per-host budget: already
-            # canonicalized, deduped and robots-gated last round
-            canon = canon.unionByName(carryover, allowMissingColumns=True)
-            carryover = None
-
         # n_frontier carries over from the loop-exit count of the
         # previous round — one driver barrier, not two
-        round_parts = _round_partitions(n_frontier + carry_n, parallelism)
-        carry_in, carry_n = carry_n, 0
-        fetched, errors, deferred = crawl_round(
-            canon, settings, fetcher_spec, round_no, host_stats, round_parts,
+        carry_in = carry_n
+        rnd = run_round(
+            state, canon, carryover, n_frontier + carry_n, settings,
+            fetcher_spec, round_no, want_metrics,
         )
-        if deferred is not None:
-            # count doubles as the materializing action (one job)
-            deferred = deferred.localCheckpoint(eager=False)
-            carry_n = deferred.count()
-            carryover = deferred if carry_n else None
-        # LAZY checkpoint. Under AQE, localCheckpoint(eager=False)
-        # runs the plan's shuffle and broadcast stages when it is
-        # called (here the host exchange feeding the fetch); only the
-        # result stage, the fetch itself, waits for the first reader:
-        # the per-partition metrics collect, else the host_stats
-        # exchange below. Every later consumer reads the checkpoint,
-        # so no URL is ever fetched twice.
-        fetched = fetched.localCheckpoint(eager=False)
-        if settings.impatient:
-            # the cutoff needs a driver-side watermark agg, which
-            # materializes `fetched` here anyway
-            fetched = _impatient_cutoff(fetched, settings).localCheckpoint(
-                eager=True
-            )
-        results.append(_round_results(fetched, errors))
+        state, carryover, carry_n = rnd.state, rnd.deferred, rnd.n_deferred
+        if rnd.denied is not None:
+            results.append(rnd.denied)
+        results.append(rnd.results)
 
+        round_metrics = {"round": round_no} if want_metrics else None
         if want_metrics:
-            # per-partition lineage: which partition produced how many
-            # rows of each outcome this round. The robots-denied rows
-            # ride the same job under a null partition_id
-            tally = fetched.select("partition_id", "outcome", "elapsed_ms")
-            if denied is not None:
-                tally = tally.unionByName(denied.select(
-                    F.lit(None).cast(IntegerType()).alias("partition_id"),
-                    "outcome", "elapsed_ms",
-                ))
-            part_rows = [
-                r.asDict()
-                for r in tally.groupBy("partition_id", "outcome")
-                .agg(
-                    F.count("*").alias("n"),
-                    F.sum("elapsed_ms").alias("elapsed_ms_sum"),
-                )
-                .collect()
-            ]
-            parts = [r for r in part_rows if r["partition_id"] is not None]
+            parts = [r for r in rnd.tally if r["partition_id"] is not None]
             n_fetched = sum(r["n"] for r in parts)
-            n_denied = sum(r["n"] for r in part_rows) - n_fetched
+            n_denied = sum(r["n"] for r in rnd.tally) - n_fetched
             if settings.dedup:
                 # every novel parsed row is denied, fetched or deferred,
                 # and the fetched rows include last round's carry-over
@@ -1516,47 +1545,26 @@ def crawl(
                 round_metrics["dedup_dropped"] = n_valid - scheduled
             else:
                 round_metrics["scheduled"] = n_fetched
-            if denied is not None:
+            if settings.respect_robots:
                 round_metrics["robots_denied"] = n_denied
             round_metrics["partitions"] = parts
             if report is not None:
                 report["rounds"].append(round_metrics)
 
-        # lazy, but not free: under AQE the call runs the groupBy's
-        # shuffle stage (reading `fetched`) as its own job; only the
-        # final aggregate waits for the links broadcast
-        # (extract_links) or the next round's host_counts broadcast
-        host_stats = _merge_host_stats(host_stats, fetched).localCheckpoint(
-            eager=False
-        )
-
-        if settings.extract_links:
-            frontier = _discovered_links(fetched, settings, host_stats)
-        else:
-            frontier = local_frame(spark, [], FRONTIER_SCHEMA)
-        # lazy checkpoint: the links exchange and the host_stats
-        # broadcast it joins run at this call, the rest in its first
-        # reader (the snapshot commit, else the count below)
-        frontier = frontier.localCheckpoint(eager=False)
         if catalog is not None:
             # Iceberg-snapshot analogue (serialize.c:146-201): commit
             # the next round's frontier with this round's metrics as
             # the snapshot summary; any round is resumable by id
             catalog.commit(
-                "frontier", frontier, snapshot_id=first_id + round_no,
+                "frontier", rnd.frontier, snapshot_id=first_id + round_no,
                 summary=round_metrics or {},
             )
 
         round_no += 1
-        # counting the canonicalized checkpoint runs frontier ckpt ->
-        # URL parse in one job; next round's fan-out reads the
-        # checkpoint. The frontier's partitions are whatever the links
-        # exchange left, so the URL parse is capped like every other
-        # Python stage
-        next_canon = _canonicalize_df(
-            frontier.coalesce(parallelism)
-        ).localCheckpoint(eager=False)
-        n_frontier, n_valid = _frontier_counts(next_canon)
+        # the count runs frontier ckpt -> URL parse in one job; the
+        # links exchange left the frontier's partitions, so the URL
+        # parse is capped like every other Python stage
+        canon, n_frontier, n_valid = _canon_frontier(rnd.frontier)
         if want_metrics:
             # jobs this round (the dict is already in report["rounds"])
             round_metrics["spark_jobs"] = len(

@@ -235,10 +235,11 @@ def test_streaming_archive_sink(spark, tmp_path):
 
 
 def test_streaming_matches_batch_crawl(spark, tmp_path):
-    """The stream runs the batch round gates: the same seeds with
-    links, dedup, robots and max_depth=1 give the same fetched rows
-    and the same robots-denied URLs through crawl_stream() as through
-    crawl()."""
+    """The stream and crawl() run one round function: the same seeds
+    with links, dedup, robots and max_depth=1 give the same fetched
+    rows and the same robots-denied URLs through crawl_stream() as
+    through crawl(), on both batch seen paths (the in-memory anti-join
+    without a checkpoint dir, the SeenFilter with one)."""
     from minicrawler_spark.streaming.crawl import crawl
 
     seeds = [f"http://host{i}.test/page/{i}" for i in range(3)] + [
@@ -250,14 +251,23 @@ def test_streaming_matches_batch_crawl(spark, tmp_path):
     ]
     settings = CrawlSettings(timeout=600, extract_links=True, dedup=True,
                              respect_robots=True, max_depth=1)
-    batch = crawl(spark, seeds, settings).collect()
-    want = {(r["url"], r["status"], r["depth"], r["outcome"])
-            for r in batch if r["outcome"] != "robots"}
-    want_denied = {r["rawurl"] for r in batch if r["outcome"] == "robots"}
+    batches = [
+        crawl(spark, seeds, settings, checkpoint_dir=ck).collect()
+        for ck in (None, str(tmp_path / "batch_ck"))
+    ]
+    wants = [
+        ({(r["url"], r["status"], r["depth"], r["outcome"])
+          for r in batch if r["outcome"] != "robots"},
+         {r["rawurl"] for r in batch if r["outcome"] == "robots"})
+        for batch in batches
+    ]
+    assert wants[0] == wants[1]
+    want, want_denied = wants[0]
     assert len(want) > len(seeds)
     # both a seed and a discovered link are denied: rules fetched in
     # the first round and in a later one both gate
-    assert {r["depth"] for r in batch if r["outcome"] == "robots"} == {0, 1}
+    assert {r["depth"] for r in batches[0]
+            if r["outcome"] == "robots"} == {0, 1}
 
     frontier = str(tmp_path / "frontier")
     out = str(tmp_path / "out")
@@ -297,3 +307,70 @@ def test_streaming_per_host_budget_defers(spark, tmp_path):
     assert sorted(r["url"] for r in rows) == seeds
     assert all(r["outcome"] == "done" for r in rows)
     assert len({r["round"] for r in rows}) == 3
+
+
+def test_streaming_impatient_cuts_single_straggler(spark, tmp_path):
+    """`impatient` holds in the stream as in crawl(): a micro-batch's
+    lone straggler, 3 s behind four fast pages, comes out as a
+    timeout (test_output_sink::test_impatient_cuts_single_straggler)."""
+    frontier = str(tmp_path / "frontier")
+    out = str(tmp_path / "out")
+    write_seeds(frontier, [f"http://host{i}.test/page/{i}" for i in range(4)]
+                + ["http://slow.test/delay/3000"])
+    q = crawl_stream(
+        spark, frontier, out, str(tmp_path / "ck"),
+        CrawlSettings(impatient=True, timeout=600, delay=0),
+        trigger_seconds=0.5,
+    )
+    try:
+        _wait_stable(spark, out, settle_rounds=3, min_rows=5)
+        rows = {r["rawurl"]: r for r in spark.read.parquet(out).collect()}
+    finally:
+        q.stop()
+    slow = rows.pop("http://slow.test/delay/3000")
+    assert slow["outcome"] == "timeout"
+    assert slow["timeout_reason"] == "HTTP server timed out"
+    assert [r["outcome"] for r in rows.values()] == ["done"] * 4
+
+
+def test_streaming_replay_counts_host_stats_once(spark, tmp_path):
+    """An epoch that runs again (its offsets logged, its commit not:
+    a crash after the sinks) reads host_stats at the snapshot it
+    started from, so its rows count once however often it runs. With
+    dedup off the replay refetches every row."""
+    import os
+
+    from minicrawler_spark.plans.snapshots import SnapshotCatalog
+
+    frontier = str(tmp_path / "frontier")
+    out = str(tmp_path / "out")
+    ck = str(tmp_path / "ck")
+    write_seeds(frontier, ["http://host0.test/page/1",
+                           "http://host0.test/page/2",
+                           "http://host1.test/page/3"])
+    settings = CrawlSettings(timeout=600)
+
+    def run(min_rows):
+        q = crawl_stream(spark, frontier, out, ck, settings,
+                         trigger_seconds=0.5)
+        try:
+            return _wait_stable(spark, out, settle_rounds=3,
+                                min_rows=min_rows)
+        finally:
+            q.stop()
+
+    assert run(3) == 3
+    # forget that epoch 0 finished: the restart replays it
+    commits = os.path.join(ck, "offsets", "commits")
+    assert sorted(f for f in os.listdir(commits)
+                  if not f.startswith(".")) == ["0"]
+    for name in ("0", ".0.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    assert run(6) == 6
+
+    catalog = SnapshotCatalog(ck)
+    assert catalog.current_id("host_stats") == 1
+    counts = {r["host"]: r["host_count"]
+              for r in catalog.read(spark, "host_stats").collect()}
+    assert counts == {"host0.test": 2, "host1.test": 1}

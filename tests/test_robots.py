@@ -7,6 +7,8 @@ Fixture rules are deterministic per host (sources/fixtures.py:300):
   host2.test -> Disallow: /private3/
 """
 
+import pytest
+
 from minicrawler_spark.config import CrawlSettings
 from minicrawler_spark.functions.robots import (
     parse_robots,
@@ -309,6 +311,47 @@ def test_seen_set_survives_resume(spark, tmp_path):
     assert ids == list(range(1, len(ids) + 1))
     assert [m["parent_id"] for m in hist] == [None] + ids[:-1]
     assert [m["summary"] for m in hist[:2]] == first_summaries
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="ROADMAP 'Fix first': a round's seen-add is durable before "
+    "its frontier snapshot, so a crash in between loses the round",
+)
+def test_crashed_round_is_refetched_on_resume(spark, tmp_path, monkeypatch):
+    """A crawl that crashes in round 1, after its seen gate and before
+    its frontier commit (snapshot 2), resumes from snapshot 1 on the
+    same checkpoint dir and fetches that round's URLs: the clean
+    crawl's round-1 rows."""
+    from minicrawler_spark.plans.snapshots import SnapshotCatalog
+    from minicrawler_spark.sources.fixtures import synthetic_seeds
+
+    settings = CrawlSettings(
+        timeout=600, extract_links=True, dedup=True, max_depth=3,
+    )
+    clean = crawl(spark, synthetic_seeds(3, 1), settings)
+    round1 = {r["url"] for r in
+              clean.filter("round = 1 and url is not null").collect()}
+    assert round1
+
+    ck = str(tmp_path / "ck")
+    commit = SnapshotCatalog.commit
+
+    def crash_at_frontier_2(self, table, df, snapshot_id, summary=None):
+        if table == "frontier" and snapshot_id == 2:
+            raise RuntimeError("crash before the round-1 commit")
+        return commit(self, table, df, snapshot_id, summary)
+
+    monkeypatch.setattr(SnapshotCatalog, "commit", crash_at_frontier_2)
+    with pytest.raises(RuntimeError, match="round-1 commit"):
+        crawl(spark, synthetic_seeds(3, 1), settings, checkpoint_dir=ck)
+    monkeypatch.setattr(SnapshotCatalog, "commit", commit)
+
+    resumed = crawl(spark, resume_frontier(spark, ck, 1), settings,
+                    checkpoint_dir=ck)
+    fetched = {r["url"] for r in
+               resumed.filter("url is not null").collect()}
+    assert round1 <= fetched, sorted(round1 - fetched)[:5]
 
 
 def _mark_job(spark, group):

@@ -118,7 +118,8 @@ def main():
     # (repartition-by-host first; the window's ClusteredDistribution
     # is then already satisfied); a host's rows stay in one fetch task
     from minicrawler_spark.config import CrawlSettings
-    from minicrawler_spark.streaming.crawl import crawl_round
+    from minicrawler_spark.plans.local import local_frame
+    from minicrawler_spark.streaming.crawl import HOST_STATS_SCHEMA, crawl_round
 
     fetch_df, _, _ = crawl_round(
         canon.withColumn("priority", F.lit(0.0))
@@ -129,7 +130,8 @@ def main():
         .withColumn("cookies_json", F.lit("[]"))
         .withColumn("redirect_json", F.lit("[]")),
         CrawlSettings(), "minicrawler_spark.sources."
-        "fixtures:fixture_fetcher", 0, None, 8,
+        "fixtures:fixture_fetcher", 0,
+        local_frame(spark, [], HOST_STATS_SCHEMA), 8,
     )
     p = plan_of(fetch_df)
     plans["crawl_fetch_stage"] = p
