@@ -5,9 +5,11 @@ plans/seen.py used to read/write sidecars with bare ``open`` /
 POSIX filesystem. On a real cluster the checkpoint lives on S3/HDFS,
 so all sidecar I/O now goes through this tiny interface:
 
-- ``read_bytes`` / ``write_bytes_atomic`` / ``remove`` / ``makedirs``
-- implementations must be PICKLABLE: the read side ships inside the
-  bloom-probe pandas UDF closure to executors.
+- ``read_bytes`` / ``read_range`` / ``size`` / ``listdir`` /
+  ``write_bytes_atomic`` / ``remove`` / ``makedirs``
+- implementations must be PICKLABLE: they ship inside the seen gate's
+  mapInArrow closure to executors, which read blooms and shard row
+  groups and write data files, blooms and records through them.
 
 ``LocalFS`` is the default (atomic via tmp-file + ``os.replace``).
 ``FsspecFS`` adapts any fsspec protocol (s3://, hdfs://, gs://, ...)

@@ -15,7 +15,9 @@ Topology:
   wave is a new micro-batch) and Spark's checkpointLocation tracks
   which frontier files are already consumed — restart-safe offsets,
 - URL-seen state persists across batches (and restarts) in the
-  bloom-sharded SeenFilter (plans/seen.py) under the checkpoint dir,
+  bloom-sharded SeenFilter (plans/seen.py) under the checkpoint dir;
+  each epoch opens it as of the generation it started from, so a
+  replayed epoch's gate returns the rows it returned the first time,
 - per-host state (host_count for cross-batch host_seq, host_err)
   persists through the SnapshotCatalog table "host_stats", and robots
   rules through the table "robots"; epoch e reads both at the
@@ -28,8 +30,9 @@ Topology:
   fetch stage, so nothing but links and budget-deferred rows returns
   to the frontier. What is the stream's own: TSV rows to frontier
   rows, one row per URL within a micro-batch and the per-host budget
-  cut before the round, the state loads, and the sinks (results,
-  denied rows, robots and host_stats commits, WARC archive, TSV
+  cut before the round, the state loads, and the sinks (results and
+  denied rows, each epoch in its own `epoch=<id>` directory that a
+  replay overwrites; robots and host_stats commits, WARC archive, TSV
   feedback).
 
 `applyInPandasWithState` is the alternative for per-host state; the
@@ -114,9 +117,6 @@ def crawl_stream(
     settings = settings or CrawlSettings()
     resolve_async_fetcher(fetcher_spec)  # a bad spec fails here
     catalog = SnapshotCatalog(checkpoint_dir)
-    # the SeenFilter reloads its sidecar manifest in the constructor,
-    # so restart-resume needs no explicit refresh
-    seen = SeenFilter(spark, checkpoint_dir + "/seen")
 
     stream = (
         spark.readStream.schema("depth INT, rawurl STRING")
@@ -127,16 +127,32 @@ def crawl_stream(
     # crawl_round
     run_settings = dataclasses.replace(settings, per_host_budget=0)
 
-    def load(table: str, schema, epoch: int) -> DataFrame:
-        """`table` at the snapshot epoch `epoch` started from: CURRENT,
+    def started_from(table: str, epoch: int) -> Optional[int]:
+        """The snapshot of `table` epoch `epoch` started from: CURRENT,
         or its parent when CURRENT is the epoch's own commit (a
-        replayed epoch); empty before the first commit."""
+        replayed epoch); None before the first commit."""
         sid = catalog.current_id(table)
         if sid == epoch + 1:
             sid = catalog.manifest(table, sid)["parent_id"]
+        return sid
+
+    def load(table: str, schema, epoch: int) -> DataFrame:
+        sid = started_from(table, epoch)
         if sid is None:
             return local_frame(spark, [], schema)
         return catalog.read(spark, table, snapshot_id=sid, schema=schema)
+
+    def open_seen(epoch: int) -> SeenFilter:
+        """The URL-seen set as epoch `epoch` started: each host_stats
+        commit records the seen generation after its epoch, so a
+        replayed epoch whose seen add already published gets the same
+        rows back from the gate instead of none. A snapshot that
+        predates the record opens at the current generation."""
+        sid = started_from("host_stats", epoch)
+        gen = 0 if sid is None else (
+            catalog.manifest("host_stats", sid)["summary"].get("seen_gen")
+        )
+        return SeenFilter(spark, checkpoint_dir + "/seen", as_of=gen)
 
     def process_batch(batch: DataFrame, epoch_id: int):
         if batch.isEmpty():
@@ -175,7 +191,7 @@ def crawl_stream(
         # the count materializes the cut rows once for the round
         canon = valid.unionByName(bad).localCheckpoint(eager=False)
         state = RoundState(
-            seen,
+            open_seen(round_no),
             load("robots", ROBOTS_SCHEMA, round_no),
             load("host_stats", HOST_STATS_SCHEMA, round_no),
         )
@@ -191,12 +207,21 @@ def crawl_stream(
                 ).sortWithinPartitions("url"),
                 archive_dir,
             ).collect()
+        # each epoch's rows go to their own epoch=<id> directory, so a
+        # replayed epoch replaces them; both outputs read as one table
+        # with an `epoch` partition column
+        epoch_dir = "epoch=%d" % round_no
         out = finalize_results(rnd.results)
-        out.drop("body", "head", "post").write.mode("append").parquet(output_dir)
+        (out.drop("body", "head", "post").write.mode("overwrite")
+         .parquet(os.path.join(output_dir, epoch_dir)))
 
-        snapshot = dict(snapshot_id=round_no + 1, summary={"epoch": round_no})
+        snapshot = dict(snapshot_id=round_no + 1,
+                        summary={"epoch": round_no,
+                                 "seen_gen": rnd.state.seen.gen})
         if settings.respect_robots:
-            rnd.denied.write.mode("append").parquet(output_dir + "_robots_denied")
+            rnd.denied.write.mode("overwrite").parquet(
+                os.path.join(output_dir + "_robots_denied", epoch_dir)
+            )
             # the rules come from the snapshot the epoch started from
             # and the robots gate has materialized their checkpoint, so
             # this commit never reads the snapshot it overwrites (a

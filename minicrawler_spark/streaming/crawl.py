@@ -25,9 +25,10 @@ Scale design (north rule):
 - the frontier is repartitioned by xxhash64(host) % N each round so
   same-host jobs co-locate (connection-reuse locality, politeness
   enforced within one partition),
-- the URL-seen filter is a left_anti join on url_hash (64-bit
-  xxhash64 of the canonical href), with the seen table checkpointed
-  per round; plans/seen.py adds the bloom-sidecar partition pruning,
+- the URL-seen filter keys on url_hash (64-bit xxhash64 of the
+  canonical href): a left_anti join against the seen table
+  checkpointed per round, or, under a checkpoint_dir, plans/seen.py's
+  one-pass gate over per-shard blooms and sorted shard files,
 - all per-row logic is Arrow-batched (mapInPandas / pandas UDF);
   nothing row-at-a-time crosses the JVM boundary,
 - per-round lineage is cut with localCheckpoint (or parquet snapshots
@@ -1175,8 +1176,7 @@ def _seen_gate(canon: DataFrame, seen) -> Tuple[DataFrame, object]:
             novel.select("url_hash").distinct().localCheckpoint(eager=False)
         )
     else:
-        novel = seen.novel(hashed).localCheckpoint(eager=True)
-        seen.add(novel.select("url_hash"), assume_novel=True)
+        novel = seen.add(hashed)
     return novel.drop("url_hash").unionByName(bad), seen
 
 

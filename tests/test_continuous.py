@@ -337,7 +337,20 @@ def test_streaming_replay_counts_host_stats_once(spark, tmp_path):
     """An epoch that runs again (its offsets logged, its commit not:
     a crash after the sinks) reads host_stats at the snapshot it
     started from, so its rows count once however often it runs. With
-    dedup off the replay refetches every row."""
+    dedup off the replay refetches every row, and its result rows
+    replace the first run's (the epoch=0 directory): one copy."""
+    _replay_epoch_zero(spark, tmp_path, dedup=False)
+
+
+def test_streaming_replay_with_dedup_keeps_its_rows(spark, tmp_path):
+    """With dedup on, the first run's seen add has already published
+    the epoch's URLs when it replays; the replay's gate sees the set as
+    the epoch started, so it refetches every row and its epoch=0
+    directory still holds one copy, not an empty overwrite."""
+    _replay_epoch_zero(spark, tmp_path, dedup=True)
+
+
+def _replay_epoch_zero(spark, tmp_path, dedup):
     import os
 
     from minicrawler_spark.plans.snapshots import SnapshotCatalog
@@ -348,26 +361,32 @@ def test_streaming_replay_counts_host_stats_once(spark, tmp_path):
     write_seeds(frontier, ["http://host0.test/page/1",
                            "http://host0.test/page/2",
                            "http://host1.test/page/3"])
-    settings = CrawlSettings(timeout=600)
+    settings = CrawlSettings(timeout=600, dedup=dedup)
 
-    def run(min_rows):
+    commits = os.path.join(ck, "offsets", "commits")
+
+    def run():
         q = crawl_stream(spark, frontier, out, ck, settings,
                          trigger_seconds=0.5)
         try:
-            return _wait_stable(spark, out, settle_rounds=3,
-                                min_rows=min_rows)
+            deadline = time.time() + 120
+            while (not os.path.exists(os.path.join(commits, "0"))
+                   and time.time() < deadline):
+                time.sleep(0.5)
+            return _wait_stable(spark, out, settle_rounds=3, min_rows=3)
         finally:
             q.stop()
 
-    assert run(3) == 3
+    assert run() == 3
     # forget that epoch 0 finished: the restart replays it
-    commits = os.path.join(ck, "offsets", "commits")
     assert sorted(f for f in os.listdir(commits)
                   if not f.startswith(".")) == ["0"]
     for name in ("0", ".0.crc"):
         if os.path.exists(os.path.join(commits, name)):
             os.remove(os.path.join(commits, name))
-    assert run(6) == 6
+    assert run() == 3
+    assert os.path.exists(os.path.join(commits, "0"))  # it did replay
+    assert sorted(os.listdir(out)) == ["epoch=0"]
 
     catalog = SnapshotCatalog(ck)
     assert catalog.current_id("host_stats") == 1
